@@ -32,6 +32,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hadoop_app_spark.functions.text import ngrams, ngrams_from_tokens, tokenize
+from hadoop_app_spark.operators.bucketing import (
+    _bucket_meta,
+    save_table_recovering_orphan,
+    write_bucketed,
+)
 
 _MOD = 1_000_000_007
 # fixed odd multipliers/offsets for the k minhash permutations
@@ -427,16 +432,15 @@ def build_minhash_index(
     exchange and NO sort on the index side — only the (small) new
     batch shuffles, making each day's work proportional to the batch,
     not the accumulated corpus. Appends (survivor rows from each
-    increment) write through the same bucket spec, so the layout
-    property is permanent. Size ``n_buckets`` for the corpus you
-    expect the index to GROW to (bucket files only ever gain rows).
+    increment) write through `write_bucketed` too, so the layout
+    property is permanent and each append adds at most one file per
+    bucket (`compact_bucketed_table` folds them back). Size
+    ``n_buckets`` for the corpus you expect the index to GROW to.
 
     Moral ancestor in the reference: the `dt=` daily-partition batch
     selection (UserNewcar.java:241-247) — this is that daily pattern
     lifted to the dedup layer with state that persists between days.
     """
-    from hadoop_app_spark.operators.bucketing import write_bucketed
-
     sigs = minhash_signatures(
         df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
     )
@@ -474,8 +478,6 @@ def seed_minhash_index(
     set; the index itself is already on disk either way).
     """
     from pyspark import StorageLevel
-
-    from hadoop_app_spark.operators.bucketing import write_bucketed
 
     sigs = minhash_signatures(
         df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
@@ -540,7 +542,8 @@ def dedup_increment(
     collapses hits to <= batch ids before the only other shuffle. Per
     day: O(batch) shuffle + one linear narrow index scan, vs the
     recompute-everything alternative's O(corpus) re-shingle +
-    re-shuffle.
+    re-shuffle. The survivor append adds at most ``n_buckets`` index
+    files (`write_bucketed`) and reuses the cached band rows.
 
     Join-blowup bound: an index built from a deduped corpus (pass the
     seed through `minhash_dedup` first — survivors by the greedy
@@ -613,36 +616,23 @@ def dedup_increment(
         dropped_snap = dropped.localCheckpoint(eager=not materializes_later)
         survivors = new_batch.join(dropped_snap, id_col, "left_anti")
         if append:
-            # banded + survivors read only the batch and the snapshot —
-            # this write's plan never reads the table it appends to
-            surv_rows = (
-                banded.join(survivors.select(id_col), id_col, "left_semi")
-                .select("bucket", F.col(id_col).alias("id"))
+            # banded + the snapshot: no rescan of new_batch, and this
+            # write's plan never reads the table it appends to
+            surv_rows = banded.join(dropped_snap, id_col, "left_anti").select(
+                "bucket", F.col(id_col).alias("id")
             )
             # read the existing bucket spec so the append preserves
             # layout — the shared validated reader, which RAISES on a
             # non-bucketed table instead of silently assuming 8 (the
             # recurring caller passes the once-resolved count instead)
             if n_buckets is None:
-                from hadoop_app_spark.operators.bucketing import _bucket_meta
-
                 n_buckets = _bucket_meta(spark, index_table)[0]
-            (
-                surv_rows.write.mode("append")
-                .format("parquet")
-                .bucketBy(n_buckets, "bucket")
-                .sortBy("bucket")
-                .saveAsTable(index_table)
-            )
+            write_bucketed(surv_rows, index_table, ["bucket"], n_buckets, mode="append")
         if dropped_table is not False:
             # the replay-observability sidecar, written AFTER the append
             # from the (now-materialized) checkpoint: a trivial job over
             # O(batch) ids instead of a second full probe execution
             dropped_table = dropped_table or f"{index_table}_dropped"
-            from hadoop_app_spark.operators.bucketing import (
-                save_table_recovering_orphan,
-            )
-
             save_table_recovering_orphan(
                 spark,
                 dropped_snap.write.mode("overwrite").format("parquet"),
@@ -1106,8 +1096,6 @@ def seed_simhash_index(
     """
     from pyspark import StorageLevel
 
-    from hadoop_app_spark.operators.bucketing import write_bucketed
-
     bits = 2 * half_bits
     sh = simhash_wide(df, text_col, id_col, half_bits).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -1194,8 +1182,6 @@ def simhash_increment(
     """
     from pyspark import StorageLevel
 
-    from hadoop_app_spark.operators.bucketing import save_table_recovering_orphan
-
     spark = new_batch.sparkSession
     _check_index_params(spark, index_table, half_bits=half_bits, bands=bands)
     perm_seed = _index_perm_seed(spark, index_table)
@@ -1257,16 +1243,8 @@ def simhash_increment(
                 .select("bucket", F.col(id_col).alias("id"), "simhash")
             )
             # read the existing bucket spec so the append preserves layout
-            from hadoop_app_spark.operators.bucketing import _bucket_meta
-
             n_buckets = _bucket_meta(spark, index_table)[0]
-            (
-                surv_rows.write.mode("append")
-                .format("parquet")
-                .bucketBy(n_buckets, "bucket")
-                .sortBy("bucket")
-                .saveAsTable(index_table)
-            )
+            write_bucketed(surv_rows, index_table, ["bucket"], n_buckets, mode="append")
         if dropped_table is not False:
             # replay sidecar from the materialized checkpoint — one
             # trivial job, not a second probe execution
@@ -1336,8 +1314,6 @@ def reseed_simhash_bands(spark, index_table: str, new_seed: int) -> dict:
     bands its batches consistently. O(|index|) one-time — the cost a
     skewed probe would otherwise pay every day.
     """
-    from hadoop_app_spark.operators.bucketing import _bucket_meta, write_bucketed
-
     props = {
         r["key"]: r["value"]
         for r in spark.sql(f"SHOW TBLPROPERTIES {index_table}").collect()
@@ -1510,8 +1486,6 @@ def pin_split_assignments(
     # append below mutates — a late evaluation would see every row as
     # pinned. Materialize the snapshot FIRST (the sidecar pattern the
     # increments use), then append from the snapshot.
-    from hadoop_app_spark.operators.bucketing import save_table_recovering_orphan
-
     snap_table = f"{assignments_table}_latest"
     save_table_recovering_orphan(
         spark, out.write.mode("overwrite").format("parquet"), snap_table

@@ -4617,9 +4617,9 @@ REGISTRY["stream_dedup_ingest_exec"] = QueryDef(
     oracle=None,  # assigned below: the dedup_increment replay, verbatim
     doc="bucketed-index COMPACTION is semantics-free (operators/"
     "bucketing.compact_bucketed_table): the dedup_increment pipeline "
-    "with a compaction between day 1 and day 2 — every append writes "
-    "one file per (task, bucket), so the index fragments linearly with "
-    "days x parallelism; compaction re-distributes by the bucket-id "
+    "with a compaction between day 1 and day 2 — every append adds up "
+    "to one file per bucket, so the index fragments linearly with "
+    "days; compaction re-distributes by the bucket-id "
     "expression and swaps via staging + catalog rename, PRESERVING the "
     "bucket/sort spec so the increment's exchange-free index scan "
     "survives. Same two-generation oracle as dedup_increment: identical "

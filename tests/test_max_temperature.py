@@ -4,6 +4,8 @@ MRUnit cases (TemperatureTest.java:19-30) and the input/micro dataset
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import Row
 
 from hadoop_app_spark.plans.max_temperature import max_temperature, run_max_temperature
@@ -11,7 +13,9 @@ from hadoop_app_spark.sources.ncdc import read_ncdc
 
 from tests.conftest import rows_set
 
-MICRO = "/root/reference/input/micro"
+# the reference's 4-line input/micro, committed: NCDC_LINE with years
+# 1950-1953 and temperatures -11..-14 at the FIXTURES.md A1 positions
+MICRO = str(Path(__file__).parent / "fixtures" / "ncdc_micro.txt")
 
 # the canonical MRUnit mapper input line (TemperatureTest.java:20-21)
 NCDC_LINE = (

@@ -58,10 +58,13 @@ def test_parity_with_substring_path(spark, uniform_dir):
 
 
 def test_reference_micro_golden(spark):
-    # the reference's own sample input: no trailing newline -> the
-    # stride check falls back to one partition; values match the
-    # MaxTemperature golden (year -> temp used by run_max_temperature)
-    df = read_ncdc_py(spark, "/root/reference/input/micro")
+    # the reference's own sample input (committed fixture): no trailing
+    # newline -> the stride check falls back to one partition; values
+    # match the MaxTemperature golden (year -> temp used by
+    # run_max_temperature)
+    df = read_ncdc_py(
+        spark, os.path.join(os.path.dirname(__file__), "fixtures", "ncdc_micro.txt")
+    )
     got = {r.year: r.temp for r in df.collect()}
     assert got == {1950: -11, 1951: -12, 1952: -13, 1953: -14}
 
