@@ -1,83 +1,66 @@
 """Table catalog over the driver's parquet star schema.
 
 The reference has no catalog — schema lives implicitly in each mapper's
-parsing code (SURVEY §1.1). Here schemas are declared once; every read
-goes through ``load_table`` so column pruning / predicate pushdown hit
-the parquet scan.
+parsing code (SURVEY §1.1). Here every table's schema is declared once,
+in ``SCHEMAS``, and every read goes through ``load_table``, so column
+pruning / predicate pushdown hit the parquet scan and no read pays a
+schema-inference job.
+
+Contract: the files under ``sf_dir`` match the declared schemas — same
+column names, order and types as ``spark.read.parquet`` infers. A column
+the files lack would read as nulls, not fail, so
+``tests/test_catalog.py`` compares the declarations with the inferred
+schema of every table at each test scale factor and on perfbench's
+generated star data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The three timestamps are TIMESTAMP_NTZ (the files store
+# TIMESTAMP(MICROS, isAdjustedToUTC=false)): wall-clock-naive values whose
+# formatting and windowing do not depend on the session timezone, matching
+# the oracle's naive-timestamp semantics under any SparkSession.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE,"
+        " c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+        " p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
+        " o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT,"
+        " l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE,"
+        " l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING,"
+        " value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+TABLES = tuple(SCHEMAS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one star-schema table from ``{sf_dir}/{name}.parquet`` with
-    the events-timestamp normalization applied."""
-    if name not in TABLES:
+    """Load one star-schema table from ``{sf_dir}/{name}.parquet`` with its
+    declared schema: no footer is read and no Spark job runs until the
+    frame is used. A missing path still raises ``PATH_NOT_FOUND`` here."""
+    if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events":
-            df.schema  # force analysis so a nanos-rejecting build fails here
-    except Exception as e:
-        # Defensive fallback for files that genuinely store parquet
-        # TIMESTAMP(NANOS), which pre-4.1 builds reject unless this legacy
-        # conf (runtime-settable) maps it to a nanosecond long. The
-        # driver's events.parquet actually stores TIMESTAMP(MICROS,
-        # isAdjustedToUTC=false) at every scale factor — Spark 4.1 reads
-        # that natively as TIMESTAMP_NTZ, so this branch is dead for the
-        # shipped testdata. Narrowly scoped: any non-nanos failure
-        # (missing file, corrupt footer) re-raises unmasked.
-        if name != "events" or "NANOS" not in str(e).upper():
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # Normalize every read shape to TIMESTAMP_NTZ — the wall-clock-
-        # naive type whose formatting/windowing is independent of the
-        # caller session's timezone, matching the naive-timestamp oracle
-        # semantics under ANY SparkSession the harness hands us.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # nanosAsLong fallback path: raw nanoseconds since epoch
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts div 1000,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        elif isinstance(ts_type, T.TimestampType):
-            # LTZ read (only reachable when a caller disables
-            # inferTimestampNTZ): a bare cast('timestamp_ntz') would go
-            # through the SESSION timezone and shift wall clocks under a
-            # non-UTC session; convert_timezone pins the reinterpretation
-            # to UTC so the naive value is recovered regardless of
-            # spark.sql.session.timeZone.
-            df = df.withColumn("ts", F.expr("convert_timezone('UTC', ts)"))
-    return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All catalog tables keyed by name."""
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -57,10 +57,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # defensive: files that genuinely store parquet TIMESTAMP(NANOS)
-        # are refused by pre-4.1 builds unless read as long (the catalog
-        # converts). The driver's events.parquet actually stores
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false), which reads natively
-        # as TIMESTAMP_NTZ — this conf is a no-op for the shipped data.
+        # are refused by pre-4.1 builds unless read as a raw long. It only
+        # affects schema-inferring reads: catalog.load_table declares
+        # events.ts as TIMESTAMP_NTZ and never consults it. The driver's
+        # events.parquet stores TIMESTAMP(MICROS, isAdjustedToUTC=false),
+        # which reads natively as TIMESTAMP_NTZ — a no-op for that data.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
