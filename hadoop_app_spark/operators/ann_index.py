@@ -1,7 +1,7 @@
 """Persisted IVF ANN index — index-as-a-table (build / query / append).
 
-`operators/similarity.ivf_topk` builds its inverted file per query
-batch: every call re-scans and re-assigns the whole corpus. A real
+`operators/similarity.ivf_topk` assigns cells inside its per-query
+scoring kernel: every call re-scans and re-assigns the whole corpus. A real
 100 TB embedding store cannot do that — the index must be a TABLE on
 disk whose layout makes each query touch only its probe cells, and
 whose daily growth is an append, not a rebuild (the ANN sibling of
@@ -9,12 +9,12 @@ whose daily growth is an append, not a rebuild (the ANN sibling of
 
 Layout:
 
-- **build_ivf_index**: assign each vector's Voronoi cell via the same
-  inlined-centroid argmax `ivf_topk` uses (one scan, NO shuffle), then
-  write parquet PARTITIONED BY ``cell`` — each cell is a directory
-  (``cell=K/``), so a probe's ``cell IN (...)`` predicate becomes
-  Catalyst PARTITION PRUNING: unprobed cells are never opened, never
-  read, never decoded. Centroids land in a ``_ivf_centroids/`` sidecar
+- **build_ivf_index**: assign each vector's Voronoi cell via an
+  inlined-centroid argmax (first max wins, as in `ivf_topk`; one scan,
+  NO shuffle), then write parquet PARTITIONED BY ``cell`` — each cell
+  is a directory (``cell=K/``), so a probe's ``cell IN (...)``
+  predicate becomes Catalyst PARTITION PRUNING: unprobed cells are
+  never opened, never read, never decoded. Centroids land in a ``_ivf_centroids/`` sidecar
   (``_``-prefix: invisible to plain scans, the `_bloom_index`
   convention from sources/skipping.py).
 - **query_ivf_index**: load the sidecar (n_centroids rows — bounded by
@@ -156,8 +156,8 @@ def _probe_cells(
     centroids: list[list[float]], qvec: list[float], n_probe: int
 ) -> list[int]:
     """The query's n_probe nearest cells, ties by centroid index —
-    the driver-side twin of `ivf_topk`'s array_sort probe expression.
-    Left-to-right accumulation matches Spark/DuckDB bit-for-bit."""
+    the probe order `ivf_topk` and `_IVF_ORACLE` use. Left-to-right
+    accumulation matches Spark/DuckDB bit-for-bit."""
     dots = []
     for idx, c in enumerate(centroids):
         acc = 0.0

@@ -23,8 +23,8 @@ Spark-first shape:
 - ADC top-k broadcasts the per-query lookup tables (m x n_codes
   doubles — tiny regardless of corpus) and scores codes with numpy
   fancy-indexing; a map-side partial top-k bounds the exchange to
-  n_partitions x |queries| x k rows (the brute_force_topk_vectorized
-  plan shape).
+  n_partitions x |queries| x k rows (the lsh_topk / ivf_topk plan
+  shape).
 
 Determinism: the sample is hash-ordered, seeding/Lloyd are plain
 numpy (bit-stable per platform), encode argmin ties take the LOWEST

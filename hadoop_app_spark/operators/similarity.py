@@ -7,14 +7,39 @@ Beyond-reference surface (north star):
   k rows per query. Linear in corpus size — the right baseline, and
   at 100 TB the thing the ANN path is measured against.
 - lsh_topk: random-hyperplane (sign) LSH bucketing — the scale path.
-  Corpus is bucketed once (a narrow int key), probes hit only their
-  bucket; recall traded via n_planes/n_tables. Hyperplanes are
-  deterministic (fixed seed) so results are reproducible run-to-run.
+  Probes score only their bucket; recall traded via n_planes/n_tables.
+  Hyperplanes are deterministic (fixed seed) so results are
+  reproducible run-to-run.
+- ivf_topk: Voronoi cells around centroids, n_probe cells per query.
+- embedding_near_dups: cosine >= threshold pairs within an LSH bucket.
 
-Vector math stays in Catalyst higher-order functions (zip_with /
-aggregate, see functions.vectors). For 1000-dim embeddings at real
-scale, swap the scoring kernel for a Pandas UDF over Arrow batches
-(numpy matmul) — same plan shape, faster inner loop.
+One kernel per operator — whichever ran faster on the registry's
+64-dim embeddings. Median seconds per registry query on 4 cores, HOF
+fold vs numpy kernel, at 500 / 2,000 rows:
+
+  brute_force_topk     0.48 vs 0.67 / 0.36 vs 0.49   -> HOF
+  lsh_topk             1.06 vs 0.62 / 0.79 vs 0.48   -> numpy
+  ivf_topk             0.95 vs 0.60 / 1.10 vs 0.59   -> numpy
+  embedding_near_dups  0.68 vs 0.81 / 0.90 vs 0.68   -> numpy
+
+embedding_near_dups keeps numpy although the HOF self-join is faster
+at 500 rows: the self-join emits one row per within-bucket pair, so its
+cost grows with bucket size and it already loses at 2,000 rows.
+
+- brute_force_topk folds in Catalyst higher-order functions (zip_with /
+  aggregate, see functions.vectors). With every corpus row scored, the
+  JVM fold beats the Arrow round trip a numpy kernel pays, and its
+  left-fold cosines are the values the DuckDB oracle and
+  streaming.similarity reproduce.
+- lsh_topk, ivf_topk and embedding_near_dups run numpy over Arrow
+  batches (mapInPandas): bucket/cell assignment and scoring are
+  matmuls with a map-side partial top-k, so lsh_topk and ivf_topk
+  never shuffle the corpus and no interpreted per-pair expression tree
+  runs. BLAS accumulation order can move a cosine by an ulp against
+  the oracles' left fold, so these are rank/pair-set exact against
+  their oracles, not value exact.
+  Rows with a null vector are dropped inside the kernel: a null
+  embedding has no cosine, so it can never rank or pass a threshold.
 
 Background (public literature, see PAPERS.md): distributed top-k
 similarity with local index structures per partition (REPOSE, ICDE
@@ -33,6 +58,8 @@ from pyspark.sql import functions as F
 from hadoop_app_spark.functions.vectors import cosine_similarity, dot, matrix_lit
 
 _SEED = 42
+# rows per blocked matmul in embedding_near_dups' per-bucket kernel
+_NEAR_DUP_BLOCK = 2048
 
 
 def brute_force_topk(
@@ -56,65 +83,6 @@ def brute_force_topk(
     return _rank_topk(scored, id_col, k)
 
 
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized twin of brute_force_topk — the high-dimension scale
-    path promised in the module docstring.
-
-    Kernel: one numpy matmul per Arrow batch against the broadcast
-    (normalized) query matrix, with a map-side partial top-k — each
-    task emits only k candidates per query, so the final exchange
-    carries n_partitions x m x k rows regardless of corpus size. At
-    1000-dim embeddings this beats the interpreted HOF fold by the
-    BLAS-vs-interpreter gap while keeping the identical plan shape
-    (scan -> per-partition score -> tiny global top-k).
-
-    Cosines come from a different accumulation order than the HOF
-    kernel (pairwise/SIMD vs left fold), so last-ulp values can differ
-    — results are rank-identical except on sub-ulp near-ties; this
-    variant is therefore bench/pipeline surface, not oracle surface.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qrows = queries.select("query_id", "query_vec").collect()
-    if not qrows:
-        raise ValueError("empty queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = _np_normalize(Q)
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
-    out_schema = f"query_id long, {id_col} long, cosine double"
-
-    def score(batches):
-        bqids, bQn = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Xn = _np_normalize(X)
-            C = Xn @ bQn.T  # (batch, m)
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j, qid in enumerate(bqids):
-                col = C[:, j]
-                mask = ids != qid
-                cids, cval = ids[mask], col[mask]
-                if cids.size == 0:
-                    continue
-                parts.append(_partial_topk_frame(qid, cids, cval, k, id_col))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    return _rank_topk(cand, id_col, k)
-
-
 def _np_normalize(X):
     import numpy as np
 
@@ -123,15 +91,34 @@ def _np_normalize(X):
 
 def _np_buckets(X, P):
     """Sign-LSH bucket ints for rows of X against hyperplane matrix P:
-    bit i = (x . p_i) > 0 — numpy twin of lsh_bucket's HOF expression.
-    (matmul accumulation order differs from the HOF fold; a dot exactly
-    at 0.0 could in principle flip a bit — measure-zero on real data,
-    rank parity is pinned in pytest)."""
+    bit i = (x . p_i) > 0 — the sign test the DuckDB oracles inline with
+    the same hyperplanes. (BLAS accumulation order differs from the
+    oracle's left fold; a dot exactly at 0.0 could in principle flip a
+    bit — measure-zero on real data, the oracles pin the buckets.)"""
     import numpy as np
 
     bits = (X @ P.T) > 0  # (n, p) bool
     weights = (1 << np.arange(P.shape[0], dtype=np.int64))
     return bits.astype(np.int64) @ weights
+
+
+def _batch_vectors(pdf, id_col: str, vec_col: str):
+    """(ids, X) of one Arrow batch with null-vector rows dropped."""
+    import numpy as np
+
+    pdf = pdf[pdf[vec_col].notna()]
+    return pdf[id_col].to_numpy(), np.array(pdf[vec_col].tolist(), dtype=np.float64)
+
+
+def _query_matrix(queries: DataFrame):
+    """(query ids, query matrix) collected from [query_id, query_vec]."""
+    import numpy as np
+
+    qrows = queries.select("query_id", "query_vec").collect()
+    if not qrows:
+        raise ValueError("empty queries")
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    return qids, np.array([list(r[1]) for r in qrows], dtype=np.float64)
 
 
 def _partial_topk_frame(qid, ids, vals, k, id_col):
@@ -169,22 +156,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = _SEED) -> list[list[float]
     return planes
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]):
-    bucket = sum(
-        (
-            F.when(dot(F.col(vec_col), F.lit([float(x) for x in p])) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            for i, p in enumerate(planes)
-        ),
-        F.lit(0),
-    )
-    return bucket.cast("int")
-
-
-def lsh_bucket(df: DataFrame, vec_col: str, dim: int, n_planes: int = 8, seed: int = _SEED):
-    """Add a sign-LSH bucket column: bit i = sign(v . plane_i)."""
-    return df.withColumn("bucket", _bucket_expr(vec_col, _hyperplanes(dim, n_planes, seed)))
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -195,73 +166,22 @@ def lsh_topk(
     n_planes: int = 8,
     n_tables: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: score only within the query's LSH bucket.
+    """Approximate top-k: score only the corpus vectors that share the
+    query's sign-LSH bucket -> [query_id, vec_id, cosine, rank].
 
-    The corpus is bucketed once (narrow int key) and the join is an
-    equi-join on bucket — at scale this is the difference between
-    scanning 100 TB per query and scanning 1/2^n_planes of it.
+    One mapInPandas over the corpus does bucket assignment (sign
+    matmul) AND masked cosine scoring per Arrow batch with a map-side
+    partial top-k — the corpus never shuffles, and the exchange carries
+    at most partitions x m x k rows. At scale a query scores
+    ~1/2^n_planes of the corpus instead of all of it.
 
     ``n_tables`` > 1 is OR-amplification: each table hashes with an
-    independent hyperplane set (seed _SEED+t), a pair is a candidate
-    when ANY table buckets it together. Recall rises steeply (a true
-    neighbor only needs to agree on one table's n_planes signs) at
-    candidate-set cost ~x n_tables — the standard LSH recall knob.
-    All tables' memberships come from ONE corpus scan (a posexplode
-    of the per-table bucket array), and duplicate candidate pairs are
-    collapsed before ranking.
-    """
-    if n_tables == 1:
-        cb = lsh_bucket(corpus, vec_col, dim, n_planes)
-        qb = lsh_bucket(queries, "query_vec", dim, n_planes)
-        joined = cb.join(F.broadcast(qb), "bucket").where(F.col(id_col) != F.col("query_id"))
-    else:
-        tables = [_hyperplanes(dim, n_planes, _SEED + t) for t in range(n_tables)]
-        carr = F.array(*[_bucket_expr(vec_col, p) for p in tables])
-        qarr = F.array(*[_bucket_expr("query_vec", p) for p in tables])
-        cb = corpus.select(id_col, vec_col, F.posexplode(carr).alias("_tbl", "bucket"))
-        qb = queries.select(
-            "query_id", "query_vec", F.posexplode(qarr).alias("_tbl", "bucket")
-        )
-        joined = (
-            cb.join(F.broadcast(qb), ["_tbl", "bucket"])
-            .where(F.col(id_col) != F.col("query_id"))
-            # a pair that collides in several tables must score once
-            .dropDuplicates(["query_id", id_col])
-        )
-    scored = joined.select(
-        "query_id",
-        id_col,
-        cosine_similarity(vec_col, "query_vec").alias("cosine"),
-    )
-    return _rank_topk(scored, id_col, k)
-
-
-def lsh_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 1,
-) -> DataFrame:
-    """Vectorized twin of lsh_topk — same hyperplanes, same buckets,
-    same (cosine desc, id asc) ranking, numpy kernel.
-
-    One mapInPandas over the corpus does bucket assignment (sign matmul)
-    AND masked cosine scoring per Arrow batch with a map-side partial
-    top-k — the corpus never shuffles at all (the HOF form at least
-    avoids reshuffling by broadcasting queries; this also removes the
-    per-row interpreted expression tree). Exchange carries at most
-    partitions x m x k rows. Cosines come from BLAS accumulation, so
-    last-ulp values can differ from the HOF fold — rank parity is the
-    pytest contract, oracle surface stays on the HOF form.
-
-    ``n_tables`` OR-amplifies exactly like lsh_topk: a corpus vector is
-    a candidate for query j when any table's buckets agree. Here it is
-    just an any() over per-table equality masks — no explode, no dedup,
-    still zero corpus shuffle.
+    independent hyperplane set (seed _SEED+t), and a corpus vector is a
+    candidate for query j when ANY table's buckets agree — an any() over
+    per-table equality masks, so a pair scores once however many tables
+    it collides in. Recall rises steeply (a true neighbor only needs to
+    agree on one table's n_planes signs) at candidate-set cost
+    ~x n_tables — the standard LSH recall knob.
     """
     import numpy as np
 
@@ -269,11 +189,7 @@ def lsh_topk_vectorized(
         np.array(_hyperplanes(dim, n_planes, _SEED + t), dtype=np.float64)
         for t in range(n_tables)
     ]
-    qrows = queries.select("query_id", "query_vec").collect()
-    if not qrows:
-        raise ValueError("empty queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    qids, Q = _query_matrix(queries)
     qbuckets = [_np_buckets(Q, P) for P in Ps]
     Qn = _np_normalize(Q)
     bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn, qbuckets, Ps))
@@ -282,10 +198,9 @@ def lsh_topk_vectorized(
     def score(batches):
         bqids, bQn, bqbuckets, bPs = bq.value
         for pdf in batches:
-            if pdf.empty:
+            ids, X = _batch_vectors(pdf, id_col, vec_col)
+            if ids.size == 0:
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
             buckets = [_np_buckets(X, P) for P in bPs]
             Xn = _np_normalize(X)
             C = Xn @ bQn.T  # (batch, m)
@@ -447,97 +362,34 @@ def ivf_topk(
     n_centroids rows and should not pay the corpus' shuffle.
 
     Centroid choice is training-free and deterministic — the
-    ``n_centroids`` lowest-id corpus vectors (a real deployment would
-    k-means; index structure and probe path are identical, which is
-    what matters for the plan shape).
+    ``n_centroids`` lowest-id vectors of ``centroid_source`` (or hand in
+    ``train_ivf_centroids``; index structure and probe path are
+    identical, which is what matters for the plan shape).
 
-    Scale shape: centroids are collected once (tiny) and inlined as
-    literals, so cell assignment is a PER-ROW argmax — no fan-out, no
-    shuffle, the corpus is scanned exactly once. Probes explode each
-    query into n_probe (query, cell) rows, broadcast, and equi-join on
-    the int cell key: each query scores ~n_probe/n_centroids of the
-    corpus instead of all of it.
+    Scale shape: centroids and queries are collected once (tiny) and
+    broadcast; one mapInPandas pass does cell assignment (argmax over a
+    batch x centroids matmul) and probe-masked cosine scoring with a
+    map-side partial top-k — the corpus is scanned once and never
+    shuffles, and each query scores ~n_probe/n_centroids of it.
 
-    Ties: cell = first index attaining the max dot (array_position on
-    exact doubles); final rank ties break by ascending id.
-    """
-    src = centroid_source if centroid_source is not None else corpus
-    cents = [
-        (r[0], list(r[1]))
-        for r in src.orderBy(id_col).limit(n_centroids).select(id_col, vec_col).collect()
-    ]
-    if not cents:
-        raise ValueError("empty corpus")
-    # single nested-array literal: one py4j call and one plan node for
-    # the whole centroid matrix — per-element literals made plan
-    # construction (~1k gateway calls) dwarf the actual execution
-    matrix = matrix_lit([[float(x) for x in v] for _, v in cents])
-
-    def cell_expr(vcol: str):
-        dots = F.transform(matrix, lambda c: dot(F.col(vcol), c))
-        return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-    indexed = corpus.withColumn("cell", cell_expr(vec_col))
-    qdots = F.transform(
-        matrix,
-        lambda c, i: F.struct(dot(F.col("query_vec"), c).alias("d"), i.cast("int").alias("idx")),
-    )
-    probe_cells = F.transform(
-        F.slice(
-            F.array_sort(
-                qdots,
-                lambda l, r: F.when(l["d"] > r["d"], F.lit(-1))
-                .when(l["d"] < r["d"], F.lit(1))
-                .otherwise((l["idx"] - r["idx"]).cast("int")),
-            ),
-            1,
-            n_probe,
-        ),
-        lambda s: s["idx"],
-    )
-    probed = queries.select("query_id", "query_vec", F.explode(probe_cells).alias("cell"))
-    joined = indexed.join(F.broadcast(probed), "cell").where(F.col(id_col) != F.col("query_id"))
-    scored = joined.select(
-        "query_id", id_col, cosine_similarity(vec_col, "query_vec").alias("cosine")
-    )
-    return _rank_topk(scored, id_col, k)
-
-
-def ivf_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    centroid_source: DataFrame | None = None,
-) -> DataFrame:
-    """Vectorized twin of ivf_topk — same centroids, same first-argmax
-    cell assignment, same (dot desc, idx asc) probe order, numpy kernel.
-
-    Cell assignment and probe-cell scoring happen inside one
-    mapInPandas pass (argmax over a batch x centroids matmul, then a
-    masked cosine matmul per query) with map-side partial top-k — no
-    corpus shuffle, no interpreted per-row expression tree. Rank parity
-    with the HOF form pinned in pytest; the HOF form stays the oracle
-    surface.
+    Ties: cell = first index attaining the max dot; probe order is
+    (dot desc, centroid index asc); final rank ties break by ascending
+    id.
     """
     import numpy as np
 
     src = centroid_source if centroid_source is not None else corpus
-    cents = [
-        (r[0], list(r[1]))
-        for r in src.orderBy(id_col).limit(n_centroids).select(id_col, vec_col).collect()
-    ]
+    cents = (
+        src.where(F.col(vec_col).isNotNull())
+        .orderBy(id_col)
+        .limit(n_centroids)
+        .select(vec_col)
+        .collect()
+    )
     if not cents:
         raise ValueError("empty corpus")
-    C = np.array([v for _, v in cents], dtype=np.float64)  # (c, dim)
-    qrows = queries.select("query_id", "query_vec").collect()
-    if not qrows:
-        raise ValueError("empty queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    C = np.array([list(r[0]) for r in cents], dtype=np.float64)  # (c, dim)
+    qids, Q = _query_matrix(queries)
     # probe cells per query: top n_probe by (dot desc, idx asc)
     qdots = Q @ C.T
     probe = np.stack(
@@ -550,12 +402,10 @@ def ivf_topk_vectorized(
     def score(batches):
         bqids, bQn, bprobe, bC = bq.value
         for pdf in batches:
-            if pdf.empty:
+            ids, X = _batch_vectors(pdf, id_col, vec_col)
+            if ids.size == 0:
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            # first index attaining the max dot — np.argmax tie rule ==
-            # the HOF form's array_position(dots, array_max(dots))
+            # np.argmax returns the first index attaining the max dot
             cells = np.argmax(X @ bC.T, axis=1)
             Xn = _np_normalize(X)
             Cs = Xn @ bQn.T
@@ -577,43 +427,16 @@ def embedding_near_dups(
     threshold: float = 0.95,
     n_planes: int = 6,
 ) -> DataFrame:
-    """Near-duplicate pairs by cosine >= threshold, candidate-limited
-    to same-LSH-bucket pairs (no O(n^2) cross product)."""
-    b = lsh_bucket(df, vec_col, dim, n_planes)
-    a, c = b.alias("a"), b.alias("b")
-    pairs = (
-        a.join(c, "bucket")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cosine_similarity(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")).alias("cosine"),
-        )
-    )
-    return pairs.where(F.col("cosine") >= threshold)
-
-
-def embedding_near_dups_vectorized(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.95,
-    n_planes: int = 6,
-    block: int = 2048,
-) -> DataFrame:
-    """Vectorized twin of embedding_near_dups — same buckets, same
-    pair set (id_a < id_b, cosine >= threshold), numpy kernel.
+    """Near-duplicate pairs [id_a, id_b, cosine] with id_a < id_b and
+    cosine >= threshold, candidate-limited to same-LSH-bucket pairs (no
+    O(n^2) cross product).
 
     Shape: one mapInPandas assigns buckets (sign matmul), ONE shuffle
     co-locates each bucket, then applyInPandas scores the within-bucket
-    pairs as blocked matmuls — the HOF self-join form instead expands
-    every within-bucket pair into a row and folds a 64-dim interpreted
-    expression per pair. Blocked (``block`` rows at a time) so a skewed
-    bucket costs O(n_b^2) float ops but only O(block * n_b) memory.
-    Cosine values differ from the HOF fold in the last ulp, so pair-set
-    parity (not value parity) is the pytest contract; the HOF form
-    stays the oracle surface.
+    pairs as blocked matmuls instead of expanding every within-bucket
+    pair into a row. Blocked (``_NEAR_DUP_BLOCK`` rows at a time) so a
+    skewed bucket costs O(n_b^2) float ops but only O(block * n_b)
+    memory.
     """
     import numpy as np
     import pandas as pd
@@ -624,12 +447,12 @@ def embedding_near_dups_vectorized(
 
     def assign(batches):
         for pdf in batches:
-            if pdf.empty:
+            ids, X = _batch_vectors(pdf, id_col, vec_col)
+            if ids.size == 0:
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    id_col: ids,
                     vec_col: list(X),
                     "bucket": _np_buckets(X, bp.value).astype(np.int32),
                 }
@@ -643,11 +466,11 @@ def embedding_near_dups_vectorized(
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
             )
-        ids = pdf[id_col].to_numpy()
-        Xn = _np_normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
+        ids, X = _batch_vectors(pdf, id_col, vec_col)
+        Xn = _np_normalize(X)
         out = []
-        for lo in range(0, n, block):
-            hi = min(lo + block, n)
+        for lo in range(0, n, _NEAR_DUP_BLOCK):
+            hi = min(lo + _NEAR_DUP_BLOCK, n)
             Cb = Xn[lo:hi] @ Xn.T  # (hi-lo, n)
             bi, bj = np.nonzero(Cb >= threshold)
             keep = (bi + lo) < bj  # upper triangle only: each pair once

@@ -8,8 +8,8 @@ w + k - 1 normalized characters (the winnowing guarantee), so it
 finds copied PASSAGES between documents that differ everywhere else,
 with a selection density of ~2/(w+1) instead of every k-gram.
 
-Algorithm per document (pure Catalyst HOFs, zero Python, zero
-shuffle until the candidate join):
+Algorithm per document (one numpy mapInPandas pass, zero shuffle
+until the candidate join):
 1. normalize: lowercase, drop every non-[a-z0-9] char (MOSS-style —
    whitespace/punctuation/case edits don't move fingerprints);
 2. hash all k-grams with the same 31-poly mod-1e9+7 rolling fold the
@@ -27,37 +27,17 @@ bounded-fanout discipline as the LSH bucket cap in dedup.py), so the
 candidate join is bucketed and skew-safe at 100 TB.
 
 Scale shape: fingerprinting is a narrow map (O(len) codes + O(H·k)
-fold work). The df-cap is a groupBy partial-combine agg (NOT a
+vectorized fold work). The df-cap is a groupBy partial-combine agg (NOT a
 window — the minhash_lsh_pairs lesson), and the pair agg is keyed by
 (id_a, id_b). No corpus-sized collect/broadcast anywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MOD = 1_000_000_007
-
-
-def _gram_hashes(norm: Column, k: int) -> Column:
-    """Array of poly hashes of every k-gram of *norm*: a (k-1)-fold
-    zip_with over k shifted slices of the char codes, accumulating
-    acc*31+c mod M position-wise — the identical fold order (acc0 = 0,
-    codes left to right) as a per-gram aggregate, without the
-    index-lambda form transform(sequence(i), aggregate(slice(codes, i,
-    k))) whose per-element outer-array slicing is the interpreted-HOF
-    slow class (functions/text.ngrams_from_tokens rationale, measured
-    6-20x). O(len·k) int64 ops, each lambda touching only its args."""
-    codes = F.transform(F.split(norm, "", -1), lambda ch: F.ascii(ch).cast("long"))
-    n_grams = F.length(norm) - F.lit(k - 1)
-    mod = F.lit(_MOD).cast("long")
-    acc = F.transform(F.slice(codes, 1, n_grams), lambda c: c % mod)
-    for j in range(2, k + 1):
-        acc = F.zip_with(
-            acc, F.slice(codes, j, n_grams), lambda a, c: (a * 31 + c) % mod
-        )
-    return acc
 
 
 def winnow_fingerprints(
@@ -66,57 +46,21 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 8,
     w: int = 4,
+    repartition_to: int | None = None,
 ) -> DataFrame:
     """-> (id, pos, fp): robust-winnowing fingerprint selection.
 
     ``pos`` is the 1-based k-gram start offset in the NORMALIZED text
     (usable to locate the matched span). Documents with fewer than k
     normalized chars produce no fingerprints. Density ~= 2/(w+1).
-    """
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")
-    base = (
-        df.select(F.col(id_col), norm.alias("_s"))
-        .withColumn("_h", F.greatest(F.length("_s") - F.lit(k - 1), F.lit(0)))
-        .where(F.col("_h") >= 1)
-        .select(id_col, _gram_hashes(F.col("_s"), k).alias("_hashes"), "_h")
-    )
-
-    def sel_pos(j: Column) -> Column:
-        sl = F.slice(F.col("_hashes"), j, w)
-        return (
-            j + F.size(sl) - F.array_position(F.reverse(sl), F.array_min(sl))
-        ).cast("int")
-
-    n_windows = F.greatest(F.col("_h") - F.lit(w - 1), F.lit(1))
-    poss = F.array_distinct(F.transform(F.sequence(F.lit(1), n_windows), sel_pos))
-    return (
-        base.select(id_col, "_hashes", F.explode(poss).alias("pos"))
-        .select(id_col, "pos", F.element_at("_hashes", F.col("pos")).alias("fp"))
-    )
-
-
-def winnow_fingerprints_vectorized(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """BIT-IDENTICAL vectorized twin of :func:`winnow_fingerprints`
-    (unlike the minhash twins, which use a different hash family, the
-    poly fold here is exact int64 arithmetic — numpy computes the very
-    same values, so this path shares the HOF form's oracle and the
-    equality is pinned in tests/test_winnow.py).
 
     Kernel per doc: normalized ASCII codes -> all k-gram hashes via k
     vectorized fused multiply-adds mod p (no per-gram Python loop) ->
     rightmost-min window selection via a (H-w+1, w) sliding view and a
-    reversed argmin -> np.unique over selected positions. One
-    mapInPandas pass, zero shuffle — replaces the HOF form's ~8·len
-    interpreted lambda evaluations per row (43s -> ~3s at sf0.1).
+    reversed argmin -> np.unique over selected positions. The poly fold
+    is exact int64 arithmetic, so the values are the ones the DuckDB
+    oracle's list_reduce recomputes. One mapInPandas pass, zero shuffle;
+    ``repartition_to`` spreads it off a small single-file scan.
     """
     import re as _re
 
@@ -151,7 +95,7 @@ def winnow_fingerprints_vectorized(
                 pos = starts + (sl.shape[1] - 1 - rev_arg)
                 pos = np.unique(pos)
                 out_ids.extend([doc_id] * len(pos))
-                out_pos.extend((pos + 1).tolist())  # 1-based like the HOF form
+                out_pos.extend((pos + 1).tolist())  # 1-based
                 out_fp.extend(hs[pos].tolist())
             if out_ids:
                 yield pd.DataFrame({id_col: out_ids, "pos": out_pos, "fp": out_fp})
@@ -177,7 +121,7 @@ def winnow_overlap(
     documents (site boilerplate, license headers) are dropped before
     the self-join — the fanout bound that keeps the join skew-safe.
     """
-    # the fingerprint pipeline (scan -> explode -> O(len*k) HOF hashing)
+    # the fingerprint pipeline (scan -> numpy fingerprint kernel)
     # feeds FOUR consumers (df-cap agg, both join sides, sizes); without
     # materialization Catalyst re-derives it per consumer — six corpus
     # passes in the physical plan. localCheckpoint computes it once.
@@ -225,24 +169,12 @@ def winnow_neardup_pairs(
     w: int = 4,
     max_df: int = 16,
     min_shared: int = 2,
-    impl: str = "vectorized",
     repartition_to: int | None = None,
 ) -> DataFrame:
     """End-to-end: fingerprint then overlap (see the two stages).
 
-    ``impl='vectorized'`` (default — the production path) and
-    ``impl='hof'`` (pure-Catalyst, the expression-level reference)
-    produce IDENTICAL rows; both are checked against the same oracle.
-    ``repartition_to`` spreads the vectorized kernel off a small
-    single-file scan (ignored by the hof path, whose cost is in the
-    codegen'd expressions that parallelize with the scan anyway).
+    ``repartition_to`` spreads the fingerprint kernel off a small
+    single-file scan.
     """
-    if impl == "vectorized":
-        fps = winnow_fingerprints_vectorized(
-            df, text_col, id_col, k, w, repartition_to=repartition_to
-        )
-    elif impl == "hof":
-        fps = winnow_fingerprints(df, text_col, id_col, k, w)
-    else:
-        raise ValueError(f"impl must be 'vectorized' or 'hof', got {impl!r}")
+    fps = winnow_fingerprints(df, text_col, id_col, k, w, repartition_to=repartition_to)
     return winnow_overlap(fps, id_col, max_df=max_df, min_shared=min_shared)

@@ -3790,8 +3790,8 @@ def q_ngram_jaccard_adjacent(spark, sf_dir):
         SELECT query_id, vec_id, rank FROM ranked WHERE rank <= 5
     """,
     doc="brute-force cosine top-k ANN baseline (north star: similarity search). "
-    "Catalyst HOF kernel — at dim=64 the JVM fold beats Arrow transfer; "
-    "cosine_topk_vectorized is the high-dimension scale path (same oracle). "
+    "Catalyst HOF kernel — at dim=64 the JVM fold beats the Arrow round trip "
+    "of a numpy kernel (cosine_topk_vectorized is an alias of this entry). "
     "Oracle compares rank sets; cosine floats stay engine-side.",
 )
 def q_cosine_topk(spark, sf_dir):
@@ -3846,20 +3846,16 @@ def _lsh_ann_topk_oracle(dim: int = 64, n_planes: int = 6, k: int = 5) -> str:
     "lsh_ann_topk",
     oracle=_lsh_ann_topk_oracle(),
     doc="sign-LSH bucketed approximate top-k (north star: ANN scale path), "
-    "vectorized numpy kernel (lsh_ann_topk_hof is the Catalyst twin); oracle "
+    "numpy kernel (lsh_ann_topk_hof is an alias of this entry); oracle "
     "inlines the deterministic hyperplanes so DuckDB reproduces the exact buckets",
 )
 def q_lsh_ann_topk(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import lsh_topk_vectorized
-
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") <= 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return lsh_topk_vectorized(corpus, queries, dim=64, k=5, n_planes=6).select(
-        "query_id", "vec_id", "rank"
-    )
+    return lsh_topk(corpus, queries, dim=64, k=5, n_planes=6).select("query_id", "vec_id", "rank")
 
 
 @query(
@@ -5548,56 +5544,6 @@ def q_minhash_dedup_fast(spark, sf_dir):
     return d.join(losers, "doc_id", "left_anti").select("doc_id", "n_chars")
 
 
-@query(
-    "lsh_ann_topk_hof",
-    oracle=_lsh_ann_topk_oracle(),
-    doc="sign-LSH ANN top-k, Catalyst higher-order-function kernel (zip_with/"
-    "aggregate fold) — same hyperplanes, buckets and ranking as the vectorized "
-    "primary; both forms run the same inlined-hyperplane oracle",
-)
-def q_lsh_ann_topk_hof(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return lsh_topk(corpus, queries, dim=64, k=5, n_planes=6).select("query_id", "vec_id", "rank")
-
-
-@query(
-    "ivf_ann_topk_hof",
-    oracle=None,  # assigned below once _IVF_ORACLE is defined
-    doc="IVF ANN top-k, Catalyst higher-order-function kernel — same centroids, "
-    "first-argmax cell assignment and probe order as the vectorized primary; "
-    "both forms run the same oracle",
-)
-def q_ivf_ann_topk_hof(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return ivf_topk(
-        corpus, queries, k=5, n_centroids=16, n_probe=4, centroid_source=emb
-    ).select("query_id", "vec_id", "rank")
-
-
-@query(
-    "embedding_near_dup_vectorized",
-    oracle=None,  # assigned below once _lsh_near_dup_oracle is defined
-    doc="embedding near-dup pairs, numpy kernel: sign-matmul bucketing, one shuffle "
-    "on bucket, blocked per-bucket pairwise matmul — same buckets and pair set as "
-    "the HOF primary, same inlined-hyperplane oracle (wins at production dims)",
-)
-def q_embedding_near_dup_vectorized(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import embedding_near_dups_vectorized
-
-    emb = _t(spark, sf_dir, "embeddings").repartition(spark.sparkContext.defaultParallelism)
-    return embedding_near_dups_vectorized(emb, threshold=0.3, n_planes=6).select("id_a", "id_b")
-
-
 def _lsh_near_dup_oracle(dim: int = 64, n_planes: int = 6, threshold: float = 0.3) -> str:
     """Generate the DuckDB oracle for embedding_near_dup with the
     engine's deterministic hyperplanes inlined as literals, so the
@@ -5632,8 +5578,9 @@ def _lsh_near_dup_oracle(dim: int = 64, n_planes: int = 6, threshold: float = 0.
     "embedding_near_dup",
     oracle=_lsh_near_dup_oracle(),
     doc="embedding-cosine near-dup pairs, LSH-bucket candidate limited (north star); "
-    "Catalyst HOF kernel — at dim=64 it matches the blocked-matmul twin "
-    "(embedding_near_dup_vectorized, same oracle, wins at production widths); "
+    "numpy kernel: sign-matmul bucketing, one shuffle on bucket, blocked "
+    "per-bucket pairwise matmul (embedding_near_dup_vectorized is an alias of "
+    "this entry); "
     "oracle regenerates the sign-LSH buckets from inlined hyperplane literals",
 )
 def q_embedding_near_dup(spark, sf_dir):
@@ -5641,13 +5588,6 @@ def q_embedding_near_dup(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings").repartition(spark.sparkContext.defaultParallelism)
     return embedding_near_dups(emb, threshold=0.3, n_planes=6).select("id_a", "id_b")
-
-
-REGISTRY["embedding_near_dup_vectorized"] = QueryDef(
-    REGISTRY["embedding_near_dup_vectorized"].fn,
-    _lsh_near_dup_oracle(),
-    REGISTRY["embedding_near_dup_vectorized"].doc,
-)
 
 
 _IVF_DOT = (
@@ -5701,17 +5641,17 @@ _IVF_ORACLE = f"""
     oracle=_IVF_ORACLE,
     doc="IVF-style ANN: per-batch argmax cell assignment (no shuffle), n_probe=4 of 16 "
     "cells probed per query (north star: ANN scale path beside sign-LSH), vectorized "
-    "numpy kernel (ivf_ann_topk_hof is the Catalyst twin)",
+    "numpy kernel (ivf_ann_topk_hof is an alias of this entry)",
 )
 def q_ivf_ann_topk(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import ivf_topk_vectorized
+    from hadoop_app_spark.operators.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") <= 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return ivf_topk_vectorized(
+    return ivf_topk(
         corpus, queries, k=5, n_centroids=16, n_probe=4, centroid_source=emb
     ).select("query_id", "vec_id", "rank")
 
@@ -5744,11 +5684,6 @@ def q_pq_ann_topk(spark, sf_dir):
     return pq_adc_topk(corpus, queries, books, k=5, shortlist=64).select(
         "query_id", "vec_id", "rank"
     )
-
-
-REGISTRY["ivf_ann_topk_hof"] = QueryDef(
-    REGISTRY["ivf_ann_topk_hof"].fn, _IVF_ORACLE, REGISTRY["ivf_ann_topk_hof"].doc
-)
 
 
 @query(
@@ -8058,30 +7993,6 @@ def q_stream_sliding_exec(spark, sf_dir):
         "n",
     )
 
-
-@query(
-    "cosine_topk_vectorized",
-    oracle=None,  # assigned below: shares cosine_topk's rank-set oracle
-    doc="brute-force cosine top-k, numpy matmul per Arrow batch + map-side partial "
-    "top-k — the high-dimension scale path (plan shape identical to cosine_topk, "
-    "same rank-set oracle; at dim=64 the HOF primary wins on Arrow transfer)",
-)
-def q_cosine_topk_vectorized(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import brute_force_topk_vectorized
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return brute_force_topk_vectorized(corpus, queries, k=5).select("query_id", "vec_id", "rank")
-
-
-REGISTRY["cosine_topk_vectorized"] = QueryDef(
-    REGISTRY["cosine_topk_vectorized"].fn,
-    REGISTRY["cosine_topk"].oracle,
-    REGISTRY["cosine_topk_vectorized"].doc,
-)
 
 # streaming top-k: the mergeability theorem makes the batch brute-force
 # oracle the ground truth for the streamed fold, verbatim
@@ -11728,29 +11639,7 @@ def q_winnow_neardup(spark, sf_dir):
     # otherwise pin the whole per-doc fingerprint pass to a few cores)
     return winnow_neardup_pairs(
         d, "text", "doc_id", k=8, w=4, max_df=16, min_shared=2,
-        impl="vectorized", repartition_to=spark.sparkContext.defaultParallelism,
-    )
-
-
-@query(
-    "winnow_neardup_hof",
-    # SAME oracle as winnow_neardup: unlike the minhash twins, the poly
-    # fold is exact int64 arithmetic in both paths, so the vectorized
-    # kernel and the HOF chain produce identical rows (equality pinned
-    # in tests/test_winnow.py)
-    oracle=REGISTRY["winnow_neardup"].oracle,
-    doc="winnowing near-dup pairs, pure-Catalyst reference path: the same "
-    "selection as winnow_neardup via HOF lambdas (aggregate/slice/reverse) — "
-    "the expression-level form the oracle mirrors term-for-term; ~8·len "
-    "interpreted lambda steps per row make the vectorized kernel the "
-    "production path (operators/winnow.winnow_neardup_pairs impl='hof')",
-)
-def q_winnow_neardup_hof(spark, sf_dir):
-    from hadoop_app_spark.operators.winnow import winnow_neardup_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return winnow_neardup_pairs(
-        d, "text", "doc_id", k=8, w=4, max_df=16, min_shared=2, impl="hof"
+        repartition_to=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -12475,6 +12364,20 @@ def names() -> list[str]:
 # inverted_index ERR). tools/oracle_check.py and
 # tests/test_registry.py enforce this for every gated entry.
 DRIVER_GATE_SIZE = 50
+
+# Names that once ran a second kernel of the same operator (Catalyst
+# HOF fold vs numpy). Each operator now has one kernel, so the old name
+# runs its primary's query function and oracle; the names stay so that
+# __spark_entry__.queries() and bench.py keep every entry they list.
+_ALIASES = {
+    "cosine_topk_vectorized": "cosine_topk",
+    "lsh_ann_topk_hof": "lsh_ann_topk",
+    "ivf_ann_topk_hof": "ivf_ann_topk",
+    "embedding_near_dup_vectorized": "embedding_near_dup",
+    "winnow_neardup_hof": "winnow_neardup",
+}
+REGISTRY.update({alias: REGISTRY[primary] for alias, primary in _ALIASES.items()})
+
 
 _PRIORITY = [
     # reference core (SURVEY §2.1-2.5)

@@ -162,3 +162,42 @@ def test_rotation_age_report_runs_and_is_complete(capsys):
         i for i, line in enumerate(ungated) if not line.startswith("  never")
     )
     assert all(line.startswith("  never") for line in ungated[:first_aged])
+
+
+# each similarity operator's registry entry -> the name that once ran its
+# second kernel and is now an alias of the same entry
+SIMILARITY_ALIASES = {
+    "cosine_topk": "cosine_topk_vectorized",
+    "lsh_ann_topk": "lsh_ann_topk_hof",
+    "ivf_ann_topk": "ivf_ann_topk_hof",
+    "embedding_near_dup": "embedding_near_dup_vectorized",
+    "winnow_neardup": "winnow_neardup_hof",
+}
+
+
+@pytest.mark.parametrize("name", sorted(SIMILARITY_ALIASES))
+def test_similarity_entries_match_oracle(spark, name):
+    """The one kernel behind each similarity operator reproduces its
+    DuckDB oracle exactly at sf0.01 (the views tools/oracle_check.py
+    creates), and the alias runs that same entry."""
+    import duckdb
+
+    from hadoop_app_spark.catalog import TABLES
+    from hadoop_app_spark.queries import REGISTRY
+    from tests.test_recall import SF as sf_dir
+    from tools.oracle_check import rows_key
+
+    qd = REGISTRY[name]
+    assert REGISTRY[SIMILARITY_ALIASES[name]].fn is qd.fn
+    assert REGISTRY[SIMILARITY_ALIASES[name]].oracle == qd.oracle
+    df = qd.fn(spark, sf_dir)
+    srows, scols = [tuple(r) for r in df.collect()], df.columns
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = con.execute(qd.oracle)
+    dcols, drows = [d[0] for d in res.description], res.fetchall()
+    assert srows, name
+    assert sorted(scols) == sorted(dcols)
+    assert type_drift(srows, scols, drows, dcols) == []
+    assert rows_key(srows, scols, None) == rows_key(drows, dcols, None)

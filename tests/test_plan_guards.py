@@ -109,6 +109,9 @@ NLJ_ALLOWED = CROSS_ALLOWED | {
     # against), plus its struct re-join; both NLJ sides are bounded by
     # the query-set size, never corpus x corpus
     "ann_recall_ivfpq",
+    # cosine_topk_vectorized: a registry alias of cosine_topk (same
+    # query function, same brute_force_topk broadcast nested-loop join)
+    "cosine_topk_vectorized",
 }
 
 

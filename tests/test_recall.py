@@ -42,11 +42,11 @@ def _recall(result_df, truth) -> float:
 
 
 def test_ivf_recall_floor(ann_inputs):
-    from hadoop_app_spark.operators.similarity import ivf_topk_vectorized
+    from hadoop_app_spark.operators.similarity import ivf_topk
 
     emb, queries, truth = ann_inputs
     r = _recall(
-        ivf_topk_vectorized(
+        ivf_topk(
             emb, queries, k=K, n_centroids=16, n_probe=4, centroid_source=emb
         ),
         truth,
@@ -55,11 +55,11 @@ def test_ivf_recall_floor(ann_inputs):
 
 
 def test_lsh_multitable_recall_floor(ann_inputs):
-    from hadoop_app_spark.operators.similarity import lsh_topk_vectorized
+    from hadoop_app_spark.operators.similarity import lsh_topk
 
     emb, queries, truth = ann_inputs
     r = _recall(
-        lsh_topk_vectorized(emb, queries, dim=64, k=K, n_planes=4, n_tables=8),
+        lsh_topk(emb, queries, dim=64, k=K, n_planes=4, n_tables=8),
         truth,
     )
     assert r >= 0.65, f"LSH(4 planes, 8 tables) recall@5 regressed: {r:.3f} (measured 0.700)"
@@ -68,21 +68,9 @@ def test_lsh_multitable_recall_floor(ann_inputs):
 def test_lsh_or_amplification_monotone(ann_inputs):
     """More tables may only ADD candidates, so recall is monotone in
     n_tables — and measurably so on this corpus (0.067 -> 0.233)."""
-    from hadoop_app_spark.operators.similarity import lsh_topk, lsh_topk_vectorized
+    from hadoop_app_spark.operators.similarity import lsh_topk
 
     emb, queries, truth = ann_inputs
-    r1 = _recall(lsh_topk_vectorized(emb, queries, dim=64, k=K, n_planes=6, n_tables=1), truth)
-    r4 = _recall(lsh_topk_vectorized(emb, queries, dim=64, k=K, n_planes=6, n_tables=4), truth)
+    r1 = _recall(lsh_topk(emb, queries, dim=64, k=K, n_planes=6, n_tables=1), truth)
+    r4 = _recall(lsh_topk(emb, queries, dim=64, k=K, n_planes=6, n_tables=4), truth)
     assert r4 > r1, f"OR-amplification did not improve recall: {r1:.3f} -> {r4:.3f}"
-    # HOF and vectorized forms are the same algorithm (rank parity)
-    hof = {
-        (r.query_id, r.vec_id)
-        for r in lsh_topk(emb, queries, dim=64, k=K, n_planes=6, n_tables=4).collect()
-    }
-    vec = {
-        (r.query_id, r.vec_id)
-        for r in lsh_topk_vectorized(
-            emb, queries, dim=64, k=K, n_planes=6, n_tables=4
-        ).collect()
-    }
-    assert hof == vec

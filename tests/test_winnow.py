@@ -111,19 +111,17 @@ def test_df_cap_drops_boilerplate(spark):
 
 
 def test_vectorized_twin_bit_identical(spark):
-    # the numpy kernel computes the SAME int64 poly fold — (id, pos, fp)
-    # sets must be exactly equal, not statistically similar
-    from hadoop_app_spark.operators.winnow import winnow_fingerprints_vectorized
-
+    # the numpy kernel computes the SAME int64 poly fold as the
+    # pure-Python reference — (id, pos, fp) sets must be exactly equal,
+    # not statistically similar, at non-default k/w too
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    hof = {(r.doc_id, r.pos, r.fp) for r in winnow_fingerprints(df).collect()}
-    vec = {(r.doc_id, r.pos, r.fp) for r in winnow_fingerprints_vectorized(df).collect()}
-    assert hof == vec
-    # and for a k/w combo where windows degenerate (h <= w)
+    got = {(r.doc_id, r.pos, r.fp) for r in winnow_fingerprints(df, k=5, w=3).collect()}
+    want = {(i, p, h) for i, t in DOCS for (p, h) in py_winnow(t, k=5, w=3)}
+    assert got == want
+    # and for a k/w combo where windows degenerate (h <= w): one window, one pick
     small = spark.createDataFrame([(1, "abcdefghij")], ["doc_id", "text"])
-    hof2 = {(r.pos, r.fp) for r in winnow_fingerprints(small, k=3, w=20).collect()}
-    vec2 = {(r.pos, r.fp) for r in winnow_fingerprints_vectorized(small, k=3, w=20).collect()}
-    assert hof2 == vec2 and len(hof2) == 1
+    got2 = {(r.pos, r.fp) for r in winnow_fingerprints(small, k=3, w=20).collect()}
+    assert got2 == py_winnow("abcdefghij", k=3, w=20) and len(got2) == 1
 
 
 def test_short_and_empty_docs_silent(spark):
