@@ -72,8 +72,13 @@ def brute_force_topk(
     """Exact top-k by cosine: [query_id, vec_id, cosine, rank].
 
     queries: [query_id, query_vec]. Self-matches (query_id == vec_id)
-    are excluded so a corpus vector can query its own corpus.
+    are excluded so a corpus vector can query its own corpus. A null
+    vector on either side has no cosine (``cosine_similarity`` would
+    score it 0.0, level with an orthogonal vector), so its rows are
+    dropped before the join.
     """
+    corpus = corpus.where(F.col(vec_col).isNotNull())
+    queries = queries.where(F.col("query_vec").isNotNull())
     joined = corpus.join(F.broadcast(queries), F.col(id_col) != F.col("query_id"))
     scored = joined.select(
         "query_id",

@@ -3,8 +3,18 @@
 One entry per operator family from SURVEY.md §2 (reference semantics)
 plus the Spark built-in completions flagged "absent" there and the
 north-star corpus operators (dedup / similarity / text analysis /
-windows / sessionization). Each entry pairs a DataFrame builder with
-an ANSI-SQL oracle string the driver runs through DuckDB at sf0.01.
+windows / sessionization). Each entry holds a query function and, where
+DuckDB can express the result, an ANSI-SQL oracle string the driver runs
+through DuckDB at sf0.01.
+
+Plain relational entries (the 22 TPC-H shapes, joins, aggregates, set
+operations, scalar functions) are registered with ``sql_query``: their
+one SQL text is both the oracle and what Spark runs, so the DuckDB check
+compares two engines on the same text. An entry keeps a DataFrame
+builder when it exercises a library operator (its oracle is then the
+operator's exact test), when it writes, round-trips or streams, or when
+the builder's plan scales where the text's would not
+(``recommend_flagship``'s as-of ladder against the oracle's fan-out).
 
 Exactness discipline (so value-hashes match bit-for-bit):
 - double SUM/AVG accumulate in DECIMAL(18,6) then cast back to double
@@ -24,13 +34,14 @@ the driver records a weaker rows-only check for those.
 from __future__ import annotations
 
 import contextlib as _contextlib
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_app_spark.catalog import load_table
+from hadoop_app_spark.catalog import TABLES, load_table
 from hadoop_app_spark.functions.text import (
     bpe_ish_token_count,
     doc_fingerprint,
@@ -63,6 +74,26 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
         return fn
 
     return deco
+
+
+_TABLE_WORD = re.compile(r"\b(" + "|".join(TABLES) + r")\b", re.IGNORECASE)
+
+
+def sql_query(name: str, text: str, doc: str = "") -> None:
+    """Register an entry whose Spark query is its oracle text: ``fn``
+    registers a temp view, through ``load_table``, for each catalog table
+    the text names and returns ``spark.sql(text)``. Catalyst picks the
+    join strategy and the combiner. ``spark.sql`` analyses eagerly, so a
+    returned frame keeps the files it was built on when a later call
+    re-registers the views on another ``sf_dir``."""
+    tables = sorted({t.lower() for t in _TABLE_WORD.findall(text)})
+
+    def fn(spark, sf_dir):
+        for t in tables:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        return spark.sql(text)
+
+    REGISTRY[name] = QueryDef(fn, text, doc)
 
 
 def _t(spark, sf_dir, name):
@@ -221,56 +252,36 @@ _NTOK = f"len(list_filter(string_split_regex(text, '{_WS}'), x -> x <> ''))"
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "max_per_group",
-    oracle="""
+    text="""
         SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year,
                max(l_quantity) AS max_qty
         FROM lineitem GROUP BY 1
     """,
     doc="A1/A2 max-per-group with automatic partial agg (MaxTemperatureReducer.java:13-20)",
 )
-def q_max_per_group(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy(F.year("l_shipdate").cast("int").alias("ship_year"))
-        .agg(F.max("l_quantity").alias("max_qty"))
-    )
 
 
-@query(
+sql_query(
     "inner_equi_join",
-    oracle="""
+    text="""
         SELECT c_name, o_orderkey, o_totalprice, c_acctbal
         FROM orders JOIN customer ON o_custkey = c_custkey
     """,
     doc="J1 reduce-side equi-join + P6 column reorder (ReduceJoinJob.java:100-176)",
 )
-def q_inner_equi_join(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    return orders.join(customer, orders.o_custkey == customer.c_custkey, "inner").select(
-        "c_name", "o_orderkey", "o_totalprice", "c_acctbal"
-    )
 
 
-@query(
+sql_query(
     "broadcast_dim_join",
-    oracle="""
+    text="""
         SELECT p_brand, count(*) AS n_items, {s} AS sum_price
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY p_brand
     """.format(s=_DSUM.format(c="l_extendedprice")),
     doc="J2 map-side broadcast hash join (UserHotcar.java:102-142 side-input HashMap)",
 )
-def q_broadcast_dim_join(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(F.count("*").alias("n_items"), _dsum("l_extendedprice").alias("sum_price"))
-    )
 
 
 @query(
@@ -313,9 +324,9 @@ def q_topk_per_group(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "minmax_normalize",
-    oracle="""
+    text="""
         SELECT o_custkey, o_orderkey,
                CASE WHEN mx = mn THEN 1.0
                     ELSE 1.0 - (o_totalprice - mn) / (mx - mn) END AS score
@@ -326,25 +337,6 @@ def q_topk_per_group(spark, sf_dir):
     """,
     doc="T3/A3 group min-max normalization (UserHotcar.java:166-183); degenerate -> 1.0",
 )
-def q_minmax_normalize(spark, sf_dir):
-    w = Window.partitionBy("o_custkey")
-    return (
-        _t(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.min("o_totalprice").over(w).alias("mn"),
-            F.max("o_totalprice").over(w).alias("mx"),
-        )
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.when(F.col("mx") == F.col("mn"), F.lit(1.0))
-            .otherwise(F.lit(1.0) - (F.col("o_totalprice") - F.col("mn")) / (F.col("mx") - F.col("mn")))
-            .alias("score"),
-        )
-    )
 
 
 @query(
@@ -463,9 +455,9 @@ def q_recommend_flagship(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "pricing_summary",
-    oracle="""
+    text="""
         SELECT l_returnflag, l_linestatus,
                {q} AS sum_qty,
                {p} AS sum_base_price,
@@ -482,20 +474,11 @@ def q_recommend_flagship(spark, sf_dir):
     ),
     doc="TPC-H Q1-shaped pricing summary: multi-agg groupBy with filter pushdown",
 )
-def q_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= "1998-09-02")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        _dsum("l_quantity").alias("sum_qty"),
-        _dsum("l_extendedprice").alias("sum_base_price"),
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-        F.count("*").alias("count_order"),
-        (_dsum("l_quantity") / F.count("*")).alias("avg_qty"),
-    )
 
 
-@query(
+sql_query(
     "shipping_priority",
-    oracle="""
+    text="""
         SELECT l_orderkey, {rev} AS revenue, o_orderdate, o_orderpriority
         FROM customer
         JOIN orders   ON c_custkey = o_custkey
@@ -515,28 +498,11 @@ def q_pricing_summary(spark, sf_dir):
     "revenue accumulates in DECIMAL(18,6) partial-combine, and the final "
     "top-10 is TakeOrderedAndProject — no global sort ever materializes",
 )
-def q_shipping_priority(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-01-01")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-01-01")
-    joined = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-    )
-    return (
-        joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
 
 
-@query(
+sql_query(
     "local_supplier_volume",
-    oracle="""
+    text="""
         SELECT n_name, {rev} AS revenue
         FROM customer
         JOIN orders   ON c_custkey = o_custkey
@@ -557,37 +523,11 @@ def q_shipping_priority(spark, sf_dir):
     "and the final |nations|-row aggregation; the locality equality rides "
     "the supplier join as a second key rather than a post-filter",
 )
-def q_local_supplier_volume(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    joined = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc())
-    )
 
 
-@query(
+sql_query(
     "promo_revenue",
-    oracle="""
+    text="""
         SELECT 100.0 * {promo} / {total} AS promo_share
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
@@ -605,21 +545,11 @@ def q_local_supplier_volume(spark, sf_dir):
     "the share is a single exact-double division — cross-engine "
     "hash-exact because both operands derive from decimal sums",
 )
-def q_promo_revenue(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1997-09-01") & (F.col("l_shipdate") < "1997-10-01")
-    )
-    p = _t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return li.join(F.broadcast(p), li.l_partkey == p.p_partkey).agg(
-        (F.lit(100.0) * _dsum(promo) / _dsum(rev)).alias("promo_share")
-    )
 
 
-@query(
+sql_query(
     "top_supplier",
-    oracle="""
+    text="""
         WITH rev AS (
             SELECT l_suppkey, {rev} AS total_revenue
             FROM lineitem
@@ -639,29 +569,14 @@ def q_promo_revenue(spark, sf_dir):
     "global sort), equality on exact decimal-derived doubles so ties "
     "surface every argmax supplier",
 )
-def q_top_supplier(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    s = _t(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue")
-    )
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
-    return (
-        rev.join(F.broadcast(s), rev.l_suppkey == s.s_suppkey)
-        .crossJoin(F.broadcast(mx))
-        .where(F.col("total_revenue") == F.col("mx"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
 
 
-@query(
+sql_query(
     "order_priority_check",
     # Q4's l_commitdate/l_receiptdate are absent from the synthetic
     # lineitem, so "late" is l_shipdate more than 60 days after
     # o_orderdate — the EXISTS decorrelation shape is what Q4 tests
-    oracle="""
+    text="""
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -678,26 +593,11 @@ def q_top_supplier(spark, sf_dir):
     "on orderkey (never a per-row subquery), and the tiny "
     "priority-grouped count partial-combines",
 )
-def q_order_priority_check(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(
-            li,
-            (o.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAY")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
 
 
-@query(
+sql_query(
     "returned_item_report",
-    oracle="""
+    text="""
         SELECT c.c_custkey, c.c_name, {rev} AS revenue, c.c_acctbal, n.n_name
         FROM customer c
         JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -718,30 +618,13 @@ def q_order_priority_check(spark, sf_dir):
     "top-20 is TakeOrderedAndProject with a deterministic custkey "
     "tiebreak — no global sort",
 )
-def q_returned_item_report(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
-    )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
 
 
-@query(
+sql_query(
     "large_volume_customer",
     # quantity threshold tuned to the synthetic distribution so the
     # result is non-trivial at every SF (Q18's 300+ selects nothing)
-    oracle="""
+    text="""
         WITH big AS (
             SELECT l_orderkey
             FROM lineitem GROUP BY l_orderkey
@@ -764,31 +647,11 @@ def q_returned_item_report(spark, sf_dir):
     "aggregate-then-semi-join — never aggregate the full fact twice), "
     "customer broadcasts, top-100 is TakeOrderedAndProject",
 )
-def q_large_volume_customer(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("_sq"))
-        .where(F.col("_sq") > 120)
-        .select("l_orderkey")
-    )
-    return (
-        li.join(big.withColumnRenamed("l_orderkey", "_ok"), li.l_orderkey == F.col("_ok"), "left_semi")
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(_dsum("l_quantity").alias("sum_qty"))
-        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty")
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(100)
-    )
 
 
-@query(
+sql_query(
     "volume_shipping",
-    oracle="""
+    text="""
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS INTEGER) AS l_year,
                {rev} AS revenue
@@ -815,36 +678,9 @@ def q_large_volume_customer(spark, sf_dir):
     "codes BEFORE the fact join via the broadcast filter; the final "
     "agg is 4 groups — pure partial-combine",
 )
-def q_volume_shipping(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("_cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("_sn_key"))
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("_cn_key"))
-        .where(pair)
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
 
 
-@query(
+sql_query(
     "late_line_priority",
     # Q12's l_shipmode/l_receiptdate are absent from the synthetic
     # lineitem: the categorical is l_returnflag, "late" is l_shipdate
@@ -852,7 +688,7 @@ def q_volume_shipping(spark, sf_dir):
     # fact-fact join is what Q12 tests. COUNT(FILTER)/count(when)
     # keeps both engines in BIGINT (DuckDB SUM(int) would widen to
     # HUGEINT and trip the kind check).
-    oracle="""
+    text="""
         SELECT l_returnflag,
                count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
                    AS high_line_count,
@@ -872,32 +708,16 @@ def q_volume_shipping(spark, sf_dir):
     "— it needs o_orderdate); one orderkey shuffle join; the "
     "conditional counts partial-combine into 3 groups",
 )
-def q_late_line_priority(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where(li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAY"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.when(high, 1)).alias("high_line_count"),
-            F.count(F.when(~high, 1)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
-@query(
+sql_query(
     "customer_order_distribution",
     # Q13's o_comment NOT LIKE filter is absent from the synthetic
     # orders — the join-side predicate is o_orderpriority <> URGENT;
     # the LEFT-OUTER-with-ON-predicate + double aggregation is what
     # Q13 tests (customers with zero qualifying orders MUST appear in
     # the c_count=0 bucket, which an inner join would drop)
-    oracle="""
+    text="""
         SELECT c_count, count(*) AS custdist
         FROM (SELECT c.c_custkey, count(o.o_orderkey) AS c_count
               FROM customer c
@@ -915,33 +735,16 @@ def q_late_line_priority(spark, sf_dir):
     "custkey shuffle, count(o_orderkey) skips the null-extended rows, "
     "and the second agg is over <=|distinct counts| rows — tiny",
 )
-def q_customer_order_distribution(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(
-            o,
-            (c.c_custkey == o.o_custkey) & (o.o_orderpriority != "1-URGENT"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
 
 
-@query(
+sql_query(
     "small_qty_avg_yearly",
     # Q17's correlated scalar subquery (l_quantity < 0.2*avg per part)
     # is decorrelated into a per-part aggregate join; the avg threshold
     # compares via EXACT integer/decimal cross-multiplication
     # (qty*cnt*5 < sum) so both engines decide each row identically —
     # a float avg would make the row SET itself nondeterministic
-    oracle="""
+    text="""
         WITH pa AS (
             SELECT l.l_partkey,
                    SUM(CAST(l.l_quantity AS DECIMAL(18,6))) AS _s,
@@ -968,31 +771,14 @@ def q_customer_order_distribution(spark, sf_dir):
     "the whole fact; the threshold re-join is partkey-colocated with "
     "the agg output; final agg is one row",
 )
-def q_small_qty_avg_yearly(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#12")
-    li_b = li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey")).drop(
-        "p_partkey"
-    )
-    pa = li_b.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("_s"),
-        F.count("*").alias("_c"),
-    )
-    return (
-        li_b.join(pa, li_b.l_partkey == F.col("_pk"))
-        .where(F.col("l_quantity").cast("decimal(18,6)") * F.col("_c") * 5 < F.col("_s"))
-        .agg(
-            (_dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly")
-        )
-    )
 
 
-@query(
+sql_query(
     "disjunctive_bundle_revenue",
     # Q19's l_shipmode/l_shipinstruct clauses are absent from the
     # synthetic lineitem; the three (brand, size-range, qty-range)
     # bundles OR'd across a join are what Q19 tests
-    oracle="""
+    text="""
         SELECT {rev} AS revenue
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
@@ -1011,37 +797,16 @@ def q_small_qty_avg_yearly(spark, sf_dir):
     "and only the residual mixed-table disjunction evaluates "
     "post-join; one row out",
 )
-def q_disjunctive_bundle_revenue(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity").between(1, 30))
-    part_env = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 15))
-    )
-    p = _t(spark, sf_dir, "part").where(part_env)
-    bundle = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
-         & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10)
-           & F.col("l_quantity").between(10, 20))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 15)
-           & F.col("l_quantity").between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .where(bundle)
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-    )
 
 
-@query(
+sql_query(
     "suppliers_kept_waiting",
     # Q21's l_receiptdate/l_commitdate are absent: "late" is
     # l_shipdate > o_orderdate + 60 days. The EXISTS(other supplier) +
     # NOT EXISTS(other LATE supplier) double correlation is what Q21
     # tests — it decorrelates into one semi- and one anti-join, both
     # orderkey-equi with a suppkey<> residual
-    oracle="""
+    text="""
         WITH late AS (
             SELECT l.l_orderkey, l.l_suppkey
             FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -1071,43 +836,9 @@ def q_disjunctive_bundle_revenue(spark, sf_dir):
     "residual evaluated in-join (never a per-row subquery); supplier "
     "broadcasts; top-100 is TakeOrderedAndProject",
 )
-def q_suppliers_kept_waiting(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
-    late = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where(li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAY"))
-        .select("l_orderkey", "l_suppkey")
-    )
-    l1 = late
-    l2 = li.select(
-        F.col("l_orderkey").alias("_ok2"), F.col("l_suppkey").alias("_sk2")
-    )
-    l3 = late.select(
-        F.col("l_orderkey").alias("_ok3"), F.col("l_suppkey").alias("_sk3")
-    )
-    waited = (
-        l1.join(
-            l2,
-            (l1.l_orderkey == F.col("_ok2")) & (l1.l_suppkey != F.col("_sk2")),
-            "left_semi",
-        ).join(
-            l3,
-            (l1.l_orderkey == F.col("_ok3")) & (l1.l_suppkey != F.col("_sk3")),
-            "left_anti",
-        )
-    )
-    return (
-        waited.join(F.broadcast(s), waited.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(100)
-    )
 
 
-@query(
+sql_query(
     "global_sales_opportunity",
     # Q22's phone-prefix country codes are absent: the group key is
     # c_nationkey, and "no orders in 7 years" (vacuous here — the
@@ -1115,7 +846,7 @@ def q_suppliers_kept_waiting(spark, sf_dir):
     # orders". The global-avg scalar subquery + anti-join is what Q22
     # tests; the avg threshold compares via exact cross-multiplication
     # (bal*cnt > sum) so the row set is engine-independent
-    oracle="""
+    text="""
         WITH st AS (SELECT SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS _s,
                            count(*) AS _c
                     FROM customer WHERE c_acctbal > 0)
@@ -1137,22 +868,6 @@ def q_suppliers_kept_waiting(spark, sf_dir):
     "against the urgent-order keys (priority filter pushed to the "
     "orders scan), and the per-nation rollup partial-combines",
 )
-def q_global_sales_opportunity(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    st = c.where(F.col("c_acctbal") > 0).agg(
-        F.sum(F.col("c_acctbal").cast("decimal(18,6)")).alias("_s"),
-        F.count("*").alias("_c"),
-    )
-    urgent = o.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    return (
-        c.crossJoin(F.broadcast(st))
-        .where(F.col("c_acctbal").cast("decimal(18,6)") * F.col("_c") > F.col("_s"))
-        .join(urgent, c.c_custkey == urgent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("numcust"), _dsum("c_acctbal").alias("totacctbal"))
-        .orderBy("c_nationkey")
-    )
 
 
 @query(
@@ -1190,9 +905,9 @@ def q_set_similarity_join(spark, sf_dir):
     return set_similarity_join(d, "text", "doc_id", threshold=0.6)
 
 
-@query(
+sql_query(
     "forecast_revenue_change",
-    oracle="""
+    text="""
         SELECT {rev} AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -1209,26 +924,20 @@ def q_set_similarity_join(spark, sf_dir):
     "canonical scan-bound query; if this one shuffles anything but "
     "32 partial rows, the plan is wrong",
 )
-def q_forecast_revenue_change(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        _dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue")
-    )
 
 
-@query(
+sql_query(
     "min_cost_supplier",
     # Q2's partsupp is absent from the synthetic schema: the
     # part-supplier supply relation derives from lineitem (distinct
     # (l_partkey, l_suppkey), supply cost = min extendedprice the
     # supplier ever charged for the part). The correlated scalar-min
-    # subquery restricted to a region — Q2's tested shape — is intact
-    oracle="""
+    # subquery restricted to a region — Q2's tested shape — is intact.
+    # Without statistics Catalyst sizes the supplier x nation x region
+    # chain as a product of its inputs and sort-merge joins it; the two
+    # hints keep it and the decorrelated min broadcast (DuckDB reads
+    # them as comments)
+    text="""
         WITH ps AS (
             SELECT l_partkey, l_suppkey,
                    min(CAST(l_extendedprice AS DECIMAL(18,6))) AS cost
@@ -1240,7 +949,8 @@ def q_forecast_revenue_change(spark, sf_dir):
             JOIN region ON n_regionkey = r_regionkey
             WHERE r_name = 'EUROPE'),
         j AS (
-            SELECT p.p_partkey, eu.s_name, eu.s_acctbal, eu.n_name, ps.cost
+            SELECT /*+ BROADCAST(eu) */
+                   p.p_partkey, eu.s_name, eu.s_acctbal, eu.n_name, ps.cost
             FROM part p
             JOIN ps ON p.p_partkey = ps.l_partkey
             JOIN eu ON ps.l_suppkey = eu.s_suppkey
@@ -1248,7 +958,7 @@ def q_forecast_revenue_change(spark, sf_dir):
         SELECT s_acctbal, s_name, n_name, p_partkey,
                CAST(cost AS DOUBLE) AS supply_cost
         FROM j
-        WHERE cost = (SELECT min(cost) FROM j j2
+        WHERE cost = (SELECT /*+ BROADCAST(j2) */ min(cost) FROM j j2
                       WHERE j2.p_partkey = j.p_partkey)
         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
         LIMIT 100
@@ -1265,43 +975,11 @@ def q_forecast_revenue_change(spark, sf_dir):
     "equality join back is engine-independent; top-100 is "
     "TakeOrderedAndProject",
 )
-def q_min_cost_supplier(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
-        (F.col("p_size") == 15) & (F.col("p_type") == "ECONOMY")
-    )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    eu = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    ps = (
-        li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == p.p_partkey)
-        .groupBy("p_partkey", "l_suppkey")
-        .agg(F.min(F.col("l_extendedprice").cast("decimal(18,6)")).alias("cost"))
-    )
-    j = ps.join(F.broadcast(eu), ps.l_suppkey == eu.s_suppkey)
-    mn = j.groupBy(F.col("p_partkey").alias("_pk")).agg(F.min("cost").alias("_mc"))
-    return (
-        j.join(F.broadcast(mn), (j.p_partkey == F.col("_pk")) & (j.cost == F.col("_mc")))
-        .select(
-            "s_acctbal",
-            "s_name",
-            "n_name",
-            "p_partkey",
-            F.col("cost").cast("double").alias("supply_cost"),
-        )
-        .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
 
 
-@query(
+sql_query(
     "nation_market_share",
-    oracle="""
+    text="""
         WITH allrev AS (
             SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
                    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
@@ -1334,50 +1012,15 @@ def q_min_cost_supplier(spark, sf_dir):
     "the share division is exact-over-exact and engine-independent; "
     "2 rows out",
 )
-def q_nation_market_share(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    )
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "STANDARD")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("_cn"), F.col("n_regionkey").alias("_crk")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("_sn"), F.col("n_name").alias("supp_nation")
-    )
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    joined = (
-        li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("_sn"))
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("_cn"))
-        .join(F.broadcast(r), F.col("_crk") == r.r_regionkey)
-    )
-    num = F.sum(
-        F.when(F.col("supp_nation") == "NATION_2", vol).otherwise(
-            F.lit(0).cast("decimal(18,6)")
-        )
-    ).cast("double")
-    return (
-        joined.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg((num / F.sum(vol).cast("double")).alias("mkt_share"))
-        .orderBy("o_year")
-    )
 
 
-@query(
+sql_query(
     "product_type_profit",
     # Q9's ps_supplycost is absent: unit cost proxies as the part's
     # p_retailprice (a dim attribute, exactly where ps_supplycost
     # lives in real Q9) — profit = revenue - cost*qty, negative-able,
     # accumulated in decimal so cross-engine hash-exact
-    oracle="""
+    text="""
         SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
                {amt} AS sum_profit
         FROM lineitem l
@@ -1403,29 +1046,9 @@ def q_nation_market_share(spark, sf_dir):
     "DECIMAL(18,6) (sign-mixed sums, so float ordering would diverge "
     "cross-engine) and partial-combines into |nations| x |years| rows",
 )
-def q_product_type_profit(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
-        )
-        .agg(_dsum(profit).alias("sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
-    )
 
 
-@query(
+sql_query(
     "important_part_value",
     # Q11's partsupp value (supplycost * availqty) is absent: a
     # part's held value is the total extendedprice NATION_0's
@@ -1433,7 +1056,7 @@ def q_product_type_profit(spark, sf_dir):
     # same-relation global-sum scalar subquery in HAVING — is intact;
     # the threshold compares by exact decimal cross-multiplication
     # (value * 1000 > total) so the row set is engine-independent
-    oracle="""
+    text="""
         WITH v AS (
             SELECT l_partkey,
                    SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS value_dec
@@ -1457,34 +1080,14 @@ def q_product_type_profit(spark, sf_dir):
     "one-row-stats class — no second fact scan); the threshold is "
     "exact decimal cross-multiplication, no float fraction",
 )
-def q_important_part_value(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_0")
-    v = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .groupBy("l_partkey")
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).alias("value_dec"))
-    )
-    t = v.agg(F.sum("value_dec").alias("total"))
-    return (
-        v.crossJoin(F.broadcast(t))
-        .where(F.col("value_dec") * 1000 > F.col("total"))
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.col("value_dec").cast("double").alias("part_value"),
-        )
-        .orderBy(F.col("part_value").desc(), "p_partkey")
-    )
 
 
-@query(
+sql_query(
     "parts_supplier_count",
     # Q16's partsupp derives from lineitem's distinct (part, supplier)
     # pairs; the excluded-supplier NOT IN subquery (complaints in real
     # Q16) becomes negative-balance suppliers
-    oracle="""
+    text="""
         SELECT p.p_brand, p.p_type, p.p_size,
                count(DISTINCT l.l_suppkey) AS supplier_cnt
         FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) l
@@ -1507,35 +1110,16 @@ def q_important_part_value(spark, sf_dir):
     "join); the (partkey, suppkey) distinct and the count-distinct "
     "re-shuffle are the two unavoidable exchanges, both partial-agg'd",
 )
-def q_parts_supplier_count(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    p = _t(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#12")
-        & F.col("p_size").isin(1, 5, 9, 14, 19, 23, 36, 45)
-    )
-    bad = (
-        _t(spark, sf_dir, "supplier")
-        .where(F.col("s_acctbal") < 0)
-        .select(F.col("s_suppkey").alias("_bad"))
-    )
-    return (
-        li.join(bad, li.l_suppkey == F.col("_bad"), "left_anti")
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
-        .limit(100)
-    )
 
 
-@query(
+sql_query(
     "dominant_part_suppliers",
     # Q20's ps_availqty is absent: the "excess stock" EXISTS becomes
     # "shipped more than half a part's total 1996 volume" — supplier
     # qty vs a per-part scalar threshold, the same nested-agg semi
     # shape; qty sums compare by exact integer-valued decimal
     # cross-multiplication (2*sup > total)
-    oracle="""
+    text="""
         WITH sq AS (
             SELECT l_partkey, l_suppkey,
                    SUM(CAST(l_quantity AS DECIMAL(18,6))) AS sup_qty
@@ -1567,32 +1151,6 @@ def q_parts_supplier_count(spark, sf_dir):
     "100-row supplier dim; exact decimal cross-multiply, no float "
     "halving",
 )
-def q_dominant_part_suppliers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("%bolt%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    sq = (
-        li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == p.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("sup_qty"))
-    )
-    tq = sq.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        F.sum("sup_qty").alias("tot_qty")
-    )
-    dom = (
-        sq.join(F.broadcast(tq), sq.l_partkey == F.col("_pk"))
-        .where(F.col("sup_qty") * 2 > F.col("tot_qty"))
-        .select("l_suppkey")
-    )
-    return (
-        s.join(dom, s.s_suppkey == dom.l_suppkey, "left_semi")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("s_name", F.col("n_name").alias("nation"))
-        .orderBy("s_name")
-    )
 
 
 @query(
@@ -2836,9 +2394,9 @@ def q_grouping_analytics(spark, sf_dir):
     return cube.unionByName(rollup).unionByName(gsets)
 
 
-@query(
+sql_query(
     "pivot_wide",
-    oracle="""
+    text="""
         SELECT l_returnflag,
                {o} AS qty_o, {f} AS qty_f
         FROM lineitem GROUP BY l_returnflag
@@ -2848,12 +2406,6 @@ def q_grouping_analytics(spark, sf_dir):
     ),
     doc="pivot to wide columns (conditional aggregation form for oracle parity)",
 )
-def q_pivot_wide(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        _dsum(F.when(F.col("l_linestatus") == "O", F.col("l_quantity"))).alias("qty_o"),
-        _dsum(F.when(F.col("l_linestatus") == "F", F.col("l_quantity"))).alias("qty_f"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2885,9 +2437,9 @@ def q_semi_anti_join(spark, sf_dir):
     return semi.unionByName(anti)
 
 
-@query(
+sql_query(
     "outer_joins",
-    oracle="""
+    text="""
         SELECT 'left' AS op, CAST(c_custkey AS BIGINT) AS key,
                count(o_orderkey) AS cnt_a, CAST(NULL AS BIGINT) AS cnt_b
         FROM customer LEFT JOIN orders ON o_custkey = c_custkey
@@ -2905,40 +2457,11 @@ def q_semi_anti_join(spark, sf_dir):
     doc="LEFT OUTER (the join the reference documents but fails to implement, "
     "SURVEY §1.3.1) + FULL OUTER (absent; SURVEY §2.3), one tagged result",
 )
-def q_outer_joins(spark, sf_dir):
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    left = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("cnt_a"))
-        .select(
-            F.lit("left").alias("op"),
-            F.col("c_custkey").cast("long").alias("key"),
-            "cnt_a",
-            F.lit(None).cast("long").alias("cnt_b"),
-        )
-    )
-    cn = customer.groupBy(F.col("c_nationkey").alias("n_nationkey")).agg(
-        F.count("*").alias("n_customers")
-    )
-    sn = (
-        _t(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("n_nationkey"))
-        .agg(F.count("*").alias("n_suppliers"))
-    )
-    full = cn.join(sn, "n_nationkey", "full_outer").select(
-        F.lit("full").alias("op"),
-        F.col("n_nationkey").cast("long").alias("key"),
-        F.col("n_customers").alias("cnt_a"),
-        F.col("n_suppliers").alias("cnt_b"),
-    )
-    return left.unionByName(full)
 
 
-@query(
+sql_query(
     "cross_range_joins",
-    oracle="""
+    text="""
         SELECT 'cross_pairs' AS join_kind, a.r_name AS k1, b.r_name AS k2,
                CAST(1 AS BIGINT) AS n
         FROM region a CROSS JOIN region b WHERE a.r_regionkey < b.r_regionkey
@@ -2952,36 +2475,6 @@ def q_outer_joins(spark, sf_dir):
     "ReduceJoinJob.java:163-173) and equi+range theta join where the theta "
     "predicate rides the hash join (no cartesian) — tag-unioned to one schema",
 )
-def q_cross_range_joins(spark, sf_dir):
-    r = _t(spark, sf_dir, "region")
-    a, b = r.alias("a"), r.alias("b")
-    cross = (
-        a.crossJoin(b)
-        .where(F.col("a.r_regionkey") < F.col("b.r_regionkey"))
-        .select(
-            F.lit("cross_pairs").alias("join_kind"),
-            F.col("a.r_name").alias("k1"),
-            F.col("b.r_name").alias("k2"),
-            F.lit(1).cast("long").alias("n"),
-        )
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    cond = F.col("l_extendedprice").between(
-        F.col("p_retailprice") * 0.5, F.col("p_retailprice") * 2.0
-    )
-    band = (
-        li.join(part, (li.l_partkey == part.p_partkey) & cond)
-        .groupBy("p_brand")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.lit("range_band").alias("join_kind"),
-            F.col("p_brand").alias("k1"),
-            F.lit("").alias("k2"),
-            "n",
-        )
-    )
-    return cross.unionByName(band)
 
 
 @query(
@@ -3087,9 +2580,9 @@ def q_window_analytics(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "set_operations",
-    oracle="""
+    text="""
         SELECT 'union' AS op, n_name FROM (
             SELECT n_name FROM nation JOIN customer ON c_nationkey = n_nationkey
             UNION
@@ -3108,16 +2601,6 @@ def q_window_analytics(spark, sf_dir):
     doc="UNION distinct (S2 multi-path scan generalized) + INTERSECT + EXCEPT "
     "(both absent in reference; SURVEY §2.6), one tagged result per set op",
 )
-def q_set_operations(spark, sf_dir):
-    nation = _t(spark, sf_dir, "nation")
-    cn = _t(spark, sf_dir, "customer").join(nation, F.col("c_nationkey") == F.col("n_nationkey")).select("n_name")
-    sn = _t(spark, sf_dir, "supplier").join(nation, F.col("s_nationkey") == F.col("n_nationkey")).select("n_name")
-    tag = lambda df, op: df.select(F.lit(op).alias("op"), "n_name")  # noqa: E731
-    return (
-        tag(cn.union(sn).distinct(), "union")
-        .unionByName(tag(cn.intersect(sn), "intersect"))
-        .unionByName(tag(cn.subtract(sn), "except"))  # EXCEPT (distinct) semantics
-    )
 
 
 @query(
@@ -3219,9 +2702,9 @@ def q_json_functions(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "string_functions",
-    oracle="""
+    text="""
         SELECT c_custkey,
                upper(c_mktsegment) AS seg_upper,
                substring(c_name, 1, 8) AS name_prefix,
@@ -3232,16 +2715,6 @@ def q_json_functions(spark, sf_dir):
     """,
     doc="F1/F3/F7 string lib: substring/concat/case-insensitive compare",
 )
-def q_string_functions(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.upper("c_mktsegment").alias("seg_upper"),
-        F.substring("c_name", 1, 8).alias("name_prefix"),
-        F.concat_ws("/", "c_name", "c_mktsegment").alias("name_seg"),
-        F.length("c_name").cast("int").alias("name_len"),
-        F.when(F.lower(F.col("c_mktsegment")) == "building", 1).otherwise(0).alias("is_building"),
-    )
 
 
 @query(
@@ -4050,23 +3523,15 @@ def q_sessionize(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "event_dedup",
-    oracle="""
+    text="""
         SELECT user_id, event_type, count(*) AS n_combos
         FROM (SELECT DISTINCT user_id, event_type, value FROM events)
         GROUP BY user_id, event_type
     """,
     doc="distinct-based dedup (batch form of streaming dropDuplicates)",
 )
-def q_event_dedup(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select("user_id", "event_type", "value")
-        .distinct()
-        .groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n_combos"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -7695,9 +7160,9 @@ def q_regex_case_functions(spark, sf_dir):
     )
 
 
-@query(
+sql_query(
     "math_functions",
-    oracle="""
+    text="""
         SELECT l_orderkey, l_linenumber,
                sqrt(l_extendedprice) AS price_sqrt,
                abs(l_discount - 0.05) AS disc_dist,
@@ -7711,17 +7176,6 @@ def q_regex_case_functions(spark, sf_dir):
     "transcendentals (exp/log/trig) are exposed but not hash-compared: libm "
     "implementations legitimately differ in the last ulp",
 )
-def q_math_functions(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.sqrt("l_extendedprice").alias("price_sqrt"),
-        F.abs(F.col("l_discount") - 0.05).alias("disc_dist"),
-        F.floor("l_extendedprice").alias("price_floor"),
-        F.ceil("l_quantity").alias("qty_ceil"),
-        (F.col("l_orderkey") % 7).alias("key_mod"),
-    )
 
 
 @query(

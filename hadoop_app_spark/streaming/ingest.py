@@ -23,19 +23,21 @@ which is exactly the arrival-order policy an append-only ingest wants,
 and is deterministic given the file arrival order (FileStreamSource
 processes files oldest-first).
 
-Delivery caveat, stated honestly: ``foreachBatch`` is at-least-once —
-a crash between the survivor append and the checkpoint commit replays
-the batch, appending duplicate survivor rows AND duplicate index band
-rows. The replayed batch still drops (its own bands are now in the
-index), so the CORPUS gains at most one duplicate generation per
-crash, and the per-epoch ``dropped`` sidecar tables make replays
-observable. Passing ``merge_target`` (a `streaming/cdc.py`
-DeltaMergeTarget/IcebergMergeTarget, feature-gated on the jars) makes
-the SURVIVOR OUTPUT effectively exactly-once: the replayed batch's
-MERGE keyed on ``id_col`` updates-in-place instead of appending, so a
-crash-replay produces zero duplicate survivor rows. The index side
-stays at-least-once (duplicate band rows re-confirm the same drops —
-benign for dedup semantics, reclaimed by compaction).
+Delivery caveat, stated honestly: ``foreachBatch`` is at-least-once,
+and a replay can LOSE survivors. ``dedup_increment`` appends the
+survivors' band rows to the index BEFORE the sink writes the survivors.
+A crash or a failed output write in that window replays the batch
+against an index that already holds its own bands, so every doc the
+first attempt kept now collides with itself and is dropped: those
+survivors never reach the output. A crash after the survivor write,
+before the checkpoint commit, replays the batch the same way; it keeps
+nothing and appends nothing, so the corpus gains no duplicate rows.
+The per-epoch ``dropped`` sidecar tables make replays observable.
+Passing ``merge_target`` (a `streaming/cdc.py`
+DeltaMergeTarget/IcebergMergeTarget, feature-gated on the jars) turns
+the survivor write into a MERGE keyed on ``id_col``, which updates in
+place instead of appending. It does not close the window above: the
+index append still precedes the MERGE.
 
 No reference analogue: the reference's closest shape is the `dt=`
 daily-partition batch job (UserNewcar.java:241-247); this is that

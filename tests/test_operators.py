@@ -267,27 +267,48 @@ def test_null_embeddings_are_skipped(spark):
         angle = (i % 10) * 0.1
         return [math.cos(angle) + (i // 10) * 1e-3, math.sin(angle), 0.1 * (i % 3), 0.2]
 
-    null_ids = (0, 20)
-    with_nulls = spark.createDataFrame(
-        [(i, None if i in null_ids else vec(i)) for i in range(41)],
-        "vec_id long, embedding array<double>",
-    )
-    clean = with_nulls.where(~F.col("vec_id").isin(*null_ids))
-    queries = clean.where(F.col("vec_id").between(1, 4)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    schema = "vec_id long, embedding array<double>"
     ops = {
-        "brute_force_topk": lambda c: brute_force_topk(c, queries, k=3),
-        "lsh_topk": lambda c: lsh_topk(c, queries, dim=4, k=3, n_planes=2),
-        "ivf_topk": lambda c: ivf_topk(c, queries, k=3, n_centroids=4, n_probe=2),
-        "embedding_near_dups": lambda c: embedding_near_dups(
+        "brute_force_topk": lambda c, q: brute_force_topk(c, q, k=3),
+        "lsh_topk": lambda c, q: lsh_topk(c, q, dim=4, k=3, n_planes=2),
+        "ivf_topk": lambda c, q: ivf_topk(c, q, k=3, n_centroids=4, n_probe=2),
+        "embedding_near_dups": lambda c, q: embedding_near_dups(
             c, dim=4, threshold=0.9, n_planes=2
         ),
     }
-    for name, op in ops.items():
-        want = rows_set(op(clean), round_floats=9)
-        assert want, name
-        assert rows_set(op(with_nulls), round_floats=9) == want, name
+    # (corpus with null rows, query ids, ops); in the second corpus a null
+    # scored as cosine 0.0 would tie with the orthogonal row 3 and take its
+    # top-2 slot on the id tiebreak, and query 2 is itself null
+    inputs = [
+        (
+            spark.createDataFrame(
+                [(i, None if i in (0, 20) else vec(i)) for i in range(41)], schema
+            ),
+            (1, 2, 3, 4),
+            ops,
+        ),
+        (
+            spark.createDataFrame(
+                [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, None), (5, [1.0, 1.0])],
+                schema,
+            ),
+            (1, 2),
+            {"brute_force_topk": lambda c, q: brute_force_topk(c, q, k=2)},
+        ),
+    ]
+
+    def as_queries(corpus, ids):
+        return corpus.where(F.col("vec_id").isin(*ids)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+
+    for with_nulls, query_ids, input_ops in inputs:
+        clean = with_nulls.where(F.col("embedding").isNotNull())
+        for name, op in input_ops.items():
+            want = rows_set(op(clean, as_queries(clean, query_ids)), round_floats=9)
+            assert want, name
+            got = op(with_nulls, as_queries(with_nulls, query_ids))
+            assert rows_set(got, round_floats=9) == want, name
 
 
 # --- multimodal ------------------------------------------------------------

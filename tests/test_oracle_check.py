@@ -175,21 +175,17 @@ SIMILARITY_ALIASES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(SIMILARITY_ALIASES))
-def test_similarity_entries_match_oracle(spark, name):
-    """The one kernel behind each similarity operator reproduces its
-    DuckDB oracle exactly at sf0.01 (the views tools/oracle_check.py
-    creates), and the alias runs that same entry."""
+def _assert_matches_oracle(spark, name, sf_dir):
+    """REGISTRY[name] on Spark reproduces its DuckDB oracle exactly on
+    the parquet under sf_dir (the views tools/oracle_check.py creates):
+    same columns, no per-column type drift, equal rows."""
     import duckdb
 
     from hadoop_app_spark.catalog import TABLES
     from hadoop_app_spark.queries import REGISTRY
-    from tests.test_recall import SF as sf_dir
-    from tools.oracle_check import rows_key
+    from tools.oracle_check import hugeint_cols, rows_key
 
     qd = REGISTRY[name]
-    assert REGISTRY[SIMILARITY_ALIASES[name]].fn is qd.fn
-    assert REGISTRY[SIMILARITY_ALIASES[name]].oracle == qd.oracle
     df = qd.fn(spark, sf_dir)
     srows, scols = [tuple(r) for r in df.collect()], df.columns
     con = duckdb.connect()
@@ -199,5 +195,88 @@ def test_similarity_entries_match_oracle(spark, name):
     dcols, drows = [d[0] for d in res.description], res.fetchall()
     assert srows, name
     assert sorted(scols) == sorted(dcols)
+    assert hugeint_cols(con, qd.oracle) == []
     assert type_drift(srows, scols, drows, dcols) == []
     assert rows_key(srows, scols, None) == rows_key(drows, dcols, None)
+
+
+@pytest.mark.parametrize("name", sorted(SIMILARITY_ALIASES))
+def test_similarity_entries_match_oracle(spark, name):
+    """The one kernel behind each similarity operator reproduces its
+    DuckDB oracle exactly at sf0.01, and the alias runs that same entry."""
+    from hadoop_app_spark.queries import REGISTRY
+    from tests.test_recall import SF as sf_dir
+
+    qd = REGISTRY[name]
+    assert REGISTRY[SIMILARITY_ALIASES[name]].fn is qd.fn
+    assert REGISTRY[SIMILARITY_ALIASES[name]].oracle == qd.oracle
+    _assert_matches_oracle(spark, name, sf_dir)
+
+
+# registry entries registered with queries.sql_query: Spark runs the
+# oracle text itself, so DuckDB checks the same SQL on a second engine
+SQL_TEXT_ENTRIES = (
+    # the 22 TPC-H shapes
+    "pricing_summary", "min_cost_supplier", "shipping_priority",
+    "order_priority_check", "local_supplier_volume", "forecast_revenue_change",
+    "volume_shipping", "nation_market_share", "product_type_profit",
+    "returned_item_report", "important_part_value", "late_line_priority",
+    "customer_order_distribution", "promo_revenue", "top_supplier",
+    "parts_supplier_count", "small_qty_avg_yearly", "large_volume_customer",
+    "disjunctive_bundle_revenue", "dominant_part_suppliers",
+    "suppliers_kept_waiting", "global_sales_opportunity",
+    # plain joins, aggregates, windows, set operations and scalar functions
+    "max_per_group", "inner_equi_join", "broadcast_dim_join", "minmax_normalize",
+    "pivot_wide", "outer_joins", "set_operations", "math_functions",
+    "string_functions", "cross_range_joins", "event_dedup",
+)
+
+
+class _SqlRecorder:
+    """A SparkSession stand-in that records the text of each spark.sql."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self.texts = []
+
+    def __getattr__(self, attr):
+        return getattr(self._spark, attr)
+
+    def sql(self, text):
+        self.texts.append(text)
+        return self._spark.sql(text)
+
+
+@pytest.mark.parametrize("name", SQL_TEXT_ENTRIES)
+def test_sql_text_entries_match_oracle(spark, name):
+    """The entry's fn runs exactly its oracle text on Spark, no
+    DataFrame builder is left beside it, and Spark's rows equal
+    DuckDB's at sf0.01."""
+    from hadoop_app_spark import queries
+    from tests.test_recall import SF as sf_dir
+
+    rec = _SqlRecorder(spark)
+    queries.REGISTRY[name].fn(rec, sf_dir)
+    assert rec.texts == [queries.REGISTRY[name].oracle]
+    assert not hasattr(queries, f"q_{name}")
+    _assert_matches_oracle(spark, name, sf_dir)
+
+
+def test_sql_text_frame_keeps_its_sf_dir(spark):
+    """Each call re-registers the table views on its own sf_dir. A frame
+    built earlier on another sf_dir still reads its own files, because
+    spark.sql analyses its text when it is called."""
+    import duckdb
+
+    from hadoop_app_spark.queries import REGISTRY
+
+    qd = REGISTRY["math_functions"]  # one row per lineitem row
+    sf_dirs = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+    want = [
+        duckdb.sql(f"SELECT count(*) FROM '{sf}/lineitem.parquet'").fetchone()[0]
+        for sf in sf_dirs
+    ]
+    assert want[0] != want[1]
+    frames = [qd.fn(spark, sf) for sf in sf_dirs]
+    assert len(frames[1].collect()) == want[1]
+    assert len(frames[0].collect()) == want[0]

@@ -59,9 +59,6 @@ NLJ_ALLOWED = CROSS_ALLOWED | {
     # dsir_resample: same scoring core (dsir_scored), same one-row
     # T/R broadcasts
     "dsir_resample",
-    # top_supplier: the Q15 max-revenue threshold is a ONE-ROW aggregate
-    # crossJoin-broadcast onto the per-supplier revenue table
-    "top_supplier",
     # contrastive_pairs: the negative pool is a CONSTANT-SIZE (64-row)
     # broadcast crossJoined onto the anchor frame — O(anchors x pool),
     # the documented bounded-side NLJ class

@@ -123,10 +123,10 @@ SHOWCASE = {
         "task; the two-pass scan keeps the cumulative offset exact AND parallel",
     ),
     "winnow_neardup": (
-        "one ArrowEvalPython/MapInPandas fingerprint pass (bit-identical numpy "
-        "twin of the HOF chain), materialized once (Scan ExistingRDD) for its "
-        "four consumers; groupBy aggs for the df cap and pair counts — no "
-        "Window over the fingerprint key, no cartesian",
+        "one ArrowEvalPython/MapInPandas fingerprint pass (the numpy winnowing "
+        "kernel), materialized once (Scan ExistingRDD) for its four consumers; "
+        "groupBy aggs for the df cap and pair counts — no Window over the "
+        "fingerprint key, no cartesian",
         "the df cap bounds self-join fanout exactly like the LSH bucket cap; "
         "boilerplate fingerprints die in a partial-combine agg before the join",
     ),
@@ -216,10 +216,10 @@ SHOWCASE["shipping_priority"] = (
     "map-side partial — no global sort materializes",
 )
 SHOWCASE["local_supplier_volume"] = (
-    "four BroadcastHashJoins (region/nation/supplier/customer) around two "
-    "fact shuffles (orders on custkey, lineitem on orderkey); the "
-    "c_nationkey = s_nationkey locality condition rides the supplier join "
-    "as a key, not a post-filter",
+    "five BroadcastHashJoins at this sf (customer and lineitem fit the "
+    "broadcast threshold; at scale the orders and lineitem edges shuffle, "
+    "AQE picks by size); the c_nationkey = s_nationkey locality condition "
+    "rides the supplier join as a second key, not a post-filter",
     "the Q5 six-way star: only fact-fact edges exchange; dims broadcast; "
     "the final aggregate is |nations| rows",
 )
