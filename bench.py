@@ -52,7 +52,6 @@ BENCH_QUERIES = [
     "sessionize",
     # r3 curation additions
     "repetition_ngrams",
-    "repetition_ngrams_fast",
     "decontamination",
     "domain_filter_caps",
     # r4 curation additions
@@ -174,10 +173,9 @@ BENCH_QUERIES = [
     "data_expectations",
     "leakage_safe_split",
     "split_assignment_pinning",
-    # r9 additions: the oracled fixed-parameter twins (BPE encode under
-    # a hard-coded merge table; BLAS SemDeDup under lowest-id centroids)
+    # r9 additions: the oracled fixed-parameter BPE encode under a
+    # hard-coded merge table
     "bpe_encode_fixed",
-    "semdedup_fast_fixed",
     # r9 additions: the ANN index lifecycle (append + streaming ingest)
     "ivf_index_increment",
     "stream_ann_ingest_exec",
@@ -400,7 +398,8 @@ def main() -> None:
     # records ("parsed": null) because the line inlined 50-63 per-query
     # entries (~4 KB) and overflowed the driver's stdout-tail capture.
     # ALL per-query data (cold/warm per query + plan fingerprints) lives
-    # in BENCH_DETAIL.json, which is committed and drift-gated.
+    # in BENCH_DETAIL.json, a committed record of the last run: no test
+    # or tool reads it back.
     detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
     detail_path.write_text(
         json.dumps(

@@ -5,76 +5,26 @@ Classic Sennrich et al. 2016 BPE over whitespace words: start from
 characters (+ an end-of-word marker), repeatedly merge the most
 frequent adjacent symbol pair.
 
-Two trainers, identical results (pinned in tests/test_bpe.py):
-- :func:`learn_bpe_merges_fast` — the PRODUCTION path: one Spark scan
-  for the word-frequency table, one bounded vocabulary-sized collect,
-  then driver-side incremental merge induction (pair->count deltas +
-  lazy-deletion heap). A 32k-64k-merge vocabulary trains in seconds;
-  the corpus-side encode (:func:`bpe_token_counts`) stays distributed.
-- :func:`learn_bpe_merges` — the fully distributed reference form,
-  one Spark job round per merge; keeps the whole vocabulary on the
-  cluster, so it remains the fallback if the vocabulary ever exceeds
-  driver memory. Its distributed shape:
+:func:`learn_bpe_merges` runs one Spark scan for the word-frequency
+table, one bounded vocabulary-sized collect, then driver-side
+incremental merge induction (:func:`py_bpe_train`: pair->count deltas
++ lazy-deletion heap). A 32k-64k-merge vocabulary trains in seconds;
+the corpus-side encode (:func:`bpe_token_counts`) stays distributed.
 
-- ONE corpus pass builds the word-frequency table; every later round
-  runs on that VOCABULARY-sized table (unique words), never on the
-  corpus again — the same contraction in-memory trainers exploit,
-  kept distributed so a 100M-row web vocabulary still fits the
-  cluster instead of one machine's RAM.
-- each round is: explode adjacent pairs weighted by word count ->
-  partial-combine hash agg -> TakeOrdered(1) for the argmax pair
-  (count desc, then lexicographic — fully deterministic) -> rewrite
-  the symbol arrays with a Catalyst fold (left-to-right,
-  non-overlapping, standard BPE semantics). No Python in the row
-  path; ``localCheckpoint`` per round truncates the growing lineage
-  exactly like operators/graph's label loop.
-
-Correctness is pinned against a pure-Python reference implementation
-in tests/test_bpe.py (exact merge-sequence equality); no SQL oracle —
-DuckDB cannot express the per-round argmax loop, so the registry entry
-is rows-only by design.
+Correctness is pinned against a naive pure-Python reference in
+tests/test_bpe.py (exact merge-sequence equality) and, end to end, by
+the ``bpe_merges`` registry oracle: a DuckDB replay of the whole
+training loop that reproduces the merge sequence bit-for-bit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_app_spark.functions.text import tokenize
 
 EOW = "</w>"
-
-
-def _sql_str(s: str) -> str:
-    """SQL single-quoted string literal of *s* (backslash escaping) —
-    BPE symbols come from real text, so quotes/backslashes must not
-    break the parsed merge expression."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _merge_in_symbols(sym: str, left: str, right: str) -> Column:
-    """Replace every left-to-right non-overlapping adjacent (left,
-    right) pair in the ``sym`` array column with the concatenated
-    symbol — one Catalyst fold, no UDF. The accumulator carries
-    (out, skip): skip marks that the current element was consumed as
-    the pair's right half. Built as ONE parsed SQL string: the nested
-    when/struct Column loop this replaces paid ~25 py4j round-trips
-    per learned merge (r12); semantics identical (same fold, same
-    null-safe right-hand compare, same empty-array guard)."""
-    left_s, right_s = _sql_str(left), _sql_str(right)
-    merged_s = _sql_str(left + right)
-    fold = (
-        f"aggregate(sequence(0, size({sym}) - 1), "
-        "struct(cast(array() as array<string>) as out, false as skip), "
-        "(acc, i) -> CASE WHEN acc.skip THEN struct(acc.out as out, false as skip) "
-        f"WHEN element_at({sym}, i + 1) = {left_s} "
-        f"AND element_at({sym}, i + 2) <=> {right_s} "
-        f"THEN struct(concat(acc.out, array({merged_s})) as out, true as skip) "
-        f"ELSE struct(concat(acc.out, array(element_at({sym}, i + 1))) as out, "
-        "false as skip) END, a -> a.out)"
-    )
-    # empty arrays: sequence(0, -1) counts DOWN in Spark — guard them
-    return F.expr(f"IF(size({sym}) > 0, {fold}, {sym})")
 
 
 def word_frequency_table(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -161,7 +111,7 @@ def py_bpe_train(
     word_counts: dict[str, int], n_merges: int
 ) -> tuple[list[tuple[str, str]], dict[str, list[str]]]:
     """Exact Sennrich merge induction over a word-frequency dict —
-    the driver-side trainer behind :func:`learn_bpe_merges_fast`.
+    the driver-side trainer behind :func:`learn_bpe_merges`.
 
     Same semantics as the naive textbook loop (max pair count, ties to
     the lexicographically smallest (left, right); per-merge left-to-
@@ -234,32 +184,28 @@ def py_bpe_train(
     return merges, vocab
 
 
-def learn_bpe_merges_fast(
+def learn_bpe_merges(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 20,
     max_vocab: int = 5_000_000,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Vocabulary-scale BPE training (VERDICT r4 item 3): ONE corpus
-    scan builds the word-frequency table, which is collected to the
-    driver ONCE — it is vocabulary-sized, not corpus-sized, the same
-    bounded-side-channel class as partition counts or IVF centroids —
-    and merge induction runs driver-side in pure Python
+    """Learn ``n_merges`` BPE merges; returns (ordered merge list,
+    final [word, count, symbols] vocabulary DataFrame). Stops early
+    when no adjacent pair remains (fully merged corpus).
+
+    ONE corpus scan builds the word-frequency table, which is collected
+    to the driver ONCE — it is vocabulary-sized, not corpus-sized, the
+    same bounded-side-channel class as partition counts or IVF
+    centroids — and merge induction runs driver-side in pure Python
     (:func:`py_bpe_train`). A 32k-64k-merge production vocabulary is
-    then seconds of driver CPU instead of one Spark job per merge
-    (the distributed :func:`learn_bpe_merges` loop stays available as
-    the reference form, and encode via :func:`bpe_token_counts` stays
-    fully distributed).
+    then seconds of driver CPU instead of one Spark job per merge.
 
     ``max_vocab`` guards the collect (limit max_vocab+1, raise on
     overflow with the cause): 5M distinct words x ~20 bytes is ~100 MB
     of driver heap — a real web corpus's post-normalization vocabulary
     fits; if yours doesn't, cap it upstream (frequency floor) like
-    every production tokenizer trainer does.
-
-    Returns (ordered merge list, final [word, count, symbols]
-    vocabulary DataFrame) — same contract and same exact results as
-    :func:`learn_bpe_merges` (pinned in tests/test_bpe.py)."""
+    every production tokenizer trainer does."""
     spark = df.sparkSession
     rows = (
         word_frequency_table(df, text_col)
@@ -269,7 +215,7 @@ def learn_bpe_merges_fast(
     )
     if len(rows) > max_vocab:
         raise ValueError(
-            f"learn_bpe_merges_fast: vocabulary exceeds max_vocab={max_vocab}; "
+            f"learn_bpe_merges: vocabulary exceeds max_vocab={max_vocab}; "
             "apply a frequency floor upstream or raise the bound explicitly"
         )
     wc = {r[0]: int(r[1]) for r in rows}
@@ -279,39 +225,3 @@ def learn_bpe_merges_fast(
         "w string, count long, symbols array<string>",
     )
     return merges, out
-
-
-def learn_bpe_merges(
-    df: DataFrame, text_col: str = "text", n_merges: int = 20
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn ``n_merges`` BPE merges; returns (ordered merge list,
-    final [word, count, symbols] vocabulary table). Stops early when
-    no adjacent pair remains (fully merged corpus)."""
-    words = word_frequency_table(df, text_col).localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    # one parsed SQL string per iteration (py4j construction — r12)
-    pair_explode = (
-        "explode(transform(sequence(0, size(symbols) - 2), i -> "
-        "struct(element_at(symbols, cast(i + 1 as int)) as l, "
-        "element_at(symbols, cast(i + 2 as int)) as r)))"
-    )
-    for _ in range(n_merges):
-        pairs = (
-            words.where(F.size("symbols") >= 2)
-            .select("count", F.expr(pair_explode).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("count").alias("n"))
-        )
-        top = pairs.orderBy(F.col("n").desc(), "l", "r").limit(1).collect()
-        if not top:
-            break
-        left, right = top[0].l, top[0].r
-        merges.append((left, right))
-        # LAZY checkpoint: the next iteration's top-pair collect (or
-        # the caller's first action on the returned table) materializes
-        # it — one Spark job per learned merge instead of two (r12);
-        # lineage still never grows past one merge step
-        words = words.withColumn(
-            "symbols", _merge_in_symbols("symbols", left, right)
-        ).localCheckpoint(eager=False)
-    return merges, words

@@ -74,6 +74,7 @@ def ngram_repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     ns: tuple[int, ...] = (2, 3, 4),
+    repartition_to: int | None = None,
 ) -> DataFrame:
     """Gopher-style intra-document n-gram repetition profile, long form:
     [id, n, n_ngrams, n_distinct, dup_frac, top_frac] — one row per doc
@@ -83,100 +84,42 @@ def ngram_repetition_stats(
     top_frac  = count(most frequent n-gram) / n_ngrams (loop detector)
 
     The Gopher paper gates docs where either fraction is high (templated
-    or looping text). Scale shape: ONE scan builds every n's grams into
-    a single exploded stream, then two keyed hash aggregations (partial
-    combine on (id, n, gram), final on (id, n)) — no window over the
-    gram key, no per-doc quadratic HOF.
-    """
-    # tokenize ONCE and slice the shared array per n (ngrams_from_tokens
-    # rationale); factories, not default-arg lambdas — F.transform treats
-    # a two-parameter lambda as (element, index) and would silently pass
-    # the array index into n
-    toks = F.col("_toks")
-
-    def tagged(n: int):
-        return F.transform(
-            ngrams_from_tokens(toks, n),
-            lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
-        )
-
-    per_n = [tagged(n) for n in ns]
-    exploded = (
-        df.select(F.col(id_col), tokenize(text_col).alias("_toks"))
-        .select(F.col(id_col), F.explode(F.flatten(F.array(*per_n))).alias("t"))
-        .select(id_col, F.col("t.n").alias("n"), F.col("t.gram").alias("gram"))
-    )
-    counts = exploded.groupBy(id_col, "n", "gram").agg(F.count("*").alias("c"))
-    stats = counts.groupBy(id_col, "n").agg(
-        F.sum("c").alias("n_ngrams"),
-        F.count("*").alias("n_distinct"),
-        F.max("c").alias("top_count"),
-    )
-    return stats.select(
-        id_col,
-        "n",
-        "n_ngrams",
-        "n_distinct",
-        ((F.col("n_ngrams") - F.col("n_distinct")).cast("double") / F.col("n_ngrams")).alias(
-            "dup_frac"
-        ),
-        (F.col("top_count").cast("double") / F.col("n_ngrams")).alias("top_frac"),
-    )
-
-
-def ngram_repetition_stats_vectorized(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple[int, ...] = (2, 3, 4),
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """Vectorized twin of ngram_repetition_stats — the minhash_fast
-    playbook (dedup.py): one mapInPandas pass computes every doc's full
-    repetition profile in the kernel, so the operator is a PURE MAP —
-    no explode, no gram-keyed aggregation, zero shuffle (the Catalyst
-    form pays one exchange on (id, n, gram) partials).
+    or looping text). Scale shape: a PURE MAP — one mapInPandas pass
+    computes every doc's full profile in the kernel, with no explode, no
+    gram-keyed aggregation and no shuffle.
 
     Kernel: tokens via ``text.lower().split()`` (the engine's tokenize
-    contract), token hash via zlib.crc32, shingles as a numpy rolling
-    polynomial combine, multiplicities via np.unique(return_counts).
-    Gram identity is BY HASH (mod 1e9+7): two distinct grams colliding
-    would merge their counts — vanishingly unlikely per doc and pinned
-    equal to the exact Catalyst form on the test corpora
-    (tests/test_operators.py); the Catalyst form stays the oracle
-    surface.
+    contract); a per-doc dict maps each distinct token to a small int
+    id, and an n-gram is its row of n ids, counted with
+    ``np.unique(axis=0)``. Gram identity is the exact token sequence,
+    so distinct grams never merge.
     """
     import numpy as np
     import pandas as pd
+    from numpy.lib.stride_tricks import sliding_window_view
 
-    P = 1_000_003
-    MOD = 1_000_000_007
     ns = tuple(ns)
 
     def run(batches):
-        from zlib import crc32
-
         for pdf in batches:
             out = {c: [] for c in (id_col, "n", "n_ngrams", "n_distinct", "top_count")}
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                # null text == no tokens (the Catalyst twin emits no
-                # rows for it; an unguarded .lower() would kill the job)
+                # null text == no tokens (an unguarded .lower() would
+                # kill the job)
                 toks = (text or "").lower().split()
-                if not toks:
-                    continue
-                th = np.fromiter(
-                    (crc32(t.encode("utf-8")) for t in toks),
+                vocab: dict[str, int] = {}
+                ids = np.fromiter(
+                    (vocab.setdefault(t, len(vocab)) for t in toks),
                     dtype=np.int64,
                     count=len(toks),
-                ) % MOD
+                )
                 for n in ns:
                     m = len(toks) - n + 1
                     if m <= 0:
                         continue
-                    sh = th[:m].copy()
-                    for j in range(1, n):
-                        sh = (sh * P + th[j : m + j]) % MOD
-                    _, counts = np.unique(sh, return_counts=True)
+                    _, counts = np.unique(
+                        sliding_window_view(ids, n), axis=0, return_counts=True
+                    )
                     out[id_col].append(doc_id)
                     out["n"].append(n)
                     out["n_ngrams"].append(m)
@@ -188,8 +131,10 @@ def ngram_repetition_stats_vectorized(
     base = df.select(id_col, text_col)
     if repartition_to:
         base = base.repartition(repartition_to)
+    id_type = df.schema[id_col].dataType.simpleString()
     stats = base.mapInPandas(
-        run, f"{id_col} long, n int, n_ngrams long, n_distinct long, top_count long"
+        run,
+        f"{id_col} {id_type}, n int, n_ngrams long, n_distinct long, top_count long",
     )
     return stats.select(
         id_col,

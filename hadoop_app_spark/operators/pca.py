@@ -5,11 +5,10 @@ is standard ahead of IVF/PQ indexes).
 
 Beyond-reference surface (north star similarity family). The Spark
 shape is the classic bounded-moment trick:
-- mean and the d x d Gram matrix are ONE aggregation each — the Gram
-  accumulates as d*(d+1)/2 upper-triangle sums via a posexplode
-  self-pair expansion with map-side partial combine, so only
-  O(d^2) numbers ever reach the driver (d = 64 -> 2,080 doubles),
-  never a row;
+- count, sum and the d x d Gram matrix come from ONE pass: each Arrow
+  batch emits a single partial row (one BLAS X^T X, kept as its
+  d*(d+1)/2 upper triangle), so only O(d^2) numbers per batch ever
+  reach the driver (d = 64 -> 2,080 doubles), never a row;
 - the eigendecomposition of the d x d covariance runs driver-side in
   numpy (microseconds — it is d x d, not n x n);
 - projection/whitening back over the corpus is a single narrow map
@@ -46,74 +45,11 @@ def _require_clean_vectors(df: DataFrame, vec_col: str, d: int) -> None:
 def embedding_moments(
     df: DataFrame, vec_col: str = "embedding"
 ) -> tuple[list[float], list[list[float]], int]:
-    """(mean, covariance, n) of the vector column via two bounded
-    aggregations: a d-element mean and a d*(d+1)/2-element raw-moment
-    upper triangle (posexplode to (i, x_i), conditional self-join-free
-    pair expansion inside ONE groupBy with partial combine)."""
-    n = df.count()
-    if n == 0:
-        raise ValueError("empty corpus")
-    first = df.where(F.col(vec_col).isNotNull()).select(vec_col).head()
-    if first is None:
-        raise ValueError(f"all values of {vec_col!r} are NULL")
-    d = len(first[0])
-    _require_clean_vectors(df, vec_col, d)
-    # float32 storage would lose mass in the products — accumulate in
-    # double from the first multiply
-    vec = F.col(vec_col).cast("array<double>")
-    # d-element mean: posexplode -> (dim, avg)
-    mean_rows = (
-        df.select(F.posexplode(vec).alias("i", "x"))
-        .groupBy("i")
-        .agg(F.avg("x").alias("m"))
-        .collect()
-    )
-    mean = [0.0] * d
-    for r in mean_rows:
-        mean[r["i"]] = float(r["m"])
-    # upper-triangle raw second moments: expand each row's vector into
-    # its (i, j>=i, x_i*x_j) triples with one transform/flatten, then
-    # one hash aggregation — O(d^2/2) keys, map-side combined
-    pairs = F.flatten(
-        F.transform(
-            vec,
-            lambda xi, i: F.transform(
-                F.slice(vec, i + 1, F.size(vec) - i),
-                lambda xj, j: F.struct(
-                    i.alias("i"), (i + j).alias("j"), (xi * xj).alias("p")
-                ),
-            ),
-        )
-    )
-    mom_rows = (
-        df.select(F.explode(pairs).alias("t"))
-        .select(F.col("t.i").alias("i"), F.col("t.j").alias("j"), F.col("t.p").alias("p"))
-        .groupBy("i", "j")
-        .agg(F.sum("p").alias("s"))
-        .collect()
-    )
-    cov = [[0.0] * d for _ in range(d)]
-    for r in mom_rows:
-        i, j = int(r["i"]), int(r["j"])
-        # E[x_i x_j] - mu_i mu_j, filled symmetrically
-        v = float(r["s"]) / n - mean[i] * mean[j]
-        cov[i][j] = v
-        cov[j][i] = v
-    return mean, cov, n
-
-
-def embedding_moments_fast(
-    df: DataFrame, vec_col: str = "embedding"
-) -> tuple[list[float], list[list[float]], int]:
-    """Vectorized twin of :func:`embedding_moments` — the production
-    moments pass: each Arrow batch emits ONE tiny partial row
-    (count, d-element sum, d*(d+1)/2 upper-triangle Gram via a single
-    BLAS X^T X) instead of d*(d+1)/2 exploded structs PER CORPUS ROW;
-    partials combine driver-side (bounded: one row per batch).
-    Float accumulation order differs from the Catalyst form (SIMD
-    pairwise vs hash-agg order), so moments agree to ~1e-12 relative,
-    not bit-exact — equality at that tolerance is pytest-pinned, and
-    PCA components are engine-seeded state either way."""
+    """(mean, covariance, n) of the vector column in one pass: each
+    Arrow batch emits ONE tiny partial row (count, d-element sum,
+    d*(d+1)/2 upper-triangle Gram via a single BLAS X^T X) and the
+    partials combine driver-side (bounded: one row per batch). The
+    covariance is the population one, E[xx^T] - mu mu^T."""
     import numpy as np
     import pandas as pd
 
@@ -155,19 +91,17 @@ def embedding_moments_fast(
 
 
 def train_pca(
-    df: DataFrame, vec_col: str = "embedding", k: int = 8, vectorized: bool = True
+    df: DataFrame, vec_col: str = "embedding", k: int = 8
 ) -> tuple[list[float], list[list[float]], list[float]]:
     """(mean, components [k x d], eigenvalues [k]) — covariance from
-    :func:`embedding_moments_fast` (default; pass ``vectorized=False``
-    for the pure-Catalyst moments), eigendecomposition driver-side
-    (numpy, d x d). Components are unit-norm rows, eigenvalues
+    :func:`embedding_moments`, eigendecomposition driver-side (numpy,
+    d x d). Components are unit-norm rows, eigenvalues
     descending; signs normalized so each component's largest-|coord|
     entry is positive (removes the eigenvector sign ambiguity, making
     trained state reproducible for a fixed plan)."""
     import numpy as np
 
-    moments = embedding_moments_fast if vectorized else embedding_moments
-    mean, cov, _ = moments(df, vec_col)
+    mean, cov, _ = embedding_moments(df, vec_col)
     w, v = np.linalg.eigh(np.array(cov))  # ascending
     order = np.argsort(w)[::-1][:k]
     comps = []
@@ -245,8 +179,8 @@ def project_fixed_basis(
     k: int = 8,
     scale: int = 1000,
 ) -> DataFrame:
-    """The PCA family's oracle-exact face (the pq_ann_topk_fixed /
-    semdedup_fast_fixed convention): project integer-quantized
+    """The PCA family's oracle-exact face (the pq_ann_topk_fixed
+    convention): project integer-quantized
     embeddings onto the first ``k`` Walsh-Hadamard rows with n-scaled
     EXACT centering — same plan shape as trained PCA (one bounded
     per-dimension moment aggregate, rotation broadcast as plan

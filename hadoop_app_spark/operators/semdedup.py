@@ -10,42 +10,49 @@ duplicate group keep the example with the LOWEST cosine similarity
 to its cluster centroid (retain hard/atypical examples, drop the
 redundant prototypical ones).
 
-Decomposition here (pure Catalyst; one bounded collect):
+Decomposition here (one bounded collect, two numpy kernels):
 1. centroids: the ``n_clusters`` lowest-id vectors (deterministic
    farthest-thing-from-random seeding is deliberately NOT used so the
    DuckDB oracle can recompute the centroids with ORDER BY/LIMIT; at
    deployment scale pass ``centroid_source`` = trained IVF centroids
    from operators/similarity.train_ivf_centroids — same plan shape);
-2. assignment: per-row argmax of cosine to the inlined centroid
-   matrix — a narrow map, ties to the lowest centroid id;
-3. duplicate test: self-join ON THE CLUSTER KEY only (the SemDeDup
-   trick — pairwise cosine is quadratic per cluster, never corpus-
-   wide), pair predicate cos(x, y) >= threshold;
+2. assignment: the centroids travel as ONE broadcast (k, d) float64
+   ndarray and each Arrow batch pays one BLAS matmul + argmax — a
+   narrow map, ties to the lowest centroid id;
+3. duplicate test: ONE exchange on the cluster key, then a per-cluster
+   kernel (the SemDeDup trick — pairwise cosine is quadratic per
+   cluster, never corpus-wide) computes the pairwise cosines as a
+   blocked matmul;
 4. keep rule: drop x iff some same-cluster y with cos >= threshold
    ranks before it under (centroid_sim ASC, id ASC) — i.e. the
    LOWEST-centroid-sim member of every duplicate group survives.
 
 Scale shape (100 TB): the centroid collect is n_clusters rows
 (n_clusters grows with the corpus — it is the knob that bounds
-cluster population and hence the per-cluster quadratic); assignment
-never shuffles; the only exchange is the hash partition on the int
-cluster key; the assigned frame is localCheckpoint-materialized once
-for the self-join's two sides and the survivor anti-join.
+cluster population and hence the per-cluster quadratic, and growing
+it grows only the broadcast, never the plan); assignment never
+shuffles; the only exchange is the hash partition on the cluster key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from hadoop_app_spark.functions.vectors import cosine_similarity, matrix_lit
 
-# Past this, the inlined-literal assignment path is the wrong tool:
-# the plan carries n_clusters x dim doubles as ONE literal and every
-# row pays an O(n_clusters) interpreted lambda — use the numpy twin
-# (assign_clusters_fast), whose cost per row is one BLAS matmul slice
-# and whose centroids travel as a broadcast variable, not plan text.
-MAX_INLINE_CLUSTERS = 2048
+def _unit_rows(vectors, d: int | None = None):
+    """Row-normalized float64 matrix of an embedding column. A NULL
+    vector counts as ``d`` zeros (default: the first non-null vector's
+    length): cosine 0.0 to everything, as
+    functions.vectors.cosine_similarity scores it."""
+    import numpy as np
+
+    vectors = list(vectors)
+    if any(v is None for v in vectors):
+        if d is None:
+            d = next((len(v) for v in vectors if v is not None), 0)
+        vectors = [np.zeros(d) if v is None else v for v in vectors]
+    x = np.array(vectors, dtype=np.float64)
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
 
 
 def assign_clusters(
@@ -57,111 +64,14 @@ def assign_clusters(
 ) -> DataFrame:
     """-> (id, vec, cluster, csim): nearest-centroid assignment by
     cosine. ``cluster`` is the centroid's OWN id (stable across runs
-    and engines, unlike a positional index); ``csim`` the cosine to
-    it. Centroids default to the n_clusters lowest-id rows of *df*."""
-    if n_clusters > MAX_INLINE_CLUSTERS:
-        raise ValueError(
-            f"n_clusters={n_clusters} exceeds the inlined-literal ceiling "
-            f"({MAX_INLINE_CLUSTERS}); use assign_clusters_fast (broadcast "
-            "ndarray + blocked matmul) for production cluster counts"
-        )
-    src = centroid_source if centroid_source is not None else df
-    cents = [
-        (r[0], [float(x) for x in r[1]])
-        for r in src.orderBy(id_col).limit(n_clusters).select(id_col, vec_col).collect()
-    ]
-    if not cents:
-        raise ValueError("empty centroid source")
-    matrix = matrix_lit([v for _, v in cents])
-    # cluster carries the centroid's id, so it keeps id_col's exact type
-    # (string ids work; int ids don't silently widen to long) — the same
-    # contract the _fast twin derives from the schema (ADVICE r5)
-    cent_ids = F.lit([i for i, _ in cents]).cast(
-        f"array<{df.schema[id_col].dataType.simpleString()}>"
-    )
-    sims = F.transform(matrix, lambda c: cosine_similarity(F.col(vec_col), c))
-    # first max = lowest centroid id; element_at needs an int index
-    best = F.array_position(sims, F.array_max(sims)).cast("int")
-    return df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.element_at(cent_ids, best).alias("cluster"),
-        F.array_max(sims).alias("csim"),
-    )
+    and engines, unlike a positional index) and keeps ``id_col``'s
+    type; ``csim`` the cosine to it. Centroids default to the
+    n_clusters lowest-id rows of *df*.
 
-
-def semdedup_survivors(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    threshold: float = 0.85,
-    centroid_source: DataFrame | None = None,
-) -> DataFrame:
-    """-> (id, cluster): rows surviving SemDeDup at ``threshold``.
-
-    Within each cluster, x is dropped iff some other member y has
-    cos(x, y) >= threshold and (y.csim, y.id) < (x.csim, x.id) —
-    so exactly one member of every duplicate group (the one least
-    similar to the centroid = hardest example) survives, and
-    unclustered duplicates (cos >= threshold but different clusters)
-    are NOT dropped, faithfully to the published algorithm.
-    """
-    assigned = assign_clusters(
-        df, id_col, vec_col, n_clusters, centroid_source
-    ).localCheckpoint(eager=False)
-    x = assigned.select(
-        F.col(id_col).alias("_xid"),
-        F.col(vec_col).alias("_xv"),
-        F.col("cluster"),
-        F.col("csim").alias("_xs"),
-    )
-    y = assigned.select(
-        F.col(id_col).alias("_yid"),
-        F.col(vec_col).alias("_yv"),
-        F.col("cluster"),
-        F.col("csim").alias("_ys"),
-    )
-    ranked_before = (F.col("_ys") < F.col("_xs")) | (
-        (F.col("_ys") == F.col("_xs")) & (F.col("_yid") < F.col("_xid"))
-    )
-    dropped = (
-        x.join(y, "cluster")
-        .where(
-            (F.col("_xid") != F.col("_yid"))
-            & ranked_before
-            & (cosine_similarity("_xv", "_yv") >= F.lit(threshold))
-        )
-        .select(F.col("_xid").alias(id_col))
-        .distinct()
-    )
-    return assigned.join(dropped, id_col, "left_anti").select(id_col, "cluster")
-
-
-def assign_clusters_fast(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    centroid_source: DataFrame | None = None,
-) -> DataFrame:
-    """Vectorized twin of :func:`assign_clusters` — the production
-    assignment path past MAX_INLINE_CLUSTERS (VERDICT r4 "What's
-    wrong #2"): centroids travel as ONE broadcast (k, d) float64
-    ndarray instead of a plan literal, and each Arrow batch pays a
-    single BLAS matmul + argmax instead of n_clusters interpreted
-    lambdas per row. argmax takes the FIRST maximum, and the centroid
-    rows are collected in ascending id order, so ties resolve to the
-    lowest centroid id exactly like the HOF form. Cosine accumulation
-    order differs (SIMD pairwise vs left fold), so sub-ulp near-ties
-    can assign differently — survivor-set equality vs the HOF form is
-    pinned in pytest on the real corpus; the HOF form stays the oracle
-    surface.
-
-    Scale shape: no shuffle — one corpus scan, k*d*8 bytes broadcast
-    once per executor, O(batch x k x d) BLAS per batch. Growing
-    n_clusters with the corpus (the knob that bounds the per-cluster
-    quadratic) now grows only the broadcast, never the plan."""
+    argmax takes the FIRST maximum and the centroid rows are collected
+    in ascending id order, so ties resolve to the lowest centroid id.
+    No shuffle: one corpus scan, k*d*8 bytes broadcast once per
+    executor, O(batch x k x d) BLAS per batch."""
     import numpy as np
     import pandas as pd
 
@@ -169,12 +79,8 @@ def assign_clusters_fast(
     cents = src.orderBy(id_col).limit(n_clusters).select(id_col, vec_col).collect()
     if not cents:
         raise ValueError("empty centroid source")
-    # id/cluster dtypes derive from the frame like vec_col does, so the
-    # contract matches the HOF twin for non-integral (e.g. string) ids
-    # instead of silently casting to long (ADVICE r5)
     cid = np.asarray([r[0] for r in cents])
-    cmat = np.array([list(r[1]) for r in cents], dtype=np.float64)
-    cnorm = cmat / np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-300)
+    cnorm = _unit_rows(r[1] for r in cents)
     bc = df.sparkSession.sparkContext.broadcast((cid, cnorm))
     id_t = df.schema[id_col].dataType.simpleString()
     vec_t = df.schema[vec_col].dataType.simpleString()
@@ -185,9 +91,7 @@ def assign_clusters_fast(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-            sims = xn @ bcn.T  # (batch, k)
+            sims = _unit_rows(pdf[vec_col], bcn.shape[1]) @ bcn.T  # (batch, k)
             best = sims.argmax(axis=1)
             yield pd.DataFrame(
                 {
@@ -201,7 +105,7 @@ def assign_clusters_fast(
     return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
 
 
-def semdedup_survivors_fast(
+def semdedup_survivors(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -210,26 +114,27 @@ def semdedup_survivors_fast(
     centroid_source: DataFrame | None = None,
     block_rows: int = 1024,
 ) -> DataFrame:
-    """Vectorized twin of :func:`semdedup_survivors`: fast assignment
-    (broadcast centroids, BLAS argmax), then the within-cluster
-    duplicate test as ONE applyInPandas kernel per cluster — members
-    sorted by (csim asc, id asc), pairwise cosine via blocked matmul,
-    x dropped iff any strictly-earlier y has cos >= threshold. Same
-    keep rule, same tie order, same single exchange on the int cluster
-    key as the Catalyst self-join — but each cluster's quadratic runs
-    as numpy blocks instead of a joined row explosion with an
-    interpreted HOF cosine per pair.
+    """-> (id, cluster): rows surviving SemDeDup at ``threshold``.
 
+    Within each cluster, x is dropped iff some other member y has
+    cos(x, y) >= threshold and (y.csim, y.id) < (x.csim, x.id) —
+    so exactly one member of every duplicate group (the one least
+    similar to the centroid = hardest example) survives, and
+    unclustered duplicates (cos >= threshold but different clusters)
+    are NOT dropped, faithfully to the published algorithm.
+
+    The test runs as ONE applyInPandas kernel per cluster: members
+    sorted by (csim asc, id asc), pairwise cosine via blocked matmul,
+    x dropped iff any strictly-earlier y has cos >= threshold.
     ``block_rows`` bounds kernel memory at block_rows x cluster_size
     doubles; cluster population itself is bounded by growing
-    n_clusters with the corpus (the SemDeDup contract). Survivor-set
-    equality with the HOF form is pinned in pytest; this twin is
-    bench/pipeline surface, not oracle surface."""
+    n_clusters with the corpus (the SemDeDup contract)."""
     import numpy as np
     import pandas as pd
 
-    assigned = assign_clusters_fast(df, id_col, vec_col, n_clusters, centroid_source)
-    out_schema = f"{id_col} long, cluster long"
+    assigned = assign_clusters(df, id_col, vec_col, n_clusters, centroid_source)
+    id_t = df.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_t}, cluster {id_t}"
 
     def keep(pdf: "pd.DataFrame") -> "pd.DataFrame":
         m = len(pdf)
@@ -238,8 +143,7 @@ def semdedup_survivors_fast(
         order = np.lexsort((pdf[id_col].to_numpy(), pdf["csim"].to_numpy()))
         ids = pdf[id_col].to_numpy()[order]
         clus = pdf["cluster"].to_numpy()[order]
-        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)[order]
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
+        xn = _unit_rows(pdf[vec_col])[order]
         dropped = np.zeros(m, dtype=bool)
         for s in range(0, m, block_rows):
             e = min(s + block_rows, m)
@@ -247,7 +151,7 @@ def semdedup_survivors_fast(
             rows = np.arange(s, e)[:, None]
             cols = np.arange(e)[None, :]
             # y must rank STRICTLY before x; dropped y still drop x
-            # (matches the published rule and the Catalyst form)
+            # (the published rule)
             dropped[s:e] = ((sims >= threshold) & (cols < rows)).any(axis=1)
         keep_mask = ~dropped
         return pd.DataFrame({id_col: ids[keep_mask], "cluster": clus[keep_mask]})

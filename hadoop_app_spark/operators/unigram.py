@@ -6,7 +6,7 @@ Same split as the BPE trainer (VERDICT r5 item 4):
   state, never the corpus again) via :func:`bpe.word_frequency_table`;
 - the EM induction runs DRIVER-SIDE in pure Python over the collected
   vocabulary (:func:`py_unigram_train`), guarded by ``max_vocab``
-  exactly like ``learn_bpe_merges_fast`` — vocabulary-sized work is
+  exactly like ``learn_bpe_merges`` — vocabulary-sized work is
   the bounded-side-channel class, not cluster work;
 - the corpus-side encode (:func:`unigram_token_counts`) stays fully
   distributed: an Arrow-batched mapInPandas Viterbi segmenter with a
@@ -329,7 +329,7 @@ def learn_unigram_fast(
     top_words: int | None = None,
 ) -> tuple[dict[str, float], DataFrame]:
     """One corpus scan -> guarded vocabulary collect -> driver-side EM
-    (:func:`py_unigram_train`) — the learn_bpe_merges_fast contract.
+    (:func:`py_unigram_train`) — the learn_bpe_merges contract.
     Returns (piece -> log-prob dict, [piece, score] DataFrame).
 
     ``top_words``: train on only the N highest-count words

@@ -104,7 +104,7 @@ def learn_wordpiece(
     top_words: int | None = None,
 ) -> tuple[list[tuple[str, str]], set[str], DataFrame]:
     """One corpus scan -> guarded vocabulary collect -> driver-side
-    induction (the learn_bpe_merges_fast contract). Returns
+    induction (the learn_bpe_merges contract). Returns
     (ordered merges, final piece set, [word, count, symbols] frame).
 
     ``top_words``: train on only the N highest-count words

@@ -198,21 +198,21 @@ def curate(
     near_deduped = deduped.join(losers, "doc_id", "left_anti")
     near_deduped, obs["near_deduped"] = observe_counts(near_deduped)
 
-    # 4b. optional semantic dedup (SemDeDup rung, the vectorized
-    # production path): embeddings are first restricted to the current
-    # survivor set (semi join on id — SemDeDup must not resurrect or
-    # re-judge docs earlier rungs removed), then clustered + pruned;
+    # 4b. optional semantic dedup (SemDeDup rung): embeddings are first
+    # restricted to the current survivor set (semi join on id — SemDeDup
+    # must not resurrect or re-judge docs earlier rungs removed), then
+    # clustered + pruned;
     # the surviving vec_ids semi-join back. Centroid collection inside
-    # assign_clusters_fast is the documented bounded side-channel.
+    # assign_clusters is the documented bounded side-channel.
     if embeddings is not None:
-        from hadoop_app_spark.operators.semdedup import semdedup_survivors_fast
+        from hadoop_app_spark.operators.semdedup import semdedup_survivors
 
         emb_alive = embeddings.join(
             near_deduped.select(F.col("doc_id")),
             embeddings["vec_id"] == F.col("doc_id"),
             "left_semi",
         )
-        sem_keep = semdedup_survivors_fast(
+        sem_keep = semdedup_survivors(
             emb_alive,
             "vec_id",
             "embedding",

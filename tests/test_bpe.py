@@ -1,9 +1,9 @@
 """BPE merge induction vs a pure-Python reference implementation.
 
 The reference is the textbook Sennrich et al. algorithm on a word-
-frequency dict; the Spark form must produce the IDENTICAL ordered
-merge sequence and final segmentations (same tie-break: max count,
-then lexicographic (left, right))."""
+frequency dict; the trainer must produce the IDENTICAL ordered merge
+sequence and final segmentations (same tie-break: max count, then
+lexicographic (left, right))."""
 
 from __future__ import annotations
 
@@ -93,7 +93,7 @@ def test_bpe_stops_when_fully_merged(spark):
 
 
 def test_fast_trainer_matches_reference_synthetic(spark):
-    from hadoop_app_spark.operators.bpe import learn_bpe_merges_fast, py_bpe_train
+    from hadoop_app_spark.operators.bpe import py_bpe_train
 
     texts = [
         "low lower lowest low low",
@@ -106,20 +106,11 @@ def test_fast_trainer_matches_reference_synthetic(spark):
     # driver-side incremental trainer == naive reference, exactly
     py_merges, py_vocab = py_bpe_train(dict(counts), 12)
     assert py_merges == ref_merges and py_vocab == ref_vocab
-    # end-to-end fast path == reference too
-    merges, words = learn_bpe_merges_fast(df, "text", n_merges=12)
+    # end-to-end trainer == reference too
+    merges, words = learn_bpe_merges(df, "text", n_merges=12)
     assert merges == ref_merges
     got = {r.w: list(r.symbols) for r in words.collect()}
     assert got == ref_vocab
-
-
-def test_fast_trainer_matches_distributed_on_corpus(spark):
-    from hadoop_app_spark.operators.bpe import learn_bpe_merges_fast
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    slow_merges, _ = learn_bpe_merges(docs, "text", n_merges=8)
-    fast_merges, _ = learn_bpe_merges_fast(docs, "text", n_merges=8)
-    assert fast_merges == slow_merges
 
 
 def test_fast_trainer_deep_merge_sequence(spark):
@@ -140,8 +131,7 @@ def test_fast_trainer_deep_merge_sequence(spark):
 
 def test_fast_trainer_vocab_guard(spark):
     import pytest
-    from hadoop_app_spark.operators.bpe import learn_bpe_merges_fast
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     with pytest.raises(ValueError, match="max_vocab"):
-        learn_bpe_merges_fast(docs, "text", n_merges=2, max_vocab=5)
+        learn_bpe_merges(docs, "text", n_merges=2, max_vocab=5)

@@ -711,6 +711,10 @@ def test_ngram_repetition_stats(spark):
             (1, "go go go go go"),  # pure loop: every 2-gram is "go go"
             (2, "one two three four five"),  # all n-grams unique
             (3, "x"),  # too short for any n in (2,3,4)
+            (4, ""),  # no tokens at all
+            # crc32("w4288") == crc32("w6366") mod 1e9+7: a hashed gram
+            # key would merge "x w4288" with "x w6366"
+            (5, "x w4288 x w6366"),
         ],
         "doc_id long, text string",
     )
@@ -724,36 +728,21 @@ def test_ngram_repetition_stats(spark):
     # doc 2: no repetition at any n
     assert all(out[(2, n)].dup_frac == 0.0 for n in (2, 3, 4))
     assert out[(2, 2)].top_frac == 1.0 / 4.0
-    # doc 3 emits no rows (no n-grams at any n)
-    assert not any(k[0] == 3 for k in out)
+    # docs 3 and 4 emit no rows (no n-grams at any n)
+    assert not any(k[0] in (3, 4) for k in out)
+    # doc 5: three distinct 2-grams, none repeated
+    r = out[(5, 2)]
+    assert (r.n_ngrams, r.n_distinct, r.dup_frac, r.top_frac) == (3, 3, 0.0, 1.0 / 3.0)
+    assert (out[(5, 3)].n_ngrams, out[(5, 3)].n_distinct) == (2, 2)
 
-
-def test_ngram_repetition_stats_vectorized_parity(spark):
-    """The crc32 mapInPandas twin reproduces the exact Catalyst profile
-    on real data (static corpus: if the hashes don't collide here, they
-    never will) and on the synthetic edge cases above."""
-    from hadoop_app_spark.operators.corpus import (
-        ngram_repetition_stats,
-        ngram_repetition_stats_vectorized,
-    )
-
-    def rows(df):
-        return {
-            (r.doc_id, r.n): (r.n_ngrams, r.n_distinct, r.dup_frac, r.top_frac)
-            for r in df.collect()
-        }
-
-    edge = spark.createDataFrame(
-        [(1, "go go go go go"), (2, "one two three four five"), (3, "x"), (4, "")],
-        "doc_id long, text string",
-    )
-    assert rows(ngram_repetition_stats_vectorized(edge, "text", "doc_id")) == rows(
-        ngram_repetition_stats(edge, "text", "doc_id")
-    )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    slow = rows(ngram_repetition_stats(docs, "text", "doc_id"))
-    fast = rows(ngram_repetition_stats_vectorized(docs, "text", "doc_id"))
-    assert slow == fast and len(slow) > 0
+    # the id column keeps its type (here string) instead of being forced to long
+    named = spark.createDataFrame([("a", "go go go")], "doc_id string, text string")
+    got = ngram_repetition_stats(named, "text", "doc_id")
+    assert dict(got.dtypes)["doc_id"] == "string"
+    assert {(r.doc_id, r.n, r.n_ngrams, r.n_distinct) for r in got.collect()} == {
+        ("a", 2, 2, 1),
+        ("a", 3, 1, 1),
+    }
 
 
 def test_decontamination(spark):

@@ -280,3 +280,52 @@ def test_sql_text_frame_keeps_its_sf_dir(spark):
     frames = [qd.fn(spark, sf) for sf in sf_dirs]
     assert len(frames[1].collect()) == want[1]
     assert len(frames[0].collect()) == want[0]
+
+
+def test_sql_text_entry_restores_caller_views(spark):
+    """Running a SQL-text entry leaves the session's temp views as it
+    found them: a caller's view under a catalog table name comes back,
+    a view the call created is dropped, and no step starts a Spark job."""
+    import duckdb
+
+    from hadoop_app_spark.catalog import load_table
+    from hadoop_app_spark.queries import REGISTRY
+    from tests.test_catalog import SF_DIRS, _group_jobs
+
+    small, big = SF_DIRS[:2]  # sf0.001, sf0.01
+    want = duckdb.sql(f"SELECT count(*) FROM '{small}/lineitem.parquet'").fetchone()[0]
+    load_table(spark, small, "lineitem").createOrReplaceTempView("lineitem")
+    spark.catalog.dropTempView("orders")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("sql-text-views", "one SQL-text entry")
+        REGISTRY["shipping_priority"].fn(spark, big)  # customer, orders, lineitem
+        jobs = _group_jobs(sc, "sql-text-views")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert spark.sql("SELECT count(*) FROM lineitem").collect()[0][0] == want
+    assert not spark.catalog.tableExists("orders")
+    spark.catalog.dropTempView("lineitem")
+
+
+# entries whose operator had two kernels and now has one, plus the names
+# of the dropped twins, which are aliases of the same entry
+FOLDED_KERNEL_ENTRIES = (
+    "semdedup",
+    "semdedup_fast_fixed",
+    "repetition_ngrams",
+    "repetition_ngrams_fast",
+    "bpe_merges",
+    "bpe_token_count",
+)
+
+
+@pytest.mark.parametrize("name", FOLDED_KERNEL_ENTRIES)
+def test_folded_kernel_entries_match_oracle(spark, name):
+    """Each folded operator's one kernel reproduces its DuckDB oracle
+    exactly at sf0.01."""
+    from tests.test_recall import SF as sf_dir
+
+    _assert_matches_oracle(spark, name, sf_dir)

@@ -86,35 +86,18 @@ def test_whiten_requires_eigenvalues(spark):
         project_pca(emb, mean, comps, None, whiten=True)
 
 
-def test_fast_moments_match_exact(spark):
-    from hadoop_app_spark.operators.pca import embedding_moments_fast
-
-    emb, X = _np_corpus(spark)
-    m1, c1, n1 = embedding_moments(emb)
-    m2, c2, n2 = embedding_moments_fast(emb)
-    assert n1 == n2
-    assert np.allclose(m1, m2, atol=1e-12)
-    assert np.allclose(np.array(c1), np.array(c2), atol=1e-10)
-
-
 def test_moments_reject_null_and_ragged_vectors(spark):
-    from pyspark.sql import functions as F
-
-    from hadoop_app_spark.operators.pca import embedding_moments, embedding_moments_fast
-
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, None), (3, [3.0, 4.0])],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="NULL"):
         embedding_moments(df)
-    with pytest.raises(ValueError, match="NULL"):
-        embedding_moments_fast(df)
     ragged = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError):
-        embedding_moments_fast(ragged)
+        embedding_moments(ragged)
 
 
 def test_fixed_basis_projection_matches_numpy(spark):

@@ -9,6 +9,7 @@ import math
 import pytest
 
 from hadoop_app_spark.operators.semdedup import assign_clusters, semdedup_survivors
+from tests.semdedup_hof import assign_clusters_hof, semdedup_survivors_hof
 
 
 def _mk(spark, rows):
@@ -89,9 +90,7 @@ def test_empty_centroids_raise(spark):
 SF = "/root/testdata/sf0.001"
 
 
-def test_fast_assignment_parity_constructed(spark):
-    from hadoop_app_spark.operators.semdedup import assign_clusters_fast
-
+def test_assignment_constructed_keeps_int_type(spark):
     rows = [
         (0, [1.0, 0.0]),
         (1, [0.0, 1.0]),
@@ -99,41 +98,23 @@ def test_fast_assignment_parity_constructed(spark):
         (3, [0.1, 0.9]),
         (4, [0.0, 0.0]),
     ]
-    slow = {r.vec_id: r.cluster for r in assign_clusters(_mk(spark, rows), n_clusters=2).collect()}
-    fast = {r.vec_id: r.cluster for r in assign_clusters_fast(_mk(spark, rows), n_clusters=2).collect()}
-    assert fast == slow
-
-
-def test_fast_survivors_equal_hof_on_corpus(spark):
-    # the VERDICT r4 item-2 pin: identical survivor set on the real
-    # embedding corpus at the gated settings (same lowest-id centroids)
-    from hadoop_app_spark.operators.semdedup import semdedup_survivors_fast
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    slow = {
-        (r.vec_id, r.cluster)
-        for r in semdedup_survivors(emb, n_clusters=8, threshold=0.35).collect()
-    }
-    fast = {
-        (r.vec_id, r.cluster)
-        for r in semdedup_survivors_fast(emb, n_clusters=8, threshold=0.35).collect()
-    }
-    assert fast == slow
+    df = assign_clusters(_mk(spark, rows), n_clusters=2)
+    # cluster is the centroid's own id, so it keeps the int id type
+    assert dict(df.dtypes)["cluster"] == "int"
+    assert {r.vec_id: r.cluster for r in df.collect()} == {0: 0, 1: 1, 2: 0, 3: 1, 4: 0}
 
 
 def test_fast_survivors_blocked_kernel_equivalence(spark):
     # block_rows smaller than any cluster forces the blocked code path;
     # results must not change
-    from hadoop_app_spark.operators.semdedup import semdedup_survivors_fast
-
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     whole = {
         (r.vec_id, r.cluster)
-        for r in semdedup_survivors_fast(emb, n_clusters=4, threshold=0.35).collect()
+        for r in semdedup_survivors(emb, n_clusters=4, threshold=0.35).collect()
     }
     blocked = {
         (r.vec_id, r.cluster)
-        for r in semdedup_survivors_fast(
+        for r in semdedup_survivors(
             emb, n_clusters=4, threshold=0.35, block_rows=3
         ).collect()
     }
@@ -141,12 +122,11 @@ def test_fast_survivors_blocked_kernel_equivalence(spark):
 
 
 def test_fast_with_trained_centroids_runs(spark):
-    from hadoop_app_spark.operators.semdedup import semdedup_survivors_fast
     from hadoop_app_spark.operators.similarity import train_ivf_centroids
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = train_ivf_centroids(emb, n_centroids=4, iters=1)
-    out = semdedup_survivors_fast(
+    out = semdedup_survivors(
         emb, n_clusters=4, threshold=0.35, centroid_source=cents
     ).collect()
     n = emb.count()
@@ -155,53 +135,60 @@ def test_fast_with_trained_centroids_runs(spark):
 
 
 def test_fast_survivors_equal_hof_with_trained_centroids(spark):
-    # ADVICE r5: the lowest-id-centroid pin above does not cover the
-    # q_semdedup_fast configuration (TRAINED centroids). Feed BOTH
-    # paths the SAME trained centroid frame so the trained arm itself
-    # is pinned equal, not just the default configuration.
-    from hadoop_app_spark.operators.semdedup import semdedup_survivors_fast
+    # The semdedup registry oracle only covers the lowest-id centroids.
+    # Trained centroids (the semdedup_fast configuration) have no SQL
+    # twin, so the Catalyst HOF reference in tests/semdedup_hof.py,
+    # fed the SAME trained centroid frame, checks that arm.
     from hadoop_app_spark.operators.similarity import train_ivf_centroids
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = train_ivf_centroids(emb, n_centroids=8, iters=2).cache()
     cents.count()  # materialize once: both paths must see identical floats
-    slow = {
+    ref = {
+        (r.vec_id, r.cluster)
+        for r in semdedup_survivors_hof(
+            emb, n_clusters=8, threshold=0.35, centroid_source=cents
+        ).collect()
+    }
+    got = {
         (r.vec_id, r.cluster)
         for r in semdedup_survivors(
             emb, n_clusters=8, threshold=0.35, centroid_source=cents
         ).collect()
     }
-    fast = {
-        (r.vec_id, r.cluster)
-        for r in semdedup_survivors_fast(
-            emb, n_clusters=8, threshold=0.35, centroid_source=cents
-        ).collect()
-    }
-    assert fast == slow
+    assert got == ref
 
 
 def test_fast_preserves_string_id_type(spark):
-    # ADVICE r5: non-integral id columns must flow through both twins
-    # with the id (and cluster) type preserved, not crash on int().
-    from hadoop_app_spark.operators.semdedup import assign_clusters_fast
-
+    # non-integral id columns flow through assignment AND the survivor
+    # kernel with the id (and cluster) type preserved
     rows = [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    slow_df = assign_clusters(df, n_clusters=2)
-    fast_df = assign_clusters_fast(df, n_clusters=2)
-    assert dict(slow_df.dtypes) == dict(fast_df.dtypes)
-    assert dict(fast_df.dtypes)["cluster"] == "string"
-    slow = {(r.vec_id, r.cluster) for r in slow_df.collect()}
-    fast = {(r.vec_id, r.cluster) for r in fast_df.collect()}
+    assigned = assign_clusters(df, n_clusters=2)
+    assert dict(assigned.dtypes) == dict(assign_clusters_hof(df, n_clusters=2).dtypes)
+    assert dict(assigned.dtypes)["cluster"] == "string"
     # centroids = 2 lowest ids ("a","b"); each assigns to itself, and
     # "c"=[0,1] is orthogonal to "a" so it lands in "b"
-    assert fast == slow == {("a", "a"), ("b", "b"), ("c", "b")}
+    assert {(r.vec_id, r.cluster) for r in assigned.collect()} == {
+        ("a", "a"), ("b", "b"), ("c", "b"),
+    }
+    # in cluster "b", cos(b, c) ~ 0.11 >= 0.1 and "c" is farther from
+    # the centroid, so "c" survives and "b" drops
+    surv = semdedup_survivors(df, n_clusters=2, threshold=0.1)
+    assert dict(surv.dtypes) == {"vec_id": "string", "cluster": "string"}
+    got = {(r.vec_id, r.cluster) for r in surv.collect()}
+    ref = semdedup_survivors_hof(df, n_clusters=2, threshold=0.1)
+    assert got == {(r.vec_id, r.cluster) for r in ref.collect()} == {("a", "a"), ("c", "b")}
 
 
-def test_inline_assignment_ceiling_raises(spark):
-    from hadoop_app_spark.operators.semdedup import MAX_INLINE_CLUSTERS
-
-    with pytest.raises(ValueError, match="assign_clusters_fast"):
-        assign_clusters(
-            _mk(spark, [(0, [1.0, 0.0])]), n_clusters=MAX_INLINE_CLUSTERS + 1
-        )
+def test_null_embedding_scores_like_zero_vector(spark):
+    # a NULL vector has cosine 0.0 to everything, as in
+    # functions.vectors.cosine_similarity: it joins the first centroid
+    # and never counts as anyone's duplicate
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 0.01])]
+    df = _mk(spark, rows)
+    out = {r.vec_id: (r.cluster, r.csim) for r in assign_clusters(df, n_clusters=2).collect()}
+    assert out[2] == (0, 0.0)
+    got = {(r.vec_id, r.cluster) for r in semdedup_survivors(df, n_clusters=2, threshold=0.9).collect()}
+    ref = semdedup_survivors_hof(df, n_clusters=2, threshold=0.9)
+    assert got == {(r.vec_id, r.cluster) for r in ref.collect()} == {(1, 1), (2, 0), (3, 0)}
