@@ -9,17 +9,21 @@ Reference shape (UserHotcar.java:42-200, UserNewcar.java:42-199):
      score = 1 - (dist-min)/(max-min), keep top-K (100 hotcar / 60 newcar)
   -> emit ``userId_cityId \\x01 {"infoids": "id@score,..."}``
 
-Spark plan: explode(cities) -> join(broadcast(city_cars)) ->
-explode(cars is already row-per-car from the source) -> window
-min/max/row_number -> filter rn<=K -> ordered re-assembly -> to_json.
-One Exchange total (hash by user_id,city_id for the window); the
+Spark plan: explode(cities) -> join(broadcast(city_cars)) -> ONE
+aggregation per (user_id, city_id): min/max dist over the full group
+plus ``slice(sort_array(collect_list(struct(dist, info_id))), 1, K)``
+-> the output line is formatted straight from that sorted array. One
+shuffle Exchange (hash by user_id, city_id) and no window: the
+combiner-style per-group selection of the reference's reducer; the
 broadcast replaces the distributed-cache machinery wholesale.
+``recommend_cars`` derives its row-per-car shape from the same array
+with ``posexplode`` (rank = pos + 1).
 
 Scale notes (100 TB): the side input is bounded (~300 cities,
-BASELINE.md) -> broadcast is safe. The window partitions by
-(user_id, city_id) — high cardinality, so no skew concentration; AQE
-skew-join handles a hot city in the join stage. Top-K via row_number
-never materializes more than a partition at a time.
+BASELINE.md) -> broadcast is safe. The aggregation key (user_id,
+city_id) has high cardinality, so no skew concentration; AQE skew-join
+handles a hot city in the join stage. Like the reference's reducer,
+each group is buffered and sorted whole (one user x one city's cars).
 
 Bug-compat flags (SURVEY §1.3):
   first_city_only — reproduce the split("$") regex no-op (§1.3.2)
@@ -30,7 +34,7 @@ Bug-compat flags (SURVEY §1.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_app_spark.functions.metrics import observe_counts
@@ -40,6 +44,38 @@ from hadoop_app_spark.sources.sinks import write_text_lines
 
 HOTCAR_TOP_K = 100  # UserHotcar.java:32 HOTCAR_NUM
 NEWCAR_TOP_K = 60  # UserNewcar.java:33 TOP_60
+
+
+def _ranked_groups(profiles: DataFrame, city_cars: DataFrame, top_k: int) -> DataFrame:
+    """[user_id, city_id, min_d, max_d, top]: one row per (user, city),
+    min/max dist over the whole group, ``top`` the first K
+    struct<dist, info_id> in (dist, info_id) order — nulls first and NaN
+    last, as an ascending sort orders them."""
+    return (
+        profiles.join(F.broadcast(city_cars), "city_id")
+        .selectExpr("user_id", "city_id", "named_struct('dist', abs(fav_price - price), 'info_id', info_id) AS car")
+        .groupBy("user_id", "city_id")
+        .agg(
+            F.expr("min(car.dist) AS min_d"),
+            F.expr("max(car.dist) AS max_d"),
+            F.expr(f"slice(sort_array(collect_list(car)), 1, {top_k}) AS top"),
+        )
+    )
+
+
+def _score(dist: Column, nan_compat: bool) -> Column:
+    return min_max_score(dist, F.col("min_d"), F.col("max_d"), nan_compat)
+
+
+def _car_rows(groups: DataFrame, nan_compat: bool) -> DataFrame:
+    return groups.select("user_id", "city_id", "min_d", "max_d", F.posexplode("top")).select(
+        "user_id",
+        "city_id",
+        "col.info_id",
+        "col.dist",
+        _score(F.col("col.dist"), nan_compat).alias("score"),
+        (F.col("pos") + 1).alias("rank"),
+    )
 
 
 def recommend_cars(
@@ -54,49 +90,16 @@ def recommend_cars(
     city_cars: [city_id, info_id, price]
     returns    [user_id, city_id, info_id, dist, score, rank]
     """
-    joined = profiles.join(F.broadcast(city_cars), "city_id", "inner").withColumn(
-        "dist", F.abs(F.col("fav_price") - F.col("price"))
-    )
-    grp = Window.partitionBy("user_id", "city_id")
-    ordered = grp.orderBy(F.col("dist").asc(), F.col("info_id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(ordered))
-        .withColumn("min_d", F.min("dist").over(grp))
-        .withColumn("max_d", F.max("dist").over(grp))
-        .where(F.col("rank") <= top_k)
-        .select(
-            "user_id",
-            "city_id",
-            "info_id",
-            "dist",
-            min_max_score(F.col("dist"), F.col("min_d"), F.col("max_d"), nan_compat).alias("score"),
-            "rank",
-        )
-    )
+    return _car_rows(_ranked_groups(profiles, city_cars, top_k), nan_compat)
 
 
-def assemble_output(recs: DataFrame) -> DataFrame:
-    """Re-assemble the reference's output lines:
+def assemble_output(groups: DataFrame, nan_compat: bool) -> DataFrame:
+    """Format the reference's output lines from the ranked groups:
     ``user_id + "_" + city_id \\x01 {"infoids": "id@score,..."}``
     (UserHotcar.java:195-199) — items in rank order."""
-    pairs = recs.select(
-        "user_id",
-        "city_id",
-        F.struct(F.col("rank"), F.concat_ws("@", F.col("info_id"), F.col("score").cast("string")).alias("pair")).alias(
-            "rp"
-        ),
-    )
-    return (
-        pairs.groupBy("user_id", "city_id")
-        .agg(F.array_sort(F.collect_list("rp")).alias("rps"))
-        .select(
-            F.concat_ws("_", "user_id", "city_id").alias("key"),
-            F.to_json(
-                F.struct(F.concat_ws(",", F.transform(F.col("rps"), lambda s: s["pair"])).alias("infoids"))
-            ).alias("payload"),
-        )
-        .select(F.concat_ws("\x01", "key", "payload").alias("value"))
-    )
+    pairs = F.transform("top", lambda c: F.concat_ws("@", c["info_id"], _score(c["dist"], nan_compat).cast("string")))
+    payload = F.to_json(F.struct(F.concat_ws(",", pairs).alias("infoids")))
+    return groups.select(F.concat_ws("\x01", F.concat_ws("_", "user_id", "city_id"), payload).alias("value"))
 
 
 def _run(
@@ -119,13 +122,14 @@ def _run(
         # (user, preferred city) row entering the join — the unit the
         # reference's mapper iterates
         profiles, observations["user_count"] = observe_counts(profiles)
-    recs = recommend_cars(profiles, cars, top_k=top_k, nan_compat=nan_compat)
+    groups = _ranked_groups(profiles, cars, top_k)
     if observations is not None:
         # HOTCAR_COUNT twin (UserHotcar.java:98): recommendations emitted
-        recs, observations["rec_count"] = observe_counts(recs)
+        obs = observations["rec_count"] = Observation()
+        groups = groups.observe(obs, F.expr("coalesce(sum(size(top)), 0) AS rows"))
     if out_path is not None:
-        write_text_lines(assemble_output(recs), out_path)
-    return recs
+        write_text_lines(assemble_output(groups, nan_compat), out_path)
+    return _car_rows(groups, nan_compat)
 
 
 def run_user_hotcar(

@@ -6871,7 +6871,7 @@ def q_source_codecs(spark, sf_dir):
         ).alias("infoidlist")
     )
     micro = (
-        encoded.select("p_brand", F.explode(decode_at_pairs(F.col("infoidlist"), ",")).alias("pair"))
+        encoded.select("p_brand", F.explode(decode_at_pairs("infoidlist", ",")).alias("pair"))
         .groupBy("p_brand")
         .agg(
             F.count("*").alias("n"),

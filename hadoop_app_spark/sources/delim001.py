@@ -13,45 +13,44 @@ Reference bug (SURVEY §1.3.2): Java ``split("$")`` is a regex no-op, so
 only the FIRST city is ever used. ``first_city_only=True`` reproduces
 that; the default implements the intended explode-all-cities semantics.
 
-Spark-first: read.csv(sep='\\x01') + F.from_json with declared structs;
-the encoded lists become ArrayType via F.split + transform — all
-JVM-side expressions, no Python in the row path.
+Spark-first: every plan is built from parsed SQL text — ``selectExpr``
+/ ``where`` strings, a DDL schema for ``from_json``, and one SQL
+template for the ``id@val`` codec, fanned out with ``inline`` — so a
+reader is a handful of Dataset steps, all JVM-side expressions, no
+Python in the row path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from hadoop_app_spark.functions.metrics import observe_counts
+from hadoop_app_spark.sources.tsv import _split_sql
 
-PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "bycar_profile",
-            T.StructType(
-                [
-                    T.StructField("cityid", T.StringType()),
-                    T.StructField("priceid", T.StringType()),
-                ]
-            ),
-        )
-    ]
-)
+PROFILE_SCHEMA = "bycar_profile struct<cityid: string, priceid: string>"
 
-CARLIST_SCHEMA = T.StructType([T.StructField("infoidlist", T.StringType())])
+CARLIST_SCHEMA = "infoidlist string"
+
+# array<struct<id: string, val: string>> from an "a@b<sep>a@b..." list;
+# get() gives a null val for an item without '@' where [1] would raise
+_AT_PAIRS = "transform({items}, p -> named_struct('id', split(p, '@', -1)[0], 'val', get(split(p, '@', -1), 1)))"
+
+
+def _at_pairs_sql(src: str, list_sep: str) -> str:
+    return _AT_PAIRS.format(items=_split_sql(src, list_sep))
 
 
 def read_delim001_json(
     spark: SparkSession,
     path: str | list[str],
-    json_schema: T.StructType,
+    json_schema: str,
     key_name: str = "key",
     observations: dict[str, Observation] | None = None,
 ) -> DataFrame:
     """Generic ``key \\x01 json`` reader -> DataFrame[key, doc: struct].
 
+    json_schema is a DDL string (``"a string, b struct<c: int>"``).
     Rows with < 2 fields are dropped (reference arity check,
     UserHotcar.java:46-48). Extra \\x01 fields beyond the second are
     ignored, matching ``split("\\x01")[1]`` indexing.
@@ -60,39 +59,23 @@ def read_delim001_json(
     observed A4 counter — stored under ``<key_name>_source`` with
     metrics ``rows`` (in) and ``malformed_dropped``.
     """
-    lines = spark.read.text(path)
-    parts = F.split(F.col("value"), "\x01", -1)
-    staged = lines.select(parts.alias("_p"))
+    staged = spark.read.text(path).selectExpr(f"{_split_sql('value', chr(1))} AS _p")
     if observations is not None:
-        staged, obs = observe_counts(staged, malformed_dropped=F.size("_p") < 2)
+        staged, obs = observe_counts(staged, malformed_dropped=F.expr("size(_p) < 2"))
         observations[f"{key_name}_source"] = obs
-    return (
-        staged.where(F.size("_p") >= 2)
-        .select(
-            F.col("_p").getItem(0).alias(key_name),
-            F.from_json(F.col("_p").getItem(1), json_schema).alias("doc"),
-        )
+    return staged.where("size(_p) >= 2").selectExpr(
+        f"_p[0] AS `{key_name}`", f"from_json(_p[1], '{json_schema}') AS doc"
     )
 
 
-def decode_at_pairs(col: F.Column, list_sep: str) -> F.Column:
-    """Decode an ``"a@b<sep>a@b..."`` encoded list into
-    array<struct<id: string, val: string>> — the engine's reusable codec
-    for the reference's two micro-formats."""
-    from hadoop_app_spark.sources.tsv import _escape_regex
-
-    sep = _escape_regex(list_sep)  # split() takes a REGEX — '|' or '.'
-    # unescaped would split between every character
-    return F.transform(
-        F.split(col, sep, -1),
-        lambda p: F.struct(
-            F.split(p, "@", -1).getItem(0).alias("id"),
-            F.split(p, "@", -1).getItem(1).alias("val"),
-        ),
-    )
+def decode_at_pairs(src: str, list_sep: str) -> Column:
+    """Decode the ``"a@b<sep>a@b..."`` list in SQL expression ``src``
+    (e.g. a column name) into array<struct<id: string, val: string>> —
+    the engine's reusable codec for the reference's two micro-formats."""
+    return F.expr(_at_pairs_sql(src, list_sep))
 
 
-def encode_at_pairs(id_col: F.Column, val_col: F.Column) -> F.Column:
+def encode_at_pairs(id_col: Column, val_col: Column) -> Column:
     """Inverse codec for one pair: ``id@val``."""
     return F.concat_ws("@", id_col, val_col)
 
@@ -110,32 +93,21 @@ def read_user_profiles(
     first_city_only reproduces the split("$") regex bug (§1.3.2).
     """
     raw = read_delim001_json(spark, path, PROFILE_SCHEMA, key_name="user_id", observations=observations)
-    prof = raw.select(
-        "user_id",
-        F.col("doc.bycar_profile.cityid").alias("cityid_enc"),
-        F.coalesce(F.col("doc.bycar_profile.priceid").try_cast("double"), F.lit(0.0)).alias("fav_price"),
-    ).where(F.col("cityid_enc").isNotNull())
+    fav_price = "coalesce(try_cast(doc.bycar_profile.priceid AS double), 0D) AS fav_price"
     if first_city_only:
         # bug-compat: whole cityid string survives split('$'); only
         # split('@')[0] is used as the city id, score is [1] of pair 1
-        first = F.split(F.col("cityid_enc"), "@", -1)
-        return prof.select(
+        return raw.selectExpr(
             "user_id",
-            first.getItem(0).alias("city_id"),
-            F.lit(None).cast("double").alias("city_score"),
-            "fav_price",
-        )
-    cities = decode_at_pairs(F.col("cityid_enc"), "$")
-    return (
-        prof.select("user_id", F.explode(cities).alias("c"), "fav_price")
-        .select(
-            "user_id",
-            F.col("c.id").alias("city_id"),
-            F.col("c.val").try_cast("double").alias("city_score"),
-            "fav_price",
-        )
-        .where(F.col("city_id") != "")
-    )
+            "split(doc.bycar_profile.cityid, '@', -1)[0] AS city_id",
+            "CAST(NULL AS double) AS city_score",
+            fav_price,
+        ).where("city_id IS NOT NULL")
+    return raw.selectExpr(
+        "user_id", f"inline({_at_pairs_sql('doc.bycar_profile.cityid', '$')})", fav_price
+    ).selectExpr(
+        "user_id", "id AS city_id", "try_cast(val AS double) AS city_score", "fav_price"
+    ).where("city_id != ''")
 
 
 def read_city_cars(
@@ -156,14 +128,6 @@ def read_city_cars(
         else:
             path = [f"{p}/dt={dt}" for p in path]
     raw = read_delim001_json(spark, path, CARLIST_SCHEMA, key_name="city_id", observations=observations)
-    cars = decode_at_pairs(F.col("doc.infoidlist"), ",")
-    return (
-        raw.where(F.col("doc.infoidlist").isNotNull())
-        .select("city_id", F.explode(cars).alias("car"))
-        .select(
-            "city_id",
-            F.col("car.id").alias("info_id"),
-            F.col("car.val").try_cast("double").alias("price"),
-        )
-        .where(F.col("info_id") != "")
-    )
+    return raw.selectExpr("city_id", f"inline({_at_pairs_sql('doc.infoidlist', ',')})").selectExpr(
+        "city_id", "id AS info_id", "try_cast(val AS double) AS price"
+    ).where("info_id != ''")

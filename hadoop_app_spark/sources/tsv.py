@@ -58,27 +58,25 @@ def _read_tsv(
     strict_arity: bool,
     observe: bool,
 ) -> tuple[DataFrame, Observation | None]:
-    lines = spark.read.text(path)
-    parts = F.split(F.col("value"), _escape_regex(sep), -1)
-    df = lines.select(parts.alias("_parts"))
+    n = len(columns)
+    df = spark.read.text(path).selectExpr(f"{_split_sql('value', sep)} AS _parts")
     obs = None
     if observe:
-        df, obs = observe_counts(
-            df, malformed_dropped=F.size("_parts") != len(columns)
-        )
+        df, obs = observe_counts(df, malformed_dropped=F.expr(f"size(_parts) != {n}"))
     if strict_arity:
-        df = df.where(F.size("_parts") == len(columns))
-    out_cols = []
-    for i, (name, dtype) in enumerate(columns):
-        c = F.col("_parts").getItem(i)
-        if dtype != "string":
-            c = c.try_cast(dtype)  # null on unparseable (ANSI-safe)
-        out_cols.append(c.alias(name))
-    return df.select(*out_cols), obs
+        df = df.where(f"size(_parts) = {n}")
+    typed = (
+        # try_cast: null on unparseable (ANSI-safe)
+        f"_parts[{i}] AS `{name}`" if dtype == "string" else f"try_cast(_parts[{i}] AS {dtype}) AS `{name}`"
+        for i, (name, dtype) in enumerate(columns)
+    )
+    return df.selectExpr(*typed), obs
 
 
-def _escape_regex(sep: str) -> str:
-    """Spark F.split takes a Java regex (same pitfall as the reference's
-    String.split — SURVEY §1.3.2); escape literal metacharacters."""
-    specials = set("\\^$.|?*+()[]{}")
-    return "".join("\\" + ch if ch in specials else ch for ch in sep)
+def _split_sql(src: str, sep: str) -> str:
+    """SQL text of ``split(src, sep, -1)`` for a LITERAL separator.
+    split() takes a Java regex (same pitfall as the reference's
+    String.split — SURVEY §1.3.2), so metacharacters are escaped before
+    the pattern is quoted as a SQL string literal."""
+    regex = "".join("\\" + ch if ch in "\\^$.|?*+()[]{}" else ch for ch in sep)
+    return "split({}, '{}', -1)".format(src, regex.replace("\\", "\\\\").replace("'", "\\'"))

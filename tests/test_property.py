@@ -37,7 +37,7 @@ def test_at_pairs_roundtrip(spark, pairs):
     encoded = df.groupBy().agg(
         F.concat_ws(",", F.collect_list(encode_at_pairs(F.col("id"), F.col("val")))).alias("s")
     )
-    decoded = encoded.select(F.explode(decode_at_pairs(F.col("s"), ",")).alias("p")).select(
+    decoded = encoded.select(F.explode(decode_at_pairs("s", ",")).alias("p")).select(
         F.col("p.id").cast("long").alias("id"), F.col("p.val").alias("val")
     )
     got = sorted((r.id, r.val) for r in decoded.collect())

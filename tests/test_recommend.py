@@ -353,3 +353,161 @@ def test_corpus_pipeline_dsir_stage(spark):
     assert c["dsir_selected"] == 2        # the stage counter fires
     assert c["final"] == 2
     assert c["near_deduped"] >= c["dsir_selected"]  # monotone ladder
+
+
+def _py_top_k(profile_lines, car_lines, top_k):
+    """Plain-Python reference of the window semantics: per (user, city)
+    row of the profiles, every car of that city; min/max dist over the
+    whole group; rank by (dist, info_id) with nulls first and NaN last;
+    score 1 - (d - min)/(max - min), NaN on a degenerate group."""
+
+    def num(s):
+        try:
+            return float(s)
+        except (TypeError, ValueError):
+            return None
+
+    cars = {}
+    for line in car_lines:
+        city, doc = line.split(SEP)
+        for item in json.loads(doc)["infoidlist"].split(","):
+            info_id, price = item.split("@")
+            cars.setdefault(city, []).append((info_id, num(price)))
+    groups = {}
+    for line in profile_lines:
+        user, doc = line.split(SEP)
+        prof = json.loads(doc)["bycar_profile"]
+        fav = num(prof["priceid"])
+        fav = 0.0 if fav is None else fav
+        for pair in prof["cityid"].split("$"):
+            city = pair.split("@")[0]
+            for info_id, price in cars.get(city, []):
+                dist = None if price is None else abs(fav - price)
+                groups.setdefault((user, city), []).append((dist, info_id))
+    out = {}
+    for key, cands in groups.items():
+        dists = [d for d, _ in cands if d is not None]
+        finite = [d for d in dists if not math.isnan(d)]
+        mn = (min(finite) if finite else math.nan) if dists else None
+        mx = (math.nan if len(finite) < len(dists) else max(finite)) if dists else None
+        order = sorted(cands, key=lambda c: (c[0] is not None, c[0] is not None and math.isnan(c[0]),
+                                             c[0] if c[0] is not None and not math.isnan(c[0]) else 0.0, c[1]))
+        rows = []
+        for rank, (d, info_id) in enumerate(order[:top_k], 1):
+            if d is None or mn is None:
+                score = None
+            elif mx == mn or math.isnan(mx) or math.isnan(mn):
+                score = math.nan
+            else:
+                score = 1.0 - (d - mn) / (mx - mn)
+            rows.append((info_id, d, score, rank))
+        out[key] = rows
+    return out
+
+
+def _norm(v):
+    return "NaN" if isinstance(v, float) and math.isnan(v) else (round(v, 9) if isinstance(v, float) else v)
+
+
+def test_top_k_matches_python_window_semantics(spark, tmp_path):
+    """Rows and text output equal a plain-Python reference of the
+    (user, city) window: nulls first (unparseable and empty price), NaN
+    last and propagating into max, dist ties broken by info_id, a city
+    listed twice by one user, a duplicated user line with another price,
+    and a city spread over two car lines."""
+    profile_lines = [
+        profile_line("u1", "1@0.9$2@0.5$2@0.3", "50"),  # city 2 listed twice
+        profile_line("u2", "2@1.0", "50"),
+        profile_line("u2", "2@1.0", "80"),  # duplicated user line, other price
+        profile_line("u3", "3@1.0$9@1.0", "abc"),  # fav 0.0; city 9 has no cars
+    ]
+    car_lines = [
+        cars_line("1", "a@xyz,b@90,e@NaN,c@110"),  # unparseable + NaN price
+        cars_line("2", "p@50,f@,q@70,r@30,s@70"),  # empty price; dist ties q/r/s
+        cars_line("2", "t@60"),  # city 2 on a second car line
+        cars_line("3", "z@10"),  # one car: degenerate group
+    ]
+    profiles = tmp_path / "p.txt"
+    profiles.write_text("\n".join(profile_lines + ["malformed"]) + "\n")
+    cars = tmp_path / "c.txt"
+    cars.write_text("\n".join(car_lines) + "\n")
+    out = str(tmp_path / "out")
+    recs = run_user_hotcar(spark, str(profiles), str(cars), out_path=out)
+    want = _py_top_k(profile_lines, car_lines, 100)
+    assert set(want) == {("u1", "1"), ("u1", "2"), ("u2", "2"), ("u3", "3")}
+    assert [i for i, *_ in want[("u1", "2")][:4]] == ["f", "f", "p", "p"]
+    assert [i for i, *_ in want[("u1", "1")]] == ["a", "b", "c", "e"]
+
+    got_rows = sorted(tuple(_norm(v) for v in r) for r in recs.collect())
+    want_rows = sorted(
+        tuple(_norm(v) for v in (u, c) + row) for (u, c), rows in want.items() for row in rows
+    )
+    assert got_rows == want_rows
+
+    import glob
+
+    lines = [l for f in glob.glob(out + "/part-*") for l in open(f, encoding="utf-8").read().splitlines()]
+    got_text = {}
+    for line in lines:
+        key, payload = line.split(SEP)
+        items = []
+        for item in json.loads(payload)["infoids"].split(","):
+            info_id, _, score = item.partition("@")  # a null score has no '@'
+            items.append((info_id, _norm(float(score)) if score else None))
+        got_text[key] = items
+    want_text = {f"{u}_{c}": [(i, _norm(s)) for i, _, s, _ in rows] for (u, c), rows in want.items()}
+    assert got_text == want_text
+
+
+def test_hotcar_write_plan_is_one_aggregation(spark, fixture_paths, tmp_path, monkeypatch):
+    """The write plan ranks each (user, city) in one aggregation: no
+    Window node, and one shuffle Exchange hash-partitioned on
+    (user_id, city_id) beside the side input's BroadcastExchange."""
+    from hadoop_app_spark.plans import recommend
+
+    written = []
+    write = recommend.write_text_lines
+
+    def capture(df, path):
+        written.append(df)
+        write(df, path)
+
+    monkeypatch.setattr(recommend, "write_text_lines", capture)
+    run_user_hotcar(spark, *fixture_paths, out_path=str(tmp_path / "out"))
+    plan = written[0]._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the initial plan, exchanges inserted
+
+    def nodes(n):
+        yield n
+        for i in range(n.children().size()):
+            yield from nodes(n.children().apply(i))
+
+    by_class = {}
+    for n in nodes(plan):
+        by_class.setdefault(n.getClass().getSimpleName(), []).append(n)
+    assert not [c for c in by_class if "Window" in c], sorted(by_class)
+    assert len(by_class.get("BroadcastExchangeExec", [])) == 1
+    shuffles = by_class.get("ShuffleExchangeExec", [])
+    assert len(shuffles) == 1, sorted(by_class)
+    part = shuffles[0].outputPartitioning()
+    assert part.getClass().getSimpleName() == "HashPartitioning"
+    keys = part.expressions()
+    assert [keys.apply(i).name() for i in range(keys.size())] == ["user_id", "city_id"]
+
+
+def test_pair_without_at_sign_reads_as_null_value(spark, tmp_path):
+    """An ``id@val`` item with no '@' decodes to a null val instead of
+    failing the whole read on an out-of-bounds array index."""
+    profiles = tmp_path / "p.txt"
+    profiles.write_text(profile_line("u", "1@1.0$2", "100") + "\n")
+    cars = tmp_path / "c.txt"
+    cars.write_text(cars_line("1", "a@90,b") + "\n")
+    assert sorted((r.city_id, r.city_score) for r in read_user_profiles(spark, str(profiles)).collect()) == [
+        ("1", 1.0),
+        ("2", None),
+    ]
+    assert sorted((r.info_id, r.price) for r in read_city_cars(spark, str(cars)).collect()) == [
+        ("a", 90.0),
+        ("b", None),
+    ]

@@ -125,3 +125,13 @@ def test_jsonl_roundtrip_and_corrupt_handling(spark, tmp_path):
     kept = read_jsonl(spark, bad, "doc_id long, lang string, text string", keep_corrupt=True)
     corrupt = kept.where(F.col("_corrupt_record").isNotNull()).collect()
     assert len(corrupt) == 1 and corrupt[0]._corrupt_record == "{not json"
+
+
+def test_read_tsv_metacharacter_separators(spark, tmp_path):
+    """A separator is split on literally: regex metacharacters, a
+    backslash and a quote survive the SQL text the reader is built from."""
+    for i, sep in enumerate(["|", ".", "$", "\\", "'", "\x01"]):
+        p = tmp_path / f"sep{i}.txt"
+        p.write_text(f"1{sep}a{sep}25\n3{sep}b\n")
+        df = read_tsv(spark, str(p), [("id", "int"), ("name", "string"), ("x", "long")], sep=sep)
+        assert [tuple(r) for r in df.collect()] == [(1, "a", 25)], repr(sep)
