@@ -63,7 +63,6 @@ BENCH_QUERIES = [
     "cluster_canonical",
     # r4 retrieval + hamming-banding additions
     "simhash_band_neardup",
-    "simhash_band_neardup_fast",
     "bm25_retrieval",
     "inverted_index",
     "lm_perplexity",

@@ -8,20 +8,23 @@ shuffle-efficient at 100 TB:
 - minhash: shingles -> k hash functions -> per-band bucket join. The
   candidate join is an equi-join on (band, band_hash) so only docs
   sharing a band bucket ever meet — never an O(n^2) cross product.
-- simhash: explode tokens -> one groupBy computing all bit-sums ->
-  bucket by simhash value (near-dup = equal 16-bit simhash here;
-  Hamming-distance banding is the same bucket-join with bit slices).
+- simhash: one mapInPandas pass per doc (salted crc32 token hashes,
+  numpy bit-sums, no shuffle) -> bucket by simhash value (near-dup =
+  equal 16-bit simhash here; Hamming-distance banding is the same
+  bucket-join with bit slices).
 - ngram_jaccard: pairwise only within candidate buckets.
 
-Hashing is an engine-agnostic polynomial hash (see
-functions.text.doc_fingerprint) so the DuckDB oracle can reproduce
-values bit-for-bit; a production swap-in would be xxhash64 (built-in,
-faster) at the cost of oracle-exactness, not semantics.
+Hashing uses public, fully specified functions the DuckDB oracles
+re-derive bit-for-bit: the polynomial fold of
+functions.text.doc_fingerprint (MinHash ``hash_fn="poly"``) and
+zlib.crc32 (the numpy MinHash and SimHash kernels). xxhash64 is the
+built-in, faster MinHash hash, at the cost of oracle-exactness, not
+semantics.
 
-All pure Catalyst expressions — no Python in the row path. At true
-100 TB the shingle/minhash stage is a candidate for a vectorized
-Pandas UDF if profiling shows the HOF chain dominating; semantics and
-shuffle shape stay identical.
+``minhash_signatures``, the banding joins and the index writes are
+Catalyst expressions. The SimHash fingerprint and
+``minhash_signatures_vectorized`` run Python (numpy) in the row path,
+one mapInPandas pass each.
 """
 
 from __future__ import annotations
@@ -648,124 +651,33 @@ def dedup_increment(
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
-    """16-bit SimHash over whitespace tokens.
-
-    explode tokens -> token hash -> per-doc bit-sums (one hash
-    aggregate, all ``bits`` sums computed in the same pass) ->
-    reassemble the fingerprint. SQL-expressible for the oracle.
-    The token hash gets the same post-fold :func:`_mix` as
-    :func:`simhash_wide`: a bare fold of a short token ("a" -> 97)
-    would leave bits 7..15 unanimously biased across the corpus and
-    inflate identical-fingerprint collisions.
-    """
-    toks = df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_tok"))
-    hashed = toks.select(id_col, _mix(_poly_hash(F.col("_tok"))).alias("_h"))
-    bit_sums = [
-        F.sum(F.when(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"_b{i}")
-        for i in range(bits)
-    ]
-    agg = hashed.groupBy(id_col).agg(*bit_sums)
-    fingerprint = sum(
-        (F.when(F.col(f"_b{i}") > 0, F.lit(2**i)).otherwise(F.lit(0)) for i in range(bits)),
-        F.lit(0),
-    )
-    return agg.select(id_col, fingerprint.cast("long").alias("simhash"))
-
-
-def _poly_hash37(col: Column) -> Column:
-    """Second independent token hash: same rolling fold as
-    ``doc_fingerprint`` but multiplier 37 — the poly hashes are mod
-    1e9+7 (< 2^30), so ONE fold carries at most ~30 bits of signal;
-    a wide simhash needs two independent folds. Engine-agnostic like
-    the first (plain int64 arithmetic, DuckDB-reproducible)."""
-    chars = F.split(col, "", -1)
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * 37 + F.ascii(ch)) % F.lit(_MOD).cast("long"),
-    )
-
-
-# post-fold mixing constants: a bare poly fold of a SHORT token ("a" ->
-# 97) leaves every bit above ~7 zero, which would make the upper
-# fingerprint bits unanimously 0 across the corpus and collapse the
-# effective Hamming space (measured: 13x the true near-pair count).
-# One multiply-add mod p spreads any fold output across the full ~30-bit
-# range and is plain int64 arithmetic the DuckDB oracle reproduces
-# (fold < 2^30, so fold * _MIX_A < 2^62 — no overflow in either engine).
-_MIX_A = 2654435761
-_MIX_C = 968665207
-
-
-def _mix(col: Column) -> Column:
-    return (col * F.lit(_MIX_A) + F.lit(_MIX_C)) % F.lit(_MOD).cast("long")
+    """``bits``-wide SimHash (default 16) over whitespace tokens: the
+    :func:`simhash_wide` kernel at ``half_bits = bits // 2``. An odd
+    ``bits`` raises ``ValueError`` (the fingerprint is two equal
+    halves, one per salted token hash)."""
+    if bits % 2:
+        raise ValueError(f"bits={bits} must be even: the fingerprint is two equal halves")
+    return simhash_wide(df, text_col, id_col, bits // 2)
 
 
 def simhash_wide(df: DataFrame, text_col: str, id_col: str, half_bits: int = 28) -> DataFrame:
     """2*half_bits-wide SimHash (default 56 bits) over whitespace
-    tokens, built from two independent polynomial token hashes (the
-    31- and 37-multiplier folds; each is mod 1e9+7 so only its low
-    ~30 bits carry signal — hence two folds, not one 56-bit shift),
-    each spread by the :func:`_mix` multiply-add so short tokens fill
-    the bit range.
+    tokens, in one mapInPandas pass: tokens via Python
+    ``lower().split()`` (the engine's tokenize contract), two
+    independent token hashes via salted zlib.crc32 (``crc32(tok)`` and
+    ``crc32(b"\\x01" + tok)`` of the UTF-8 bytes, each masked to
+    ``half_bits``), and bit i of each half set iff ``2 * ones > n``
+    over the doc's ``n`` tokens (the +1/-1 sum is positive), as one
+    numpy matrix reduction per doc. No explode, no bit-sum aggregate,
+    no shuffle. Returns [id, simhash]; token-less docs (empty or null
+    text) are absent. crc32 is public and fully specified, so the
+    DuckDB oracles re-derive every fingerprint from scratch
+    (``queries._simhash_sh_cte``).
 
-    Same single-pass shape as :func:`simhash`: explode tokens -> both
-    hashes per token -> ONE grouped aggregate computing all bit-sums
-    -> reassemble. 56 bits keeps band values wide enough (14 bits =
-    16384 buckets per band at bands=4) that banded candidate buckets
-    stay a small corpus fraction at scale, unlike 16-bit simhash whose
-    4-bit bands would put ~1/16 of the corpus in every bucket."""
-    toks = df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_tok"))
-    hashed = toks.select(
-        id_col,
-        _mix(_poly_hash(F.col("_tok"))).alias("_h1"),
-        _mix(_poly_hash37(F.col("_tok"))).alias("_h2"),
-    )
-    # per-bit ONES counts + one token count: bit i of the fingerprint
-    # is the majority rule 2*ones > n (identical to the +1/-1 sum being
-    # positive, without a CaseWhen inside every aggregate buffer).
-    # Both the bit-sum list and the reassembly are built as ONE parsed
-    # SQL string each: the per-bit Column-API loop this replaces made
-    # ~300 py4j round-trips per call (~1.2 s of driver time on every
-    # plan construction — measured r12), and its 56-term when-tree
-    # taxed Catalyst analysis in every plan embedding the fingerprint.
-    # The fold below adds distinct powers of two to a long — integer
-    # exact in any order, so values are bit-identical to the old tree
-    # (pinned in tests/test_operators.py).
-    sums = ", ".join(
-        f"sum(shiftright(_h{j + 1}, {i}) & 1)"
-        for j in range(2)
-        for i in range(half_bits)
-    )
-    agg = hashed.groupBy(id_col).agg(
-        F.expr(f"array({sums})").alias("_bs"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    fp = F.expr(
-        f"aggregate(sequence(0, {2 * half_bits - 1}), 0L, (acc, i) -> "
-        "acc + IF(2 * element_at(_bs, i + 1) > _n, shiftleft(1L, i), 0L))"
-    )
-    return agg.select(id_col, fp.cast("long").alias("simhash"))
-
-
-def simhash_wide_vectorized(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    half_bits: int = 28,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """Vectorized twin of :func:`simhash_wide` — one mapInPandas pass
-    computes each doc's 2*half_bits fingerprint directly: tokens via
-    Python ``lower().split()`` (the engine's tokenize contract), two
-    independent token hashes via salted zlib.crc32 (C speed), bit-sums
-    as one numpy matrix reduction per doc. No explode, no 56-column
-    aggregate, no shuffle at all. Hash family differs from the
-    poly-fold form (crc32 vs 31/37 folds) — same SimHash semantics,
-    different fingerprints, so use it where no DuckDB oracle must
-    recompute the values (the production path); properties are pinned
-    in pytest (exact recall of its own banding, hamming-0 for exact
-    dups). Token-less docs drop, matching the aggregate form."""
+    56 bits keeps band values wide enough (14 bits = 16384 buckets per
+    band at bands=4) that banded candidate buckets stay a small corpus
+    fraction at scale, unlike 16-bit simhash whose 4-bit bands would
+    put ~1/16 of the corpus in every bucket."""
     import numpy as np
     import pandas as pd
 
@@ -798,11 +710,8 @@ def simhash_wide_vectorized(
             if ids:
                 yield pd.DataFrame({id_col: ids, "simhash": fps})
 
-    base = df.select(id_col, text_col)
-    if repartition_to:
-        base = base.repartition(repartition_to)
     id_type = df.schema[id_col].dataType.simpleString()
-    return base.mapInPandas(run, f"{id_col} {id_type}, simhash long")
+    return df.select(id_col, text_col).mapInPandas(run, f"{id_col} {id_type}, simhash long")
 
 
 def simhash_band_pairs(
@@ -829,7 +738,7 @@ def simhash_band_pairs(
     Scale shape mirrors :func:`minhash_lsh_pairs`: the fingerprint
     pipeline runs ONCE (the simhash value rides along into the bucket
     rows and pair structs — no second join back through the upstream
-    aggregate), bucket stats come from a groupBy-agg joined back on
+    fingerprint pass), bucket stats come from a groupBy-agg joined back on
     the bucket key (map-side partial combine collapses hot buckets;
     never a Window over the bucket), and buckets past
     ``max_bucket_size`` take the audited linear star expansion, which
@@ -842,26 +751,8 @@ def simhash_band_pairs(
     )
 
 
-def simhash_band_pairs_fast(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket_size: int = 1000,
-    observations: dict | None = None,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """Production twin of :func:`simhash_band_pairs`: fingerprints
-    from the zero-shuffle :func:`simhash_wide_vectorized` kernel, same
-    banding join and Hamming verify (and the same exact-recall
-    pigeonhole guarantee over ITS fingerprints). Different hash family
-    -> different pair set than the oracle-reproducible form; rows-only
-    at the gate, properties pinned in pytest."""
-    sh = simhash_wide_vectorized(df, text_col, id_col, 28, repartition_to)
-    return _simhash_band_pairs_from(
-        sh, id_col, 56, bands, max_hamming, max_bucket_size, observations
-    )
+# the name perfbench/stream.py times
+simhash_band_pairs_fast = simhash_band_pairs
 
 
 def _band_permutation(bits: int, seed: int) -> list[int]:
@@ -1183,8 +1074,9 @@ def simhash_increment(
     from pyspark import StorageLevel
 
     spark = new_batch.sparkSession
-    _check_index_params(spark, index_table, half_bits=half_bits, bands=bands)
-    perm_seed = _index_perm_seed(spark, index_table)
+    props = _index_props(spark, index_table)
+    _check_index_params(spark, index_table, props=props, half_bits=half_bits, bands=bands)
+    perm_seed = int(props.get("dedup.perm_seed", "0"))
     bits = 2 * half_bits
     if hot_band_threshold:
         hot = hot_simhash_bands(spark, index_table, hot_band_threshold).limit(5).collect()
@@ -1201,8 +1093,7 @@ def simhash_increment(
             )
     # cache the narrow [id, fingerprint] rows: three consumers (index
     # probe, intra pairs, survivor append) would otherwise each re-run
-    # the tokenize/fold/56-bit-sum pipeline — measured 13.9s -> the
-    # fingerprint pass running once (the cache is one long per doc)
+    # the Python fingerprint pass (the cache is one long per doc)
     sh = simhash_wide(new_batch, text_col, id_col, half_bits).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -1263,17 +1154,6 @@ def simhash_increment(
     return survivors
 
 
-def _index_perm_seed(spark, index_table: str) -> int:
-    """The band-geometry seed a SimHash index was last (re-)banded
-    under; 0 (the contiguous default) for indexes that never reseeded
-    or predate the parameter."""
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {index_table}").collect()
-    }
-    return int(props.get("dedup.perm_seed", "0"))
-
-
 def hot_simhash_bands(spark, index_table: str, threshold: int) -> DataFrame:
     """[bucket, n] band buckets whose accumulated index rows exceed
     *threshold*, hottest first — ONE grouped count over the index's
@@ -1314,10 +1194,7 @@ def reseed_simhash_bands(spark, index_table: str, new_seed: int) -> dict:
     bands its batches consistently. O(|index|) one-time — the cost a
     skewed probe would otherwise pay every day.
     """
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {index_table}").collect()
-    }
+    props = _index_props(spark, index_table)
     half_bits = int(props["dedup.half_bits"])
     bands = int(props["dedup.bands"])
     bits = 2 * half_bits

@@ -23,7 +23,7 @@ Exactness discipline (so value-hashes match bit-for-bit):
 - per-row arithmetic is written with the same textual operand order in
   both dialects (IEEE doubles -> identical bits);
 - engine-specific hashes are avoided: fingerprints/minhash use the
-  polynomial fold both engines compute identically;
+  polynomial fold or zlib.crc32, both re-derived in DuckDB SQL;
 - time buckets are emitted as formatted strings, not timestamps.
 
 Queries returning data that only Spark can express (approx sketches,
@@ -2948,91 +2948,16 @@ def q_gopher_gates(spark, sf_dir):
     return gopher_quality_gates(d, "text", "doc_id")
 
 
-@query(
-    "exact_dedup_simhash",
-    oracle="""
-        WITH surv AS (
-            SELECT doc_id, n_chars FROM documents
-            WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)),
-        toks AS (
-            SELECT doc_id, unnest({toks}) AS tok
-            FROM documents),
-        hashed AS (
-            -- fold then the same post-fold mix as operators/dedup._mix
-            SELECT doc_id,
-                   (list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 31 + c) % 1000000007)
-                    * 2654435761 + 968665207) % 1000000007 AS h
-            FROM toks WHERE tok <> ''),
-        bits AS (
-            SELECT doc_id,
-                   {sums}
-            FROM hashed GROUP BY doc_id)
-        SELECT surv.doc_id, surv.n_chars, CAST({fp} AS BIGINT) AS simhash
-        FROM surv JOIN bits ON surv.doc_id = bits.doc_id
-    """.format(
-        sums=",\n                   ".join(
-            f"sum(CASE WHEN (h // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}" for i in range(16)
-        ),
-        fp=" + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(16)),
-        toks="{toks}",
-    ).format(toks=_TOKS),
-    doc="exact dedup + 16-bit SimHash in one pipeline (north star): one hash-agg "
-    "on content with min-id survivor policy, then each surviving doc tagged with "
-    "its SimHash (explode -> one grouped pass of bit-sums) — the exact-dedup-"
-    "then-near-dup-fingerprint sequencing every corpus pipeline runs",
-)
-def q_exact_dedup_simhash(spark, sf_dir):
-    from hadoop_app_spark.operators.dedup import exact_dedup
-
-    # NO pre-repartition here: both branches shuffle almost immediately
-    # (hash-agg on text, explode->bit-sum agg), so an up-front
-    # round-robin of the full text column would just double the bytes
-    # shuffled (measured 1.2s -> 1.8s warm at sf0.1)
-    d = _t(spark, sf_dir, "documents")
-    survivors = exact_dedup(d, ["text"], "doc_id").select("doc_id", "n_chars")
-    sims = simhash(d, "text", "doc_id", bits=16)
-    return survivors.join(sims, "doc_id")
-
-
-def _minhash_oracle() -> str:
-    """DuckDB twin of minhash_signatures(hash_fn='poly'): same 3-gram
-    shingles, same polynomial shingle hash, same (a*h+b)%M permutation
-    minima — bit-reproducible across engines."""
-    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
-
-    fp = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(s, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), (acc, c) -> (acc * 31 + c) % 1000000007)"
-    )
-    a0, b0 = _MINHASH_A[0], _MINHASH_B[0]
-    a7, b7 = _MINHASH_A[7], _MINHASH_B[7]
-    return f"""
-        WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        sh AS (SELECT doc_id,
-                      [array_to_string(toks[i:i+2], ' ')
-                       for i in range(1, greatest(len(toks) - 2, 0) + 1)] AS shingles
-               FROM t),
-        h AS (SELECT doc_id, list_transform(shingles, s -> {fp}) AS hs
-              FROM sh WHERE len(shingles) > 0)
-        SELECT doc_id,
-               list_min(list_transform(hs, x -> ({a0} * x + {b0}) % 1000000007)) AS mh0,
-               list_min(list_transform(hs, x -> ({a7} * x + {b7}) % 1000000007)) AS mh7
-        FROM h
-    """
-
-
 # --- CRC-32 derived from scratch in DuckDB SQL -----------------------------
 #
-# The `_fast` kernels (operators/dedup.minhash_signatures_vectorized,
-# simhash_wide_vectorized) hash tokens with zlib.crc32 — a PUBLIC,
+# The numpy kernels (operators/dedup.minhash_signatures_vectorized,
+# simhash_wide) hash tokens with zlib.crc32 — a PUBLIC,
 # fully-specified algorithm (reflected polynomial 0xEDB88320): the
 # 256-entry table is 8 shift-xor rounds per byte value, and the
 # running CRC folds one byte per step. Both are expressible in SQL —
 # the table as a recursive CTE, the fold as list_reduce — so the
-# crc32 hash family has a from-scratch DuckDB twin after all and the
-# `_fast` twins graduate from rows-only to value-checked oracles.
+# crc32 hash family has a from-scratch DuckDB twin and those kernels
+# are value-checked oracles.
 # Cost note: the CRCs are computed once per DISTINCT token (the
 # corpus vocabulary), never per occurrence.
 
@@ -3067,6 +2992,87 @@ def _crc32_of(bytes_expr: str) -> str:
         f"xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT), {bytes_expr}), "
         f"(acc, byt) -> xor(acc // 256, tab[xor(acc, byt) % 256 + 1])), 4294967295)"
     )
+
+
+def _simhash_sh_cte(half_bits: int = 28) -> str:
+    """CTE chain reproducing operators/dedup.simhash_wide, ending in
+    ``sh(doc_id, s)``: per distinct token h1 = crc32(utf8) and h2 =
+    crc32(0x01 || utf8), each mod 2^half_bits; bit i of each half is
+    set iff 2 * ones > n over the doc's n tokens. Token-less docs have
+    no row. Opens with the recursive crc32 table, so the caller writes
+    ``WITH RECURSIVE``."""
+    ones = ",\n                   ".join(
+        f"sum((h{1 + i // half_bits} // {1 << (i % half_bits)}) % 2) AS o{i}"
+        for i in range(2 * half_bits)
+    )
+    fp = " + ".join(
+        f"(CASE WHEN 2 * o{i} > n THEN {1 << i} ELSE 0 END)" for i in range(2 * half_bits)
+    )
+    return f"""{_CRC32_CTES},
+        toks AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
+        dtok AS (SELECT DISTINCT tok FROM toks),
+        bts AS (SELECT tok, {_UTF8_BYTES} AS bts FROM dtok),
+        tokcrc AS (SELECT tok,
+                          {_crc32_of("bts")} % {1 << half_bits} AS h1,
+                          {_crc32_of("list_prepend(CAST(1 AS BIGINT), bts)")} % {1 << half_bits} AS h2
+                   FROM bts CROSS JOIN crctab),
+        hashed AS (SELECT doc_id, h1, h2 FROM toks JOIN tokcrc USING (tok)),
+        bits AS (SELECT doc_id, count(*) AS n,
+                   {ones}
+                 FROM hashed GROUP BY doc_id),
+        sh AS (SELECT doc_id, CAST({fp} AS BIGINT) AS s FROM bits)"""
+
+
+@query(
+    "exact_dedup_simhash",
+    oracle=f"""
+        WITH RECURSIVE {_simhash_sh_cte(8)},
+        surv AS (
+            SELECT doc_id, n_chars FROM documents
+            WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text))
+        SELECT surv.doc_id, surv.n_chars, sh.s AS simhash
+        FROM surv JOIN sh ON surv.doc_id = sh.doc_id
+    """,
+    doc="exact dedup + 16-bit SimHash in one pipeline (north star): one hash-agg "
+    "on content with min-id survivor policy, then each surviving doc tagged with "
+    "its SimHash (one mapInPandas pass: salted crc32 token hashes, numpy "
+    "bit-sums, no shuffle) — the exact-dedup-then-near-dup-fingerprint "
+    "sequencing every corpus pipeline runs",
+)
+def q_exact_dedup_simhash(spark, sf_dir):
+    from hadoop_app_spark.operators.dedup import exact_dedup
+
+    d = _t(spark, sf_dir, "documents")
+    survivors = exact_dedup(d, ["text"], "doc_id").select("doc_id", "n_chars")
+    sims = simhash(d, "text", "doc_id", bits=16)
+    return survivors.join(sims, "doc_id")
+
+
+def _minhash_oracle() -> str:
+    """DuckDB twin of minhash_signatures(hash_fn='poly'): same 3-gram
+    shingles, same polynomial shingle hash, same (a*h+b)%M permutation
+    minima — bit-reproducible across engines."""
+    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
+
+    fp = (
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(s, ''), "
+        "c -> CAST(ascii(c) AS BIGINT))), (acc, c) -> (acc * 31 + c) % 1000000007)"
+    )
+    a0, b0 = _MINHASH_A[0], _MINHASH_B[0]
+    a7, b7 = _MINHASH_A[7], _MINHASH_B[7]
+    return f"""
+        WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+        sh AS (SELECT doc_id,
+                      [array_to_string(toks[i:i+2], ' ')
+                       for i in range(1, greatest(len(toks) - 2, 0) + 1)] AS shingles
+               FROM t),
+        h AS (SELECT doc_id, list_transform(shingles, s -> {fp}) AS hs
+              FROM sh WHERE len(shingles) > 0)
+        SELECT doc_id,
+               list_min(list_transform(hs, x -> ({a0} * x + {b0}) % 1000000007)) AS mh0,
+               list_min(list_transform(hs, x -> ({a7} * x + {b7}) % 1000000007)) AS mh7
+        FROM h
+    """
 
 
 def _crc_minhash_cte() -> str:
@@ -3134,51 +3140,6 @@ def _minhash_dedup_fast_oracle(n_bands: int = 4, band_w: int = 2) -> str:
                      ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id)
         SELECT doc_id, n_chars FROM documents
         WHERE doc_id NOT IN (SELECT id_b FROM losers)
-    """
-
-
-def _simhash_band_neardup_fast_oracle() -> str:
-    """Brute-force all-pairs twin of simhash_band_neardup_fast over
-    the crc32 fingerprint family (simhash_wide_vectorized,
-    dedup.py:717-739): per-token h1 = crc32(utf8) & (2^28-1), h2 =
-    crc32(0x01 || utf8) & (2^28-1), 56-bit fingerprint from per-bit
-    majority votes (bit set iff 2*ones > n_tokens, i.e. the +1/-1 sum
-    is positive), pairs kept at Hamming <= 3. The same pigeonhole
-    argument as the poly-family oracle makes banded recall EXACT at
-    max_hamming < bands, so the O(n^2) scan and the bucketed plan must
-    agree — the oracle value-checks the recall guarantee itself.
-
-    Precondition (shared with the gated poly-family twin): exact
-    recall additionally requires NO band bucket past the engine's
-    max_bucket_size=1000 star-expansion threshold — an overflowing
-    bucket degrades to min-id star pairs and would miss pairs the
-    brute scan emits. MEASURED on this corpus: max crc-family band
-    bucket = 52 at sf0.01, 384 at sf0.1 — every SF the harness runs
-    stays well under the cap (the ~7x-per-10x growth would cross it
-    around sf1; re-measure before oracling at larger SFs)."""
-    sums = ",\n                   ".join(
-        f"sum(CASE WHEN (h{1 + i // 28} // {1 << (i % 28)}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(56)
-    )
-    fp = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(56))
-    return f"""
-        WITH RECURSIVE {_CRC32_CTES},
-        toks AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-        dtok AS (SELECT DISTINCT tok FROM toks),
-        bts AS (SELECT tok, {_UTF8_BYTES} AS bts FROM dtok),
-        tokcrc AS (SELECT tok,
-                          {_crc32_of("bts")} % 268435456 AS h1,
-                          {_crc32_of("list_prepend(CAST(1 AS BIGINT), bts)")} % 268435456 AS h2
-                   FROM bts CROSS JOIN crctab),
-        hashed AS (SELECT doc_id, h1, h2 FROM toks JOIN tokcrc USING (tok)),
-        bits AS (SELECT doc_id,
-                   {sums}
-                 FROM hashed GROUP BY doc_id),
-        sh AS (SELECT doc_id, CAST({fp} AS BIGINT) AS s FROM bits)
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.s, b.s)) <= 3
     """
 
 
@@ -3628,11 +3589,11 @@ REGISTRY["minhash_dedup"] = QueryDef(
     # to and how many distinct candidates implicated it — the record a
     # takedown/appeal workflow needs ('why is my doc gone, and to
     # whom') that a bare survivor set cannot answer.
-    # Precondition (ADVICE r9, the _simhash_band_neardup_fast
-    # convention): winner/n_candidates are exact only while no LSH
-    # band bucket exceeds the engine's max_bucket_size=1000
-    # star-expansion cap — past it the engine pairs overflow members
-    # against the bucket min only. Measured max bucket: 3 at sf0.01,
+    # Precondition (ADVICE r9, the simhash_band_neardup convention):
+    # winner/n_candidates are exact only while no LSH band bucket
+    # exceeds the engine's max_bucket_size=1000 star-expansion cap —
+    # past it the engine pairs overflow members against the bucket min
+    # only. Measured max bucket: 3 at sf0.01,
     # 10 at sf0.1 — two orders of magnitude of headroom.
     oracle="""
         WITH {banded},
@@ -3723,28 +3684,8 @@ def q_distribution_drift(spark, sf_dir):
     # SAME verified pair set and the same per-loser winner/count/
     # distance accounting the banded plan reports — the hamming of the
     # winning pair (the evidence a takedown appeal cites) rides along
-    oracle="""
-        WITH toks AS (
-            SELECT doc_id, unnest({toks}) AS tok FROM documents),
-        folded AS (
-            SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 31 + c) % 1000000007) AS f1,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 37 + c) % 1000000007) AS f2
-            FROM toks WHERE tok <> ''),
-        hashed AS (
-            SELECT doc_id,
-                   (f1 * 2654435761 + 968665207) % 1000000007 AS h1,
-                   (f2 * 2654435761 + 968665207) % 1000000007 AS h2
-            FROM folded),
-        bits AS (
-            SELECT doc_id,
-                   {sums}
-            FROM hashed GROUP BY doc_id),
-        sh AS (SELECT doc_id, CAST({fp} AS BIGINT) AS s FROM bits),
+    oracle=f"""
+        WITH RECURSIVE {_simhash_sh_cte()},
         e AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                      CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
               FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -3754,14 +3695,7 @@ def q_distribution_drift(spark, sf_dir):
                CAST(count(DISTINCT id_a) AS BIGINT) AS n_candidates,
                CAST(arg_min(hamming, id_a) AS INTEGER) AS win_hamming
         FROM e GROUP BY 1
-    """.format(
-        sums=",\n                   ".join(
-            f"sum(CASE WHEN (h{1 + i // 28} // {1 << (i % 28)}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-            for i in range(56)
-        ),
-        fp=" + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(56)),
-        toks=_TOKS,
-    ),
+    """,
     doc="SimHash dedup decision audit (the Hamming family's "
     "explainability face, minhash_dedup_decisions' sibling — together "
     "the two dedup families both answer 'why is my doc gone, to whom, "
@@ -4439,48 +4373,39 @@ def q_split_assignment_pinning(spark, sf_dir):
     return out.select("doc_id", "component", "split", "pinned")
 
 
-def _simhash_sh_cte() -> str:
-    """DuckDB CTE chain computing every document's 56-bit wide SimHash
-    (same folds/mix/bit-sums as operators/dedup.simhash_wide; the same
-    construction the simhash_band_neardup oracle inlines) ending in
-    ``sh(doc_id, s)``."""
-    sums = ",\n                   ".join(
-        f"sum(CASE WHEN (h{1 + i // 28} // {1 << (i % 28)}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(56)
-    )
-    fp = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(56))
+def _simhash_increment_oracle(generations: int = 2) -> str:
+    """Replay of the SimHash index policy over ``generations`` daily
+    batches (doc_id % 10 = 1, 2, ...): seed greedy dedup -> index0 =
+    survivors' (bucket, fingerprint); each day drops on (band bucket
+    match AND hamming <= 3 vs the index) OR a verified lower-id intra
+    pair; survivors' bands extend the index. Zero-token docs have no
+    fingerprint, hence no bands, hence survive — in both engines."""
+    days, outs = [], []
+    for g in range(1, generations + 1):
+        days.append(f"""
+        b{g} AS (SELECT * FROM bnd WHERE doc_id % 10 = {g}),
+        drop{g} AS (
+            SELECT DISTINCT b{g}.doc_id FROM b{g} JOIN idx{g - 1}
+              ON b{g}.bucket = idx{g - 1}.bucket AND bit_count(xor(b{g}.s, idx{g - 1}.s)) <= 3
+            UNION
+            SELECT x.doc_id FROM b{g} a JOIN b{g} x
+              ON a.bucket = x.bucket AND a.doc_id < x.doc_id
+              AND bit_count(xor(a.s, x.s)) <= 3),
+        surv{g} AS (SELECT doc_id FROM documents WHERE doc_id % 10 = {g}
+                  AND doc_id NOT IN (SELECT doc_id FROM drop{g}))""")
+        if g < generations:
+            days.append(f"""
+        idx{g} AS (SELECT bucket, s FROM idx{g - 1}
+                 UNION ALL
+                 SELECT bucket, s FROM bnd
+                 WHERE doc_id IN (SELECT doc_id FROM surv{g}))""")
+        outs.append(
+            f"SELECT {g} AS generation, d.doc_id, d.n_chars\n"
+            f"        FROM documents d JOIN surv{g} USING (doc_id)"
+        )
+    union_all = "\n        UNION ALL\n        "
     return f"""
-        toks AS (
-            SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-        folded AS (
-            SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 31 + c) % 1000000007) AS f1,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 37 + c) % 1000000007) AS f2
-            FROM toks WHERE tok <> ''),
-        hashed AS (
-            SELECT doc_id,
-                   (f1 * 2654435761 + 968665207) % 1000000007 AS h1,
-                   (f2 * 2654435761 + 968665207) % 1000000007 AS h2
-            FROM folded),
-        bits AS (
-            SELECT doc_id, {sums}
-            FROM hashed GROUP BY doc_id),
-        sh AS (SELECT doc_id, CAST({fp} AS BIGINT) AS s FROM bits)"""
-
-
-def _simhash_increment_oracle() -> str:
-    """Two-generation replay of the SimHash index policy: seed greedy
-    dedup -> index0 = survivors' (bucket, fingerprint); each day drops
-    on (band bucket match AND hamming <= 3 vs the index) OR a verified
-    lower-id intra pair; survivors' bands extend the index. Zero-token
-    docs have no fingerprint, hence no bands, hence survive — in both
-    engines."""
-    return f"""
-        WITH {_simhash_sh_cte()},
+        WITH RECURSIVE {_simhash_sh_cte()},
         bnd AS (
             SELECT doc_id, s, bv.b * 16384 + (s // bv.p) % 16384 AS bucket
             FROM sh, (VALUES (0, CAST(1 AS BIGINT)),
@@ -4492,42 +4417,14 @@ def _simhash_increment_oracle() -> str:
                         ON a.bucket = x.bucket AND a.doc_id < x.doc_id
                         AND bit_count(xor(a.s, x.s)) <= 3),
         idx0 AS (SELECT bucket, s FROM sb
-                 WHERE doc_id NOT IN (SELECT doc_id FROM seed_losers)),
-        b1 AS (SELECT * FROM bnd WHERE doc_id % 10 = 1),
-        drop1 AS (
-            SELECT DISTINCT b1.doc_id FROM b1 JOIN idx0
-              ON b1.bucket = idx0.bucket AND bit_count(xor(b1.s, idx0.s)) <= 3
-            UNION
-            SELECT x.doc_id FROM b1 a JOIN b1 x
-              ON a.bucket = x.bucket AND a.doc_id < x.doc_id
-              AND bit_count(xor(a.s, x.s)) <= 3),
-        surv1 AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 1
-                  AND doc_id NOT IN (SELECT doc_id FROM drop1)),
-        idx1 AS (SELECT bucket, s FROM idx0
-                 UNION ALL
-                 SELECT bucket, s FROM bnd
-                 WHERE doc_id IN (SELECT doc_id FROM surv1)),
-        b2 AS (SELECT * FROM bnd WHERE doc_id % 10 = 2),
-        drop2 AS (
-            SELECT DISTINCT b2.doc_id FROM b2 JOIN idx1
-              ON b2.bucket = idx1.bucket AND bit_count(xor(b2.s, idx1.s)) <= 3
-            UNION
-            SELECT x.doc_id FROM b2 a JOIN b2 x
-              ON a.bucket = x.bucket AND a.doc_id < x.doc_id
-              AND bit_count(xor(a.s, x.s)) <= 3),
-        surv2 AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 2
-                  AND doc_id NOT IN (SELECT doc_id FROM drop2))
-        SELECT 1 AS generation, d.doc_id, d.n_chars
-        FROM documents d JOIN surv1 USING (doc_id)
-        UNION ALL
-        SELECT 2 AS generation, d.doc_id, d.n_chars
-        FROM documents d JOIN surv2 USING (doc_id)
+                 WHERE doc_id NOT IN (SELECT doc_id FROM seed_losers)),{",".join(days)}
+        {union_all.join(outs)}
     """
 
 
 @query(
     "simhash_increment",
-    oracle=None,  # assigned below (needs the CTE builders above)
+    oracle=_simhash_increment_oracle(),
     doc="incremental dedup against a persisted SIMHASH band index — "
     "dedup_increment's Hamming-distance sibling, so the daily-ingest "
     "pattern covers both dedup families: a greedy-deduped day-0 seed "
@@ -4566,16 +4463,11 @@ def q_simhash_increment(spark, sf_dir):
     return gens[0].unionAll(gens[1])
 
 
-REGISTRY["simhash_increment"] = QueryDef(
-    REGISTRY["simhash_increment"].fn,
-    _simhash_increment_oracle(),
-    REGISTRY["simhash_increment"].doc,
-)
-
-
 @query(
     "simhash_reseed_increment",
-    oracle=None,  # assigned below: _simhash_increment_oracle() VERBATIM
+    # gen-1 slice of the plain-geometry replay, which the
+    # permuted-geometry increment must match verbatim
+    oracle=_simhash_increment_oracle(generations=1),
     doc="SimHash hot-band re-seeding (operators/dedup."
     "reseed_simhash_bands, VERDICT r9 item 5): a band value that "
     "accumulates verify-failing members skews every future batch's "
@@ -4629,45 +4521,6 @@ def q_simhash_reseed_increment(spark, sf_dir):
         dropped_table=False,
     )
     return surv.select(F.lit(1).alias("generation"), "doc_id", "n_chars")
-
-
-def _simhash_reseed_oracle() -> str:
-    """Gen-1 slice of `_simhash_increment_oracle`: the plain-geometry
-    day-1 replay the permuted-geometry increment must match verbatim."""
-    return f"""
-        WITH {_simhash_sh_cte()},
-        bnd AS (
-            SELECT doc_id, s, bv.b * 16384 + (s // bv.p) % 16384 AS bucket
-            FROM sh, (VALUES (0, CAST(1 AS BIGINT)),
-                             (1, CAST(16384 AS BIGINT)),
-                             (2, CAST(268435456 AS BIGINT)),
-                             (3, CAST(4398046511104 AS BIGINT))) AS bv(b, p)),
-        sb AS (SELECT * FROM bnd WHERE doc_id % 10 = 0),
-        seed_losers AS (SELECT DISTINCT x.doc_id FROM sb a JOIN sb x
-                        ON a.bucket = x.bucket AND a.doc_id < x.doc_id
-                        AND bit_count(xor(a.s, x.s)) <= 3),
-        idx0 AS (SELECT bucket, s FROM sb
-                 WHERE doc_id NOT IN (SELECT doc_id FROM seed_losers)),
-        b1 AS (SELECT * FROM bnd WHERE doc_id % 10 = 1),
-        drop1 AS (
-            SELECT DISTINCT b1.doc_id FROM b1 JOIN idx0
-              ON b1.bucket = idx0.bucket AND bit_count(xor(b1.s, idx0.s)) <= 3
-            UNION
-            SELECT x.doc_id FROM b1 a JOIN b1 x
-              ON a.bucket = x.bucket AND a.doc_id < x.doc_id
-              AND bit_count(xor(a.s, x.s)) <= 3),
-        surv1 AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 1
-                  AND doc_id NOT IN (SELECT doc_id FROM drop1))
-        SELECT 1 AS generation, d.doc_id, d.n_chars
-        FROM documents d JOIN surv1 USING (doc_id)
-    """
-
-
-REGISTRY["simhash_reseed_increment"] = QueryDef(
-    REGISTRY["simhash_reseed_increment"].fn,
-    _simhash_reseed_oracle(),
-    REGISTRY["simhash_reseed_increment"].doc,
-)
 
 
 @query(
@@ -9073,46 +8926,23 @@ def q_bucketed_join(spark, sf_dir):
     # 4-band fingerprint must agree on one band), so the O(n^2) DuckDB
     # scan and the bucketed plan must produce the SAME pair set; the
     # oracle thereby value-checks the recall guarantee itself.
-    oracle="""
-        WITH toks AS (
-            SELECT doc_id, unnest({toks}) AS tok FROM documents),
-        folded AS (
-            SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 31 + c) % 1000000007) AS f1,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                               list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-                               (acc, c) -> (acc * 37 + c) % 1000000007) AS f2
-            FROM toks WHERE tok <> ''),
-        hashed AS (
-            -- same post-fold mix as operators/dedup._mix: spreads
-            -- short-token folds across the full bit range
-            SELECT doc_id,
-                   (f1 * 2654435761 + 968665207) % 1000000007 AS h1,
-                   (f2 * 2654435761 + 968665207) % 1000000007 AS h2
-            FROM folded),
-        bits AS (
-            SELECT doc_id,
-                   {sums}
-            FROM hashed GROUP BY doc_id),
-        sh AS (SELECT doc_id, CAST({fp} AS BIGINT) AS s FROM bits)
+    # Precondition: exact recall also needs NO band bucket past the
+    # engine's max_bucket_size=1000 star-expansion threshold (an
+    # overflowing bucket pairs its members with the bucket min only).
+    # Measured max band bucket: 52 at sf0.01, 384 at sf0.1 (~7x per
+    # 10x, so it would cross the cap around sf1; re-measure before
+    # oracling larger SFs).
+    oracle=f"""
+        WITH RECURSIVE {_simhash_sh_cte()}
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         WHERE bit_count(xor(a.s, b.s)) <= 3
-    """.format(
-        sums=",\n                   ".join(
-            f"sum(CASE WHEN (h{1 + i // 28} // {1 << (i % 28)}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-            for i in range(56)
-        ),
-        fp=" + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(56)),
-        toks="{toks}",
-    ).format(toks=_TOKS),
+    """,
     doc="SimHash Hamming-banded near-dup pairs (north star dedup family, Manku "
-    "et al. WWW'07 class): 56-bit fingerprint from two independent polynomial "
-    "token hashes, 4x14-bit band bucket join, bit_count(xor) verify; recall is "
-    "EXACT for hamming<=3 by pigeonhole and the oracle proves it against a "
+    "et al. WWW'07 class): 56-bit fingerprint from two salted crc32 token "
+    "hashes in one mapInPandas pass, 4x14-bit band bucket join, "
+    "bit_count(xor) verify; recall is EXACT for hamming<=3 by pigeonhole and the oracle proves it against a "
     "brute-force all-pairs scan. Fingerprint computed ONCE (rides into the "
     "pair structs), bucket stats via groupBy-agg join-back (never a bucket "
     "window), degenerate buckets star-expanded with observed counts "
@@ -9123,27 +8953,6 @@ def q_simhash_band_neardup(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     return simhash_band_pairs(d, "text", "doc_id", bands=4, max_hamming=3)
-
-
-@query(
-    "simhash_band_neardup_fast",
-    oracle=_simhash_band_neardup_fast_oracle(),
-    doc="production twin of simhash_band_neardup: fingerprints from a "
-    "zero-shuffle mapInPandas kernel (salted crc32 x2, numpy bit-sums), "
-    "identical banding join + Hamming verify and the same pigeonhole "
-    "exact-recall guarantee over its own fingerprints "
-    "(operators/dedup.simhash_band_pairs_fast). Oracled: a brute-force "
-    "all-pairs scan over SQL-derived crc32 fingerprints value-checks both "
-    "the kernel and the banded recall guarantee",
-)
-def q_simhash_band_neardup_fast(spark, sf_dir):
-    from hadoop_app_spark.operators.dedup import simhash_band_pairs_fast
-
-    d = _t(spark, sf_dir, "documents")
-    return simhash_band_pairs_fast(
-        d, "text", "doc_id", bands=4, max_hamming=3,
-        repartition_to=spark.sparkContext.defaultParallelism,
-    )
 
 
 @query(
@@ -11791,6 +11600,7 @@ _ALIASES = {
     "winnow_neardup_hof": "winnow_neardup",
     "semdedup_fast_fixed": "semdedup",
     "repetition_ngrams_fast": "repetition_ngrams",
+    "simhash_band_neardup_fast": "simhash_band_neardup",
 }
 REGISTRY.update({alias: REGISTRY[primary] for alias, primary in _ALIASES.items()})
 

@@ -186,6 +186,9 @@ def test_simhash_groups(spark, docs_df):
     # near-dup is close in hamming distance
     ham = bin(sh[1] ^ sh[3]).count("1")
     assert ham <= 4
+    # the fingerprint is two equal halves, so an odd width is refused
+    with pytest.raises(ValueError, match="must be even"):
+        simhash(docs_df, "text", "doc_id", bits=15)
 
 
 def test_ngram_jaccard(spark, docs_df):
@@ -2609,7 +2612,8 @@ def test_simhash_increment_policy_and_verify(spark):
         "the working set and checkpoints flush dirty pages in the background"
     )
     # one token swapped (eviction -> beacon): measured hamming 2 on the
-    # 56-bit wide fingerprint, asserted below so drift is loud
+    # 56-bit crc32 fingerprint of simhash_wide, asserted below so drift
+    # is loud
     t0_near = (
         "storage engines keep hot pages in shared buffer pools while beacon "
         "policies track recency and frequency so sequential scans never wipe "

@@ -319,6 +319,12 @@ FOLDED_KERNEL_ENTRIES = (
     "repetition_ngrams_fast",
     "bpe_merges",
     "bpe_token_count",
+    "exact_dedup_simhash",
+    "simhash_band_neardup",
+    "simhash_band_neardup_fast",
+    "simhash_dedup_decisions",
+    "simhash_increment",
+    "simhash_reseed_increment",
 )
 
 

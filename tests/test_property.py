@@ -12,7 +12,8 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from hadoop_app_spark.functions.text import doc_fingerprint, token_count
+from hadoop_app_spark.functions.text import doc_fingerprint, token_count, tokenize
+from hadoop_app_spark.operators.dedup import simhash_wide
 from hadoop_app_spark.sources.delim001 import decode_at_pairs, encode_at_pairs
 
 _FP_MOD = 1_000_000_007
@@ -202,3 +203,54 @@ def test_quantile_profile_order_and_membership(spark, vals):
     qs = [r.p25, r.p50, r.p75, r.p90]
     assert qs == sorted(qs)
     assert all(q in vals for q in qs)
+
+
+# Text the sf* corpora never hold (all of their docs are pure ASCII):
+# Greek capitals with final-sigma lowercasing, dotted capital I (lowers
+# to two codepoints), NBSP / ideographic space / \x1c separators,
+# multi-byte UTF-8 and emoji.
+_multilingual_text = st.text(
+    alphabet=st.sampled_from(
+        list("abcXYZ09 \t")
+        + ["\xa0", "\u3000", "\x1c", "Σ", "Ο", "Δ", "Α", "Ω", "İ", "é", "ß", "中", "ж", "😀"]
+    ),
+    max_size=40,
+)
+
+
+def _py_simhash(text: str, half_bits: int) -> int | None:
+    """Plain-Python SimHash: salted crc32 of each token's UTF-8 bytes,
+    masked to half_bits; bit set iff 2 * ones > n; None if token-less."""
+    from zlib import crc32
+
+    toks = text.lower().split()
+    if not toks:
+        return None
+    mask = (1 << half_bits) - 1
+    hashes = [
+        [crc32(t.encode()) & mask for t in toks],
+        [crc32(b"\x01" + t.encode()) & mask for t in toks],
+    ]
+    fp = 0
+    for half, hs in enumerate(hashes):
+        for i in range(half_bits):
+            if 2 * sum((h >> i) & 1 for h in hs) > len(toks):
+                fp |= 1 << (half * half_bits + i)
+    return fp
+
+
+@_settings
+@given(
+    texts=st.lists(_multilingual_text | st.just("") | st.none(), min_size=1, max_size=12),
+    half_bits=st.sampled_from([8, 28]),
+)
+def test_simhash_wide_and_tokenize_match_python(spark, texts, half_bits):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {r.doc_id: r.simhash for r in simhash_wide(df, "text", "doc_id", half_bits).collect()}
+    want = {
+        i: fp for i, t in enumerate(texts) if (fp := _py_simhash(t or "", half_bits)) is not None
+    }
+    assert got == want, [(i, repr(t)) for i, t in enumerate(texts)]
+    toks = {r.doc_id: r.toks for r in df.select("doc_id", tokenize("text").alias("toks")).collect()}
+    for i, t in enumerate(texts):
+        assert toks[i] == (None if t is None else t.lower().split()), (i, repr(t))

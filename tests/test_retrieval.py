@@ -26,7 +26,8 @@ def _docs(spark):
 def test_simhash_banding_recall_is_exact(spark):
     """Pigeonhole guarantee: for max_hamming < bands the banded plan
     finds EVERY pair within the Hamming radius — compare against an
-    engine-side brute-force self-join on the same fingerprints."""
+    engine-side brute-force self-join on the same fingerprints — and
+    an exact duplicate pairs at hamming 0."""
     d = _docs(spark)
     banded = {
         (r.id_a, r.id_b, r.hamming)
@@ -48,6 +49,15 @@ def test_simhash_banding_recall_is_exact(spark):
     }
     assert banded == brute
     assert all(h <= 3 for *_ids, h in banded)
+    # exact duplicates -> identical fingerprints -> hamming-0 pair
+    dup = d.limit(1).select(F.lit(990001).alias("doc_id"), "text")
+    dd = d.select("doc_id", "text").unionByName(dup)
+    orig = d.limit(1).collect()[0].doc_id
+    pairs = {
+        (r.id_a, r.id_b): r.hamming
+        for r in simhash_band_pairs(dd, "text", "doc_id").collect()
+    }
+    assert pairs.get((orig, 990001)) == 0
 
 
 def test_simhash_banding_overflow_star_expansion(spark):
@@ -69,61 +79,16 @@ def test_simhash_banding_overflow_star_expansion(spark):
     assert {(r.id_a, r.id_b) for r in rows} <= {(r.id_a, r.id_b) for r in full}
 
 
-def test_simhash_fast_twin_recall_and_exact_dups(spark):
-    """The vectorized twin keeps the pigeonhole guarantee over ITS OWN
-    fingerprints, and exact-duplicate docs land at hamming 0."""
-    from pyspark.sql import functions as F2
-
-    from hadoop_app_spark.operators.dedup import (
-        simhash_band_pairs_fast,
-        simhash_wide_vectorized,
-    )
-
-    d = _docs(spark)
-    # engine-side brute force on the crc32 fingerprints
-    sh = simhash_wide_vectorized(d, "text", "doc_id")
-    a = sh.select(F2.col("doc_id").alias("id_a"), F2.col("simhash").alias("sa"))
-    b = sh.select(F2.col("doc_id").alias("id_b"), F2.col("simhash").alias("sb"))
-    brute = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in a.join(b, F2.col("id_a") < F2.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F2.bit_count(F2.col("sa").bitwiseXOR(F2.col("sb"))).cast("int").alias("hamming"),
-        )
-        .where(F2.col("hamming") <= 3)
-        .collect()
-    }
-    banded = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_band_pairs_fast(d, "text", "doc_id").collect()
-    }
-    assert banded == brute
-    # exact duplicates -> identical fingerprints -> hamming-0 pair
-    dup = d.limit(1).select(F2.lit(990001).alias("doc_id"), "text")
-    dd = d.select("doc_id", "text").unionByName(dup)
-    orig = d.limit(1).collect()[0].doc_id
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_band_pairs_fast(dd, "text", "doc_id").collect()
-    }
-    assert pairs.get((orig, 990001)) == 0
-
-
 def test_vectorized_kernels_accept_non_long_ids(spark):
-    """The _fast twins declare their mapInPandas schema from the input
+    """The mapInPandas kernels declare their schema from the input
     id column's type — string ids must round-trip like longs do."""
-    from hadoop_app_spark.operators.dedup import (
-        minhash_signatures_vectorized,
-        simhash_wide_vectorized,
-    )
+    from hadoop_app_spark.operators.dedup import minhash_signatures_vectorized
 
     df = spark.createDataFrame(
         [("u1", "alpha beta gamma delta"), ("u2", "alpha beta gamma delta epsilon")],
         "url string, text string",
     )
-    sh = {r.url: r.simhash for r in simhash_wide_vectorized(df, "text", "url").collect()}
+    sh = {r.url: r.simhash for r in simhash_wide(df, "text", "url").collect()}
     assert set(sh) == {"u1", "u2"}
     sig = {r.url: r.signature for r in minhash_signatures_vectorized(df, "text", "url").collect()}
     assert set(sig) == {"u1", "u2"} and all(len(s) == 8 for s in sig.values())
