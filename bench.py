@@ -39,8 +39,8 @@ BENCH_QUERIES = [
     "json_functions",
     "text_metrics",
     "exact_dedup_simhash",
-    "minhash_signatures_fast",
-    "minhash_dedup_fast",
+    "minhash_signatures",
+    "minhash_dedup",
     "cosine_topk",
     "lsh_ann_topk",
     "ivf_ann_topk",

@@ -22,7 +22,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "que", "de", "los", "es", "un", "una"),
 }
 
-_FP_MOD = 1_000_000_007  # keeps acc*31+c inside int64 in any engine
+_FP_MOD = 1_000_000_007
 
 # Every codepoint where Python's str.isspace() is True. Java regex \s is
 # ASCII-only, so NBSP / ideographic space / NEL in multilingual web text
@@ -157,30 +157,12 @@ def quality_score(text_col: Column | str) -> Column:
 
 
 def doc_fingerprint(col: Column | str) -> Column:
-    """Polynomial rolling hash of the raw text, mod 1e9+7.
-
-    fp = fold(chars, acc -> (acc*31 + ascii(ch)) % M). Engine-agnostic
-    (plain int64 arithmetic) so DuckDB computes the identical value —
-    unlike xxhash64/murmur whose seeds differ across engines.
-    """
-    chars = F.split(_c(col), "", -1)
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(_FP_MOD).cast("long"),
-    )
-
-
-def doc_fingerprint_fast(col: Column | str) -> Column:
-    """Production-path content fingerprint: ONE JVM xxhash64 call per
-    row vs the poly fold's per-character interpreted HOF (~len(text)
-    lambda evaluations). Same contract as ``doc_fingerprint`` — a
-    nonnegative long < 1e9+7 usable for `% rate` bucket selection —
-    but NOT oracle-reproducible (DuckDB has no xxhash64 with Spark's
-    seed); use it wherever no SQL oracle needs to recompute the value
-    (corpus pipeline sampling/accounting), and keep the poly fold where
-    one does (the gated stratified_sample / source_stats queries)."""
-    return F.pmod(F.xxhash64(_c(col)), F.lit(_FP_MOD).cast("long"))
+    """Content fingerprint of the raw text: ``crc32`` of its UTF-8
+    bytes mod 1e9+7, one native call per row. crc32 is public and
+    fully specified (zlib's), so the DuckDB oracles recompute the
+    identical value (``queries._FP_SQL``). NULL text gives NULL, empty
+    text 0."""
+    return F.pmod(F.crc32(F.encode(_c(col), "UTF-8")), F.lit(_FP_MOD).cast("long"))
 
 
 def strip_markup(col: Column | str) -> Column:

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from hadoop_app_spark.functions.text import (
     doc_fingerprint,
-    doc_fingerprint_fast,
     ngrams,
     ngrams_from_tokens,
     quality_score,
@@ -263,7 +262,6 @@ def stratified_sample(
     text_col: str = "text",
     rates: dict[str, int] | None = None,
     default_rate: int = STRATA_DEFAULT,
-    fingerprint: str = "poly",
 ) -> DataFrame:
     """Deterministic per-stratum sample: keep a row iff
     content_fingerprint % 1000 < rate[stratum] (per-mille rates).
@@ -272,18 +270,16 @@ def stratified_sample(
     stable under re-runs/re-partitioning — but with per-language rates
     (the "downsample English, keep the tail languages" rebalancing every
     multilingual corpus build does). Single scan, no shuffle.
-
-    ``fingerprint='fast'`` keys membership on xxhash64 (one JVM hash
-    call/row) instead of the oracle-reproducible per-char poly fold —
-    the production choice; membership differs but is equally
-    deterministic and rate-accurate.
     """
     rates = STRATA_RATES if rates is None else rates
     rate = F.lit(default_rate)
     for stratum, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == stratum, F.lit(r)).otherwise(rate)
-    fp = doc_fingerprint_fast if fingerprint == "fast" else doc_fingerprint
-    return df.withColumn("_fp", fp(text_col)).where(F.col("_fp") % 1000 < rate).drop("_fp")
+    return (
+        df.withColumn("_fp", doc_fingerprint(text_col))
+        .where(F.col("_fp") % 1000 < rate)
+        .drop("_fp")
+    )
 
 
 def sample_k_per_group(
@@ -292,7 +288,6 @@ def sample_k_per_group(
     k: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fingerprint: str = "poly",
 ) -> DataFrame:
     """Exactly min(k, |group|) rows per group, deterministically: rank
     rows inside each group by (content fingerprint, id) and keep the
@@ -305,13 +300,10 @@ def sample_k_per_group(
     regardless of partitioning); the id tiebreak pins exact-duplicate
     content. Per-group rank is a keyed row_number window that Spark
     prunes map-side past k (WindowGroupLimit) — a hot group never
-    buffers beyond the cap, unlike collect_list-then-slice.
-    ``fingerprint='fast'`` swaps the oracle-reproducible poly fold for
-    one xxhash64 JVM call per row (the production choice)."""
-    fp = doc_fingerprint_fast if fingerprint == "fast" else doc_fingerprint
+    buffers beyond the cap, unlike collect_list-then-slice."""
     w = Window.partitionBy(group_col).orderBy(F.col("_fp"), F.col(id_col))
     return (
-        df.withColumn("_fp", fp(text_col))
+        df.withColumn("_fp", doc_fingerprint(text_col))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .drop("_fp", "_rn")
@@ -398,7 +390,6 @@ def mixture_rebalance(
     weights: dict[str, float],
     text_col: str = "text",
     id_col: str = "doc_id",
-    fingerprint: str = "poly",
     rate_grain: int = 1_000_000,
 ) -> DataFrame:
     """Downsample groups so kept TOKEN totals approach target mixture
@@ -420,8 +411,7 @@ def mixture_rebalance(
     Scale shape: ONE aggregate for the token totals (bounded collect —
     one row per group, the same side-channel class as partition counts
     or IVF centroids), then a single-scan CASE-threshold filter; no
-    join, no shuffle of the corpus. ``fingerprint='fast'`` swaps the
-    oracle-reproducible poly fold for xxhash64 (production).
+    join, no shuffle of the corpus.
 
     Contract: ``group_col`` must be a SOURCE-MIXTURE column (bounded
     cardinality — the same class as ``weights``' key set). The token
@@ -456,11 +446,14 @@ def mixture_rebalance(
     thr = {
         g: int(math.floor(weights[g] * cap / t * rate_grain)) for g, t in totals.items()
     }
-    fp = doc_fingerprint_fast if fingerprint == "fast" else doc_fingerprint
     rate = F.lit(0).cast("long")
     for g, th in sorted(thr.items()):
         rate = F.when(F.col(group_col) == g, F.lit(th)).otherwise(rate)
-    return df.withColumn("_fp", fp(text_col)).where(F.col("_fp") % rate_grain < rate).drop("_fp")
+    return (
+        df.withColumn("_fp", doc_fingerprint(text_col))
+        .where(F.col("_fp") % rate_grain < rate)
+        .drop("_fp")
+    )
 
 
 def alpha_mixture_sample(
@@ -469,7 +462,6 @@ def alpha_mixture_sample(
     text_col: str = "text",
     alpha: float = 0.5,
     rate_grain: int = 1_000_000,
-    fingerprint: str = "poly",
 ) -> DataFrame:
     """Temperature-based source re-balancing (the multilingual
     alpha-sampling recipe — Lample & Conneau 2019 §3.1, XLM-R): sample
@@ -527,7 +519,6 @@ def alpha_mixture_sample(
             )
             for g, n in totals.items()
         }
-    fp = doc_fingerprint_fast if fingerprint == "fast" else doc_fingerprint
     from pyspark.sql import types as T
 
     thr_schema = T.StructType(
@@ -540,27 +531,23 @@ def alpha_mixture_sample(
         sorted(thr.items()), thr_schema
     )
     return (
-        df.withColumn("_fp", fp(text_col))
+        df.withColumn("_fp", doc_fingerprint(text_col))
         .join(F.broadcast(thr_df), group_col)
         .where(F.col("_fp") % rate_grain < F.col("_thr"))
         .drop("_fp", "_thr")
     )
 
 
-def source_stats(df: DataFrame, text_col: str = "text", fingerprint: str = "poly") -> DataFrame:
+def source_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-source corpus accounting: docs, chars, tokens, exact-distinct
-    content count, and quality mass — one hash aggregation keyed by
-    source (the curation dashboard / per-domain budget query).
-
-    ``fingerprint='fast'`` counts distinct content by raw xxhash64
-    (fewer collisions than the 1e9+7 poly fold AND no per-char HOF) —
-    use unless a SQL oracle must recompute the fingerprints."""
-    fp = (lambda c: F.xxhash64(F.col(c))) if fingerprint == "fast" else doc_fingerprint
+    content count (by content fingerprint), and quality mass — one hash
+    aggregation keyed by source (the curation dashboard / per-domain
+    budget query)."""
     enriched = df.select(
         "source",
         "n_chars",
         token_count(text_col).alias("n_tokens"),
-        fp(text_col).alias("fp"),
+        doc_fingerprint(text_col).alias("fp"),
         quality_score(text_col).alias("quality"),
     )
     return enriched.groupBy("source").agg(
@@ -1112,7 +1099,6 @@ def source_overlap_matrix(
     df: DataFrame,
     text_col: str = "text",
     source_col: str = "source",
-    fingerprint: str = "poly",
 ) -> DataFrame:
     """-> [source_a, source_b, n_shared]: for every source pair
     (a < b), how many distinct content fingerprints appear in BOTH —
@@ -1126,11 +1112,9 @@ def source_overlap_matrix(
     most |sources|^2 rows. The join input is duplicate-free by
     construction, so a fingerprint shared k ways contributes exactly
     C(k,2) ordered pairs — never a row explosion over raw copies.
-    ``fingerprint='fast'`` uses xxhash64 (production; no SQL oracle).
     """
-    fp = (lambda c: F.xxhash64(F.col(c))) if fingerprint == "fast" else doc_fingerprint
     keyed = df.select(
-        F.col(source_col).alias("_src"), fp(text_col).alias("_fp")
+        F.col(source_col).alias("_src"), doc_fingerprint(text_col).alias("_fp")
     ).distinct()
     a = keyed.select(F.col("_src").alias("source_a"), "_fp")
     b = keyed.select(F.col("_src").alias("source_b"), "_fp")
@@ -1147,7 +1131,6 @@ def corpus_diff(
     new: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fingerprint: str = "poly",
 ) -> DataFrame:
     """-> [id, change] over two corpus snapshots: 'added' (id only in
     new), 'removed' (id only in old), 'changed' (id in both, content
@@ -1158,15 +1141,12 @@ def corpus_diff(
     projection; ONE full outer join on the id hash key classifies every
     row; no window, no collect. Unchanged docs drop out (the usual
     ~99% at 100 TB), so output is proportional to churn, not corpus.
-    ``fingerprint='fast'`` swaps the oracle-reproducible poly fold for
-    xxhash64 (production).
     """
-    fp = (lambda c: F.xxhash64(F.col(c))) if fingerprint == "fast" else doc_fingerprint
-    # explicit presence markers: a NULL-text doc has a NULL poly
+    # explicit presence markers: a NULL-text doc has a NULL content
     # fingerprint, so fp nullability CANNOT stand in for row absence
     # (it would classify a removed NULL-text doc as 'added')
-    o = old.select(F.col(id_col), fp(text_col).alias("_ofp"), F.lit(1).alias("_o"))
-    n = new.select(F.col(id_col), fp(text_col).alias("_nfp"), F.lit(1).alias("_n"))
+    o = old.select(F.col(id_col), doc_fingerprint(text_col).alias("_ofp"), F.lit(1).alias("_o"))
+    n = new.select(F.col(id_col), doc_fingerprint(text_col).alias("_nfp"), F.lit(1).alias("_n"))
     j = o.join(n, id_col, "full_outer")
     change = (
         F.when(F.col("_o").isNull(), F.lit("added"))

@@ -5,26 +5,23 @@ n-gram Jaccard, and embedding-cosine near-dup — each designed to be
 shuffle-efficient at 100 TB:
 
 - exact_dedup: one hash-aggregate on the key (no sort).
-- minhash: shingles -> k hash functions -> per-band bucket join. The
-  candidate join is an equi-join on (band, band_hash) so only docs
-  sharing a band bucket ever meet — never an O(n^2) cross product.
+- minhash: one mapInPandas pass per doc (crc32 token hashes, numpy
+  rolling shingle combine, k permutation minima, no shuffle) -> per-band
+  bucket join. The candidate join is an equi-join on (band, band_hash)
+  so only docs sharing a band bucket ever meet — never an O(n^2) cross
+  product.
 - simhash: one mapInPandas pass per doc (salted crc32 token hashes,
   numpy bit-sums, no shuffle) -> bucket by simhash value (near-dup =
   equal 16-bit simhash here; Hamming-distance banding is the same
   bucket-join with bit slices).
 - ngram_jaccard: pairwise only within candidate buckets.
 
-Hashing uses public, fully specified functions the DuckDB oracles
-re-derive bit-for-bit: the polynomial fold of
-functions.text.doc_fingerprint (MinHash ``hash_fn="poly"``) and
-zlib.crc32 (the numpy MinHash and SimHash kernels). xxhash64 is the
-built-in, faster MinHash hash, at the cost of oracle-exactness, not
-semantics.
-
-``minhash_signatures``, the banding joins and the index writes are
-Catalyst expressions. The SimHash fingerprint and
-``minhash_signatures_vectorized`` run Python (numpy) in the row path,
-one mapInPandas pass each.
+Both fingerprint kernels hash tokens with zlib.crc32 of the UTF-8
+bytes: a public, fully specified function the DuckDB oracles re-derive
+bit-for-bit (``queries._crc_minhash_cte`` and ``_simhash_sh_cte``).
+The two kernels run Python (numpy) in the row path, one mapInPandas
+pass each; the banding joins and the index writes are Catalyst
+expressions.
 """
 
 from __future__ import annotations
@@ -45,15 +42,6 @@ _MOD = 1_000_000_007
 # fixed odd multipliers/offsets for the k minhash permutations
 _MINHASH_A = (769, 1543, 3079, 6151, 12289, 24593, 49157, 98317)
 _MINHASH_B = (12582917, 25165843, 50331653, 100663319, 201326611, 402653189, 805306457, 1610612741)
-
-
-def _poly_hash(col: Column) -> Column:
-    """Engine-agnostic string hash — THE definition lives in
-    functions.text.doc_fingerprint (same fold, same modulus); a second
-    copy here would silently drift from the DuckDB oracles."""
-    from hadoop_app_spark.functions.text import doc_fingerprint
-
-    return doc_fingerprint(col)
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -87,76 +75,27 @@ def minhash_signatures(
     id_col: str,
     n: int = 3,
     k: int = 8,
-    hash_fn: str = "xxhash64",
     repartition_to: int | None = None,
 ) -> DataFrame:
-    """doc -> k-wide MinHash signature over word n-gram shingles.
+    """doc -> k-wide MinHash signature over word n-gram shingles, in one
+    mapInPandas pass: no explode, no k-min aggregation, no shuffle (the
+    downstream banding join is the pipeline's only exchange).
 
-    signature[i] = min over shingles of (a_i * h(shingle) + b_i) % M.
+    signature[i] = min over shingles of (a_i * h(shingle) + b_i) % M,
+    with M = 1e9+7 and (a_i, b_i) = ``_MINHASH_A[i]``, ``_MINHASH_B[i]``.
+    Tokens are Python ``str.lower().split()`` (the engine's
+    Unicode-whitespace contract, pinned by tests/test_property.py); a
+    token hashes to ``zlib.crc32(utf8) % M``; a shingle hash is the
+    rolling combine ``h = (h * 1000003 + t) % M`` over n consecutive
+    token hashes. All k minima come from one (k, n_shingles) numpy
+    broadcast. Docs with fewer than n tokens (including empty and null
+    text) have no shingles and are absent. crc32 is public and fully
+    specified, so the DuckDB oracles re-derive every signature
+    (``queries._crc_minhash_cte``).
 
-    Shape chosen for scale: the shingle+hash chain (a nested HOF tree,
-    evaluated interpreted — not codegen, not subexpression-eliminated)
-    runs exactly ONCE per row, inside the explode; the k permutation
-    minima are then plain codegen'd aggregates with map-side partial
-    combine, so the shuffle carries k longs per (doc, map partition).
-    An earlier formulation (k array_min(transform(...)) projections
-    over an aliased hash array) re-evaluated the chain k+1 times —
-    CollapseProject inlines the alias and lambda expressions are
-    exempt from subexpression elimination.
-
-    repartition_to: round-robin the raw docs first — the CPU-heavy
-    chain otherwise inherits the scan's partitioning (a single small
-    parquet file = one core; filters/projects get pushed below a later
-    repartition, explode does not).
-
-    hash_fn='xxhash64' (default) stays JVM-native — the scale path.
-    'poly' uses the engine-agnostic polynomial fold (bit-reproducible
-    by other engines, ~50x slower: interpreted char fold).
-    """
-    if k > len(_MINHASH_A):
-        raise ValueError(f"k <= {len(_MINHASH_A)} supported")
-    shingle_hash = (
-        (lambda s: F.pmod(F.xxhash64(s), F.lit(_MOD))) if hash_fn == "xxhash64" else (lambda s: _poly_hash(s))
-    )
-    hashes = F.transform(ngrams(F.col(text_col), n), shingle_hash)
-    base = df.select(id_col, text_col)
-    if repartition_to:
-        base = base.repartition(repartition_to)
-    exploded = base.select(id_col, F.explode(hashes).alias("_h"))  # zero-shingle docs drop here
-    # the k permutation minima as ONE parsed SQL array: the per-k
-    # Column-API loop this replaces paid ~6 py4j round-trips per
-    # permutation on every plan construction (r12); values identical
-    # (same int64 arithmetic, SQL long literals == lit() ints here)
-    mins = ", ".join(
-        f"min((_h * {a}L + {b}L) % {_MOD}L)"
-        for a, b in zip(_MINHASH_A[:k], _MINHASH_B[:k])
-    )
-    return exploded.groupBy(id_col).agg(F.expr(f"array({mins})").alias("signature"))
-
-
-def minhash_signatures_vectorized(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    k: int = 8,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    """Vectorized twin of minhash_signatures — one mapInPandas pass
-    computes each doc's k-wide signature directly; no explode, no
-    k-min aggregation, no shuffle at all (the downstream banding join
-    is the pipeline's only exchange).
-
-    Kernel: tokens via Python ``str.lower().split()`` (the engine's
-    Unicode-whitespace contract, pinned by tests/test_property.py),
-    token hash via zlib.crc32 (C speed, deterministic), shingle hash
-    as a numpy rolling polynomial combine of n consecutive token
-    hashes, then all k permutation minima in one (k, n_shingles)
-    broadcasted min. Hash family differs from the HOF forms (crc32
-    combine vs xxhash64/poly of the joined shingle string) — same
-    MinHash semantics, different buckets; pipeline properties (exact
-    dups collide on every band, signature width/range) are pinned in
-    pytest. Zero-shingle docs drop, matching the explode form.
+    repartition_to: round-robin the raw docs first — the kernel
+    otherwise inherits the scan's partitioning (a single small parquet
+    file = one core).
     """
     import numpy as np
     import pandas as pd
@@ -173,8 +112,8 @@ def minhash_signatures_vectorized(
         for pdf in batches:
             ids, sigs = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                # null text == no shingles (the Catalyst twin drops the
-                # doc); an unguarded .lower() would kill the whole job
+                # null text == no shingles; an unguarded .lower() would
+                # kill the whole job
                 toks = (text or "").lower().split()
                 m = len(toks) - n + 1
                 if m <= 0:
@@ -196,6 +135,10 @@ def minhash_signatures_vectorized(
         base = base.repartition(repartition_to)
     id_type = df.schema[id_col].dataType.simpleString()
     return base.mapInPandas(run, f"{id_col} {id_type}, signature array<long>")
+
+
+# the kernel's former name, kept for callers that import it
+minhash_signatures_vectorized = minhash_signatures
 
 
 def minhash_band_rows(signatures: DataFrame, id_col: str, bands: int = 4) -> DataFrame:
@@ -344,7 +287,6 @@ def minhash_dedup(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
     repartition_to: int | None = None,
 ) -> DataFrame:
     """Drop the higher-id member of every candidate near-dup pair.
@@ -359,9 +301,7 @@ def minhash_dedup(
     materialized `minhash_lsh_pairs` rows — identical survivors, two
     exchanges and the in-bucket pair expansion cheaper.
     """
-    sigs = minhash_signatures(
-        df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
-    )
+    sigs = minhash_signatures(df, text_col, id_col, n, k, repartition_to=repartition_to)
     losers = _band_min_losers(minhash_band_rows(sigs, id_col, bands), id_col).distinct()
     return df.join(losers, id_col, "left_anti")
 
@@ -373,6 +313,14 @@ def _set_index_params(spark, table: str, **params) -> None:
     with incompatible buckets and silently skipping index dedup."""
     kv = ", ".join(f"'dedup.{k}'='{v}'" for k, v in params.items())
     spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
+
+
+def _minhash_params(n: int = 3, k: int = 8, bands: int = 4) -> dict:
+    """The build parameters a MinHash index records and every increment
+    must match, including the token hash family of
+    :func:`minhash_signatures`: an index recording another family
+    (``xxhash64`` or ``poly``) has incompatible buckets."""
+    return {"n": n, "k": k, "bands": bands, "hash_fn": "crc32"}
 
 
 def _index_props(spark, table: str) -> dict:
@@ -422,7 +370,6 @@ def build_minhash_index(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
     n_buckets: int = 8,
     repartition_to: int | None = None,
 ) -> None:
@@ -444,12 +391,10 @@ def build_minhash_index(
     selection (UserNewcar.java:241-247) — this is that daily pattern
     lifted to the dedup layer with state that persists between days.
     """
-    sigs = minhash_signatures(
-        df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
-    )
+    sigs = minhash_signatures(df, text_col, id_col, n, k, repartition_to=repartition_to)
     rows = minhash_band_rows(sigs, id_col, bands).select("bucket", F.col(id_col).alias("id"))
     write_bucketed(rows, index_table, ["bucket"], n_buckets)
-    _set_index_params(df.sparkSession, index_table, n=n, k=k, bands=bands, hash_fn=hash_fn)
+    _set_index_params(df.sparkSession, index_table, **_minhash_params(n, k, bands))
 
 
 def seed_minhash_index(
@@ -460,7 +405,6 @@ def seed_minhash_index(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
     n_buckets: int = 8,
     repartition_to: int | None = None,
 ) -> DataFrame:
@@ -483,7 +427,7 @@ def seed_minhash_index(
     from pyspark import StorageLevel
 
     sigs = minhash_signatures(
-        df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
+        df, text_col, id_col, n, k, repartition_to=repartition_to
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         banded = minhash_band_rows(sigs, id_col, bands)
@@ -495,9 +439,7 @@ def seed_minhash_index(
             "bucket", F.col(id_col).alias("id")
         )
         write_bucketed(rows, index_table, ["bucket"], n_buckets)
-        _set_index_params(
-            df.sparkSession, index_table, n=n, k=k, bands=bands, hash_fn=hash_fn
-        )
+        _set_index_params(df.sparkSession, index_table, **_minhash_params(n, k, bands))
     finally:
         sigs.unpersist()
     return df.join(losers, id_col, "left_anti")
@@ -511,7 +453,6 @@ def dedup_increment(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
     repartition_to: int | None = None,
     append: bool = True,
     dropped_table: str | None = None,
@@ -579,14 +520,12 @@ def dedup_increment(
     # under appends, so a foreachBatch sink resolves them once at
     # stream start instead of two catalog round-trips per micro-batch;
     # the parameter VALIDATION itself always runs.
-    _check_index_params(
-        spark, index_table, props=index_props, n=n, k=k, bands=bands, hash_fn=hash_fn
-    )
+    _check_index_params(spark, index_table, props=index_props, **_minhash_params(n, k, bands))
     # cache the narrow [id, k-minima] rows: the index probe, the intra
     # pairs and the survivor append are three separate consumers that
     # would each re-run the tokenize/shingle/minhash pipeline
     sigs = minhash_signatures(
-        new_batch, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to
+        new_batch, text_col, id_col, n, k, repartition_to=repartition_to
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         banded = minhash_band_rows(sigs, id_col, bands)
@@ -1227,7 +1166,6 @@ def leakage_safe_split(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
     repartition_to: int | None = None,
 ) -> DataFrame:
     """Train/val/test assignment where near-duplicate documents can
@@ -1265,7 +1203,7 @@ def leakage_safe_split(
     if total != 100:
         raise ValueError(f"split weights must sum to 100, got {total}")
     pairs = minhash_lsh_pairs(
-        minhash_signatures(df, text_col, id_col, n, k, hash_fn=hash_fn, repartition_to=repartition_to),
+        minhash_signatures(df, text_col, id_col, n, k, repartition_to=repartition_to),
         id_col,
         bands,
     )

@@ -7,10 +7,7 @@ Method, re-expressed Spark-first and oracle-exactly:
 1. Features: unigrams + bigrams of the lowercased whitespace tokens,
    hashed into ``n_buckets`` buckets. The hash is md5 — native in the
    JVM and in DuckDB (same standard algorithm), so the oracle
-   recomputes identical buckets at native speed; pass
-   ``fingerprint='fast'`` for the xxhash64 path (cheapest, no SQL
-   twin) or ``'poly'`` for the per-character fold the other oracled
-   fingerprints use (~15x slower here).
+   recomputes identical buckets at native speed.
 2. Bucket models: one partial-combine hash aggregation per corpus
    gives target counts ct[b] (total T) and raw counts cr[b] (total
    R) — two B-row tables, broadcast-joined back to the features.
@@ -39,29 +36,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_app_spark.functions.text import _FP_MOD, tokenize
+from hadoop_app_spark.functions.text import tokenize
 
 
-def _gram_bucket(gram: Column, n_buckets: int, fingerprint: str) -> Column:
-    if fingerprint == "md5":
-        # ONE native JVM hash call per gram, and DuckDB's md5 is the
-        # same standard algorithm — cross-engine AND fast, unlike the
-        # per-character interpreted poly fold (measured 44s vs 3s at
-        # sf0.1 for this query). 8 hex chars = 32 bits, plenty for a
-        # bucket count knob.
-        fp = F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
-    elif fingerprint == "poly":
-        chars = F.split(gram, "", -1)
-        fp = F.aggregate(
-            chars,
-            F.lit(0).cast("long"),
-            lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(_FP_MOD).cast("long"),
-        )
-    elif fingerprint == "fast":
-        fp = F.pmod(F.xxhash64(gram), F.lit(_FP_MOD).cast("long"))
-    else:
-        raise ValueError(f"unknown fingerprint {fingerprint!r}")
-    return fp % F.lit(n_buckets).cast("long")
+def _md5_long(col: Column) -> Column:
+    """The first 8 hex chars of md5 as a long: ONE native JVM hash call
+    per value, and DuckDB's md5 is the same standard algorithm, so the
+    oracle recomputes it exactly. 32 bits, plenty for a bucket-count
+    knob or a uniform."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def ngram_occurrences(
@@ -105,18 +88,12 @@ def hashed_ngram_features(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 4096,
-    fingerprint: str = "md5",
 ) -> DataFrame:
     """-> [id, bucket]: occurrence rows with bucket =
-    hash(gram) % n_buckets. Default hash is md5 (native in the JVM
-    AND in DuckDB, same standard algorithm — the cross-engine hash
-    that is also fast); 'fast' = xxhash64 (cheapest, no SQL twin);
-    'poly' = the per-character fold (kept for parity with the other
-    poly-fingerprint oracles, but ~15x slower than md5 here — a
-    gram-sized interpreted lambda per character)."""
+    md5(gram) % n_buckets (``_md5_long``)."""
     occ = ngram_occurrences(df, text_col, id_col)
     return occ.select(
-        id_col, _gram_bucket(F.col("_gram"), n_buckets, fingerprint).alias("bucket")
+        id_col, (_md5_long(F.col("_gram")) % F.lit(n_buckets).cast("long")).alias("bucket")
     )
 
 
@@ -126,7 +103,6 @@ def dsir_scored(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 4096,
-    fingerprint: str = "md5",
 ) -> DataFrame:
     """Importance weight of every raw doc toward *target* ->
     [id, n_features, weight] (unselected — the scoring core
@@ -145,7 +121,7 @@ def dsir_scored(
     to Scan ExistingRDD after first execution, breaking deterministic
     plan reports)."""
     feats = (
-        hashed_ngram_features(raw, text_col, id_col, n_buckets, fingerprint)
+        hashed_ngram_features(raw, text_col, id_col, n_buckets)
         .groupBy(id_col, "bucket")
         .agg(F.count("*").alias("n"))
     )
@@ -157,7 +133,7 @@ def dsir_scored(
     # grouping() distinguishes the total row robustly (a real NULL
     # bucket cannot occur, but the indicator costs nothing).
     t_roll = (
-        hashed_ngram_features(target, text_col, id_col, n_buckets, fingerprint)
+        hashed_ngram_features(target, text_col, id_col, n_buckets)
         .rollup("bucket")
         .agg(F.count("*").alias("ct"), F.grouping("bucket").alias("_g"))
     )
@@ -205,12 +181,11 @@ def dsir_select(
     id_col: str = "doc_id",
     k: int = 100,
     n_buckets: int = 4096,
-    fingerprint: str = "md5",
 ) -> DataFrame:
     """Top-``k`` raw docs by importance weight -> [id, n_features,
     weight] ordered (weight desc, id): the zero-temperature limit of
     the paper's resampling, TakeOrderedAndProject (no global sort)."""
-    scored = dsir_scored(raw, target, text_col, id_col, n_buckets, fingerprint)
+    scored = dsir_scored(raw, target, text_col, id_col, n_buckets)
     return scored.orderBy(F.col("weight").desc(), F.col(id_col)).limit(k)
 
 
@@ -221,7 +196,6 @@ def dsir_resample(
     id_col: str = "doc_id",
     k: int = 100,
     n_buckets: int = 4096,
-    fingerprint: str = "md5",
     temperature: float = 1.0,
     grain: int = 1 << 20,
 ) -> DataFrame:
@@ -244,21 +218,8 @@ def dsir_resample(
     partial top-k — nothing beyond dsir_scored's passes."""
     if temperature <= 0:
         raise ValueError("temperature must be > 0; use dsir_select for the argmax limit")
-    scored = dsir_scored(raw, target, text_col, id_col, n_buckets, fingerprint)
-    if fingerprint == "md5":
-        fp = F.conv(F.substring(F.md5(F.col(text_col)), 1, 8), 16, 10).cast("long")
-    elif fingerprint == "poly":
-        chars = F.split(F.col(text_col), "", -1)
-        fp = F.aggregate(
-            chars,
-            F.lit(0).cast("long"),
-            lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(_FP_MOD).cast("long"),
-        )
-    elif fingerprint == "fast":
-        fp = F.xxhash64(F.col(text_col))
-    else:
-        raise ValueError(f"unknown fingerprint {fingerprint!r}")
-    u = (F.pmod(fp, F.lit(grain)) + F.lit(0.5)) / F.lit(float(grain))
+    scored = dsir_scored(raw, target, text_col, id_col, n_buckets)
+    u = (F.pmod(_md5_long(F.col(text_col)), F.lit(grain)) + F.lit(0.5)) / F.lit(float(grain))
     uniforms = raw.select(F.col(id_col), (-F.log(-F.log(u))).alias("_gumbel"))
     perturbed = scored.join(uniforms, id_col).withColumn(
         "_key", F.col("weight") / F.lit(float(temperature)) + F.col("_gumbel")

@@ -39,7 +39,7 @@ from hadoop_app_spark.operators.corpus import (
 from hadoop_app_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    minhash_signatures_vectorized,
+    minhash_signatures,
 )
 from hadoop_app_spark.functions.metrics import observe_counts
 
@@ -187,7 +187,7 @@ def curate(
 
     # 4. near-dup removal — MinHash signatures into capped LSH banding;
     # the min-id side of each candidate pair survives
-    sigs = minhash_signatures_vectorized(deduped, "text", "doc_id")
+    sigs = minhash_signatures(deduped, "text", "doc_id")
     losers = (
         minhash_lsh_pairs(sigs, "doc_id")
         .select(F.col("id_b").alias("doc_id"))
@@ -232,9 +232,7 @@ def curate(
     # rung of the ladder (clean first, then pick what looks like the
     # target domain): top-k by hashed-ngram importance weight toward
     # ``dsir_target``, survivors semi-joined back by id so the corpus
-    # columns ride through untouched. Fast fingerprint — inside the
-    # pipeline nothing recomputes buckets cross-engine, so the cheapest
-    # hash wins (the stratified_sample convention below).
+    # columns ride through untouched.
     if dsir_target is not None:
         from hadoop_app_spark.operators.dsir import dsir_select
 
@@ -245,19 +243,13 @@ def curate(
             id_col="doc_id",
             k=dsir_k,
             n_buckets=dsir_buckets,
-            fingerprint="fast",
         ).select("doc_id")
         near_deduped = near_deduped.join(picked, "doc_id", "left_semi")
         near_deduped, obs["dsir_selected"] = observe_counts(near_deduped)
 
-    # 6. optional deterministic per-language downsample — fast (xxhash64)
-    # fingerprint: no oracle recomputes pipeline membership, and the poly
-    # fold costs a per-character interpreted HOF per doc
-    out = (
-        stratified_sample(near_deduped, "lang", "text", fingerprint="fast")
-        if sample
-        else near_deduped
-    )
+    # 6. optional deterministic per-language downsample, keyed on the
+    # content fingerprint (one native crc32 call per doc)
+    out = stratified_sample(near_deduped, "lang", "text") if sample else near_deduped
     out, obs["final"] = observe_counts(out)
     return out
 
@@ -305,7 +297,7 @@ def run_corpus_pipeline(
     docs = load_table(spark, sf_dir, "documents")
     observations: dict[str, Observation] = {}
     curated = curate(docs, sample=sample, observations=observations)
-    stats = source_stats(curated, "text", fingerprint="fast")
+    stats = source_stats(curated, "text")
     rows = stats.collect()  # one action drives every counter
     counts = {stage: o.get["rows"] for stage, o in observations.items()}
     counts["pii_rows"] = observations["scrubbed"].get["pii_rows"]

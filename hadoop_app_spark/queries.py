@@ -22,8 +22,8 @@ Exactness discipline (so value-hashes match bit-for-bit):
   different accumulation orders cannot diverge);
 - per-row arithmetic is written with the same textual operand order in
   both dialects (IEEE doubles -> identical bits);
-- engine-specific hashes are avoided: fingerprints/minhash use the
-  polynomial fold or zlib.crc32, both re-derived in DuckDB SQL;
+- engine-specific hashes are avoided: content fingerprints, MinHash and
+  SimHash all use zlib.crc32, re-derived from scratch in DuckDB SQL;
 - time buckets are emitted as formatted strings, not timestamps.
 
 Queries returning data that only Spark can express (approx sketches,
@@ -2790,9 +2790,67 @@ def q_array_hof_functions(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-_FP_SQL = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-                           list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-                           (acc, c) -> (acc * 31 + c) % 1000000007)"""
+# --- CRC-32 derived from scratch in DuckDB SQL -----------------------------
+#
+# The numpy kernels (operators/dedup.minhash_signatures, simhash_wide)
+# hash tokens with zlib.crc32, and functions/text.doc_fingerprint hashes
+# the whole text with Spark's crc32 — a PUBLIC, fully-specified
+# algorithm (reflected polynomial 0xEDB88320): the
+# 256-entry table is 8 shift-xor rounds per byte value, and the
+# running CRC folds one byte per step. Both are expressible in SQL —
+# the table as a recursive CTE, the fold as list_reduce — so the
+# crc32 hash family has a from-scratch DuckDB twin and those kernels
+# and every content-fingerprint entry are value-checked oracles.
+# Cost note: the CRCs are computed once per DISTINCT token (the
+# corpus vocabulary), never per occurrence.
+
+_CRC32_CTES = """crcgen(i, c, s) AS (
+            SELECT i, CAST(i AS BIGINT), 0 FROM range(256) gen(i)
+            UNION ALL
+            SELECT i, CASE WHEN c % 2 = 1 THEN xor(c // 2, 3988292384)
+                           ELSE c // 2 END, s + 1
+            FROM crcgen WHERE s < 8),
+        crctab AS (SELECT list(c ORDER BY i) AS tab FROM crcgen WHERE s = 8)"""
+
+
+def _utf8_bytes(expr: str) -> str:
+    """UTF-8 bytes of a VARCHAR expression as a BIGINT list (codepoint
+    -> 1-4 byte expansion); string_split(x, '') is per-character,
+    unicode() the codepoint."""
+    return f"""flatten(list_transform(string_split({expr}, ''), ch ->
+             CASE
+               WHEN unicode(ch) < 128 THEN [unicode(ch)]
+               WHEN unicode(ch) < 2048
+                 THEN [192 + unicode(ch) // 64, 128 + unicode(ch) % 64]
+               WHEN unicode(ch) < 65536
+                 THEN [224 + unicode(ch) // 4096, 128 + (unicode(ch) // 64) % 64,
+                       128 + unicode(ch) % 64]
+               ELSE [240 + unicode(ch) // 262144, 128 + (unicode(ch) // 4096) % 64,
+                     128 + (unicode(ch) // 64) % 64, 128 + unicode(ch) % 64]
+             END))"""
+
+
+def _crc32_of(bytes_expr: str) -> str:
+    """zlib.crc32 over a BIGINT byte-list expression: init 0xFFFFFFFF,
+    per byte crc = (crc >> 8) XOR tab[(crc XOR byte) & 0xFF], final
+    complement. Requires ``crctab`` (one row, column ``tab``) in scope."""
+    return (
+        f"xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT), {bytes_expr}), "
+        f"(acc, byt) -> xor(acc // 256, tab[xor(acc, byt) % 256 + 1])), 4294967295)"
+    )
+
+
+def _fp_sql(expr: str) -> str:
+    """functions/text.doc_fingerprint of a VARCHAR expression:
+    crc32(utf8) % 1e9+7. A self-contained scalar subquery (it carries
+    its own crc32 table), so it drops into any projection."""
+    return (
+        f"((WITH RECURSIVE {_CRC32_CTES} "
+        f"SELECT {_crc32_of(_utf8_bytes(expr))} FROM crctab) % 1000000007)"
+    )
+
+
+_FP_SQL = _fp_sql("text")
 
 _QUALITY_SQL = f"""0.3 * least(length(text) / 500.0, 1.0)
              + 0.3 * (CASE WHEN length(text) > 0
@@ -2863,8 +2921,9 @@ def _language_id_oracle() -> str:
     doc="text-analysis scalar family in one scan (north star: text analysis): "
     "whitespace + BPE-ish token counts, quality heuristic, English stopword "
     "ratio, stopword-profile language ID (oracle regenerates the same tie-break "
-    "cascade in SQL), and the engine-agnostic polynomial rolling-hash "
-    "fingerprint — all pure Catalyst expressions, one pass over the corpus",
+    "cascade in SQL), and the crc32 content fingerprint (which the oracle "
+    "re-derives from scratch) — all pure Catalyst expressions, one pass over "
+    "the corpus",
 )
 def q_text_metrics(spark, sf_dir):
     # CPU-bound expression chain over a (locally) single-file scan:
@@ -2948,52 +3007,6 @@ def q_gopher_gates(spark, sf_dir):
     return gopher_quality_gates(d, "text", "doc_id")
 
 
-# --- CRC-32 derived from scratch in DuckDB SQL -----------------------------
-#
-# The numpy kernels (operators/dedup.minhash_signatures_vectorized,
-# simhash_wide) hash tokens with zlib.crc32 — a PUBLIC,
-# fully-specified algorithm (reflected polynomial 0xEDB88320): the
-# 256-entry table is 8 shift-xor rounds per byte value, and the
-# running CRC folds one byte per step. Both are expressible in SQL —
-# the table as a recursive CTE, the fold as list_reduce — so the
-# crc32 hash family has a from-scratch DuckDB twin and those kernels
-# are value-checked oracles.
-# Cost note: the CRCs are computed once per DISTINCT token (the
-# corpus vocabulary), never per occurrence.
-
-_CRC32_CTES = """crcgen(i, c, s) AS (
-            SELECT i, CAST(i AS BIGINT), 0 FROM range(256) gen(i)
-            UNION ALL
-            SELECT i, CASE WHEN c % 2 = 1 THEN xor(c // 2, 3988292384)
-                           ELSE c // 2 END, s + 1
-            FROM crcgen WHERE s < 8),
-        crctab AS (SELECT list(c ORDER BY i) AS tab FROM crcgen WHERE s = 8)"""
-
-# UTF-8 bytes of a token column (codepoint -> 1-4 byte expansion);
-# string_split(tok, '') is per-character, unicode() the codepoint.
-_UTF8_BYTES = """flatten(list_transform(string_split(tok, ''), ch ->
-             CASE
-               WHEN unicode(ch) < 128 THEN [unicode(ch)]
-               WHEN unicode(ch) < 2048
-                 THEN [192 + unicode(ch) // 64, 128 + unicode(ch) % 64]
-               WHEN unicode(ch) < 65536
-                 THEN [224 + unicode(ch) // 4096, 128 + (unicode(ch) // 64) % 64,
-                       128 + unicode(ch) % 64]
-               ELSE [240 + unicode(ch) // 262144, 128 + (unicode(ch) // 4096) % 64,
-                     128 + (unicode(ch) // 64) % 64, 128 + unicode(ch) % 64]
-             END))"""
-
-
-def _crc32_of(bytes_expr: str) -> str:
-    """zlib.crc32 over a BIGINT byte-list expression: init 0xFFFFFFFF,
-    per byte crc = (crc >> 8) XOR tab[(crc XOR byte) & 0xFF], final
-    complement. Requires ``crctab`` (one row, column ``tab``) in scope."""
-    return (
-        f"xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT), {bytes_expr}), "
-        f"(acc, byt) -> xor(acc // 256, tab[xor(acc, byt) % 256 + 1])), 4294967295)"
-    )
-
-
 def _simhash_sh_cte(half_bits: int = 28) -> str:
     """CTE chain reproducing operators/dedup.simhash_wide, ending in
     ``sh(doc_id, s)``: per distinct token h1 = crc32(utf8) and h2 =
@@ -3011,7 +3024,7 @@ def _simhash_sh_cte(half_bits: int = 28) -> str:
     return f"""{_CRC32_CTES},
         toks AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
         dtok AS (SELECT DISTINCT tok FROM toks),
-        bts AS (SELECT tok, {_UTF8_BYTES} AS bts FROM dtok),
+        bts AS (SELECT tok, {_utf8_bytes("tok")} AS bts FROM dtok),
         tokcrc AS (SELECT tok,
                           {_crc32_of("bts")} % {1 << half_bits} AS h1,
                           {_crc32_of("list_prepend(CAST(1 AS BIGINT), bts)")} % {1 << half_bits} AS h2
@@ -3048,44 +3061,27 @@ def q_exact_dedup_simhash(spark, sf_dir):
     return survivors.join(sims, "doc_id")
 
 
-def _minhash_oracle() -> str:
-    """DuckDB twin of minhash_signatures(hash_fn='poly'): same 3-gram
-    shingles, same polynomial shingle hash, same (a*h+b)%M permutation
-    minima — bit-reproducible across engines."""
+def _crc_minhash_cte() -> str:
+    """CTE chain reproducing operators/dedup.minhash_signatures, ending
+    in ``sig(doc_id, sig)``: tokens in document order, token hash =
+    crc32(utf8) % 1e9+7 (computed per DISTINCT token, joined back by
+    position), shingle hash = rolling polynomial (P=1000003) over n=3
+    consecutive token hashes with mod after each step, then the 8
+    permutation minima. Docs with fewer than 3 tokens have no row.
+    Opens with the recursive crc32 table, so the caller writes
+    ``WITH RECURSIVE``."""
     from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
 
-    fp = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(s, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), (acc, c) -> (acc * 31 + c) % 1000000007)"
+    mins = ",\n                       ".join(
+        f"list_min(list_transform(hs, x -> ({a} * x + {b}) % 1000000007))"
+        for a, b in zip(_MINHASH_A, _MINHASH_B)
     )
-    a0, b0 = _MINHASH_A[0], _MINHASH_B[0]
-    a7, b7 = _MINHASH_A[7], _MINHASH_B[7]
-    return f"""
-        WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        sh AS (SELECT doc_id,
-                      [array_to_string(toks[i:i+2], ' ')
-                       for i in range(1, greatest(len(toks) - 2, 0) + 1)] AS shingles
-               FROM t),
-        h AS (SELECT doc_id, list_transform(shingles, s -> {fp}) AS hs
-              FROM sh WHERE len(shingles) > 0)
-        SELECT doc_id,
-               list_min(list_transform(hs, x -> ({a0} * x + {b0}) % 1000000007)) AS mh0,
-               list_min(list_transform(hs, x -> ({a7} * x + {b7}) % 1000000007)) AS mh7
-        FROM h
-    """
-
-
-def _crc_minhash_cte() -> str:
-    """CTE chain ``t .. hs`` reproducing minhash_signatures_vectorized's
-    shingle hashes (dedup.py:162-182): tokens in document order, token
-    hash = crc32(utf8) % 1e9+7 (computed per DISTINCT token, joined
-    back by position), shingle hash = rolling polynomial (P=1000003)
-    over n=3 consecutive token hashes with mod after each step."""
-    return f"""t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    return f"""{_CRC32_CTES},
+        t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
         tokpos AS (SELECT doc_id, unnest(toks) AS tok,
                           unnest(range(1, len(toks) + 1)) AS pos FROM t),
         dtok AS (SELECT DISTINCT tok FROM tokpos),
-        tokcrc AS (SELECT tok, {_crc32_of(_UTF8_BYTES)} % 1000000007 AS h
+        tokcrc AS (SELECT tok, {_crc32_of(_utf8_bytes("tok"))} % 1000000007 AS h
                    FROM dtok CROSS JOIN crctab),
         th AS (SELECT doc_id, list(h ORDER BY pos) AS ths
                FROM tokpos JOIN tokcrc USING (tok) GROUP BY doc_id),
@@ -3093,88 +3089,29 @@ def _crc_minhash_cte() -> str:
                       [(((ths[i] * 1000003 + ths[i+1]) % 1000000007) * 1000003
                         + ths[i+2]) % 1000000007
                        for i in range(1, greatest(len(ths) - 2, 0) + 1)] AS hs
-               FROM th WHERE len(ths) >= 3)"""
-
-
-def _minhash_signatures_fast_oracle() -> str:
-    """DuckDB twin of the crc32/numpy vectorized signature kernel —
-    same tokens, same crc32 token hashes (derived from scratch above),
-    same rolling shingle combine, same permutation minima."""
-    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
-
-    a0, b0 = _MINHASH_A[0], _MINHASH_B[0]
-    a7, b7 = _MINHASH_A[7], _MINHASH_B[7]
-    return f"""
-        WITH RECURSIVE {_CRC32_CTES},
-        {_crc_minhash_cte()}
-        SELECT doc_id,
-               list_min(list_transform(hs, x -> ({a0} * x + {b0}) % 1000000007)) AS mh0,
-               list_min(list_transform(hs, x -> ({a7} * x + {b7}) % 1000000007)) AS mh7
-        FROM hs
-    """
-
-
-def _minhash_dedup_fast_oracle(n_bands: int = 4, band_w: int = 2) -> str:
-    """Full-pipeline twin of minhash_dedup_fast: crc32-family
-    signatures -> 4 bands of width 2 -> bucket pairs -> higher id of
-    each pair drops; zero-shingle docs survive (same tail as
-    _minhash_dedup_oracle, different hash family)."""
-    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
-
-    mins = ",\n               ".join(
-        f"list_min(list_transform(hs, x -> ({a} * x + {b}) % 1000000007)) AS mh{i}"
-        for i, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
-    )
-    sig = "[" + ", ".join(f"mh{i}" for i in range(8)) + "]"
-    return f"""
-        WITH RECURSIVE {_CRC32_CTES},
-        {_crc_minhash_cte()},
-        m AS (SELECT doc_id,
-               {mins}
-              FROM hs),
-        sig AS (SELECT doc_id, {sig} AS sig FROM m),
-        banded AS (SELECT doc_id, b, sig[b*{band_w}+1 : b*{band_w}+{band_w}] AS bs
-                   FROM sig CROSS JOIN (SELECT unnest(range(0, {n_bands})) AS b)),
-        losers AS (SELECT DISTINCT x.doc_id AS id_b
-                   FROM banded a JOIN banded x
-                     ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id)
-        SELECT doc_id, n_chars FROM documents
-        WHERE doc_id NOT IN (SELECT id_b FROM losers)
-    """
+               FROM th WHERE len(ths) >= 3),
+        sig AS (SELECT doc_id,
+                       [{mins}] AS sig
+                FROM hs)"""
 
 
 @query(
     "minhash_signatures",
-    oracle=_minhash_oracle(),
-    doc="MinHash signatures over 3-gram shingles (north star: near-dup candidates). "
-    "Gate variant runs hash_fn='poly' (engine-agnostic polynomial fold) so DuckDB "
-    "reproduces every signature value; minhash_signatures_fast is the xxhash64 "
-    "JVM-native scale path with the identical plan shape.",
+    oracle=f"""
+        WITH RECURSIVE {_crc_minhash_cte()}
+        SELECT doc_id, sig[1] AS mh0, sig[8] AS mh7 FROM sig
+    """,
+    doc="MinHash signatures over 3-gram shingles (north star: near-dup "
+    "candidates): one mapInPandas pass (crc32 token hashes + numpy rolling "
+    "shingle combine + broadcasted k-way minima) — no explode, no k-min "
+    "aggregation, no shuffle. Oracled: the oracle derives zlib.crc32 from "
+    "scratch in SQL (recursive-CTE table + list_reduce byte fold) and "
+    "replays the whole kernel bit-for-bit",
 )
 def q_minhash_signatures(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    # CPU-bound chain; spread the (few-file, small) doc scan across cores
+    # spread the (few-file, small) doc scan across cores
     sigs = minhash_signatures(
-        d, "text", "doc_id", n=3, k=8, hash_fn="poly", repartition_to=spark.sparkContext.defaultParallelism
-    )
-    return sigs.select("doc_id", F.col("signature").getItem(0).alias("mh0"), F.col("signature").getItem(7).alias("mh7"))
-
-
-@query(
-    "minhash_signatures_fast",
-    oracle=_minhash_signatures_fast_oracle(),
-    doc="MinHash signatures, vectorized scale path: one mapInPandas pass (crc32 "
-    "token hashes + numpy rolling shingle combine + broadcasted k-way minima) — "
-    "no explode, no k-min aggregation, no shuffle; the HOF/xxhash64 form stays "
-    "available as minhash_signatures(hash_fn='xxhash64'). Oracled: the oracle "
-    "derives zlib.crc32 from scratch in SQL (recursive-CTE table + list_reduce "
-    "byte fold) and replays the whole kernel bit-for-bit",
-)
-def q_minhash_signatures_fast(spark, sf_dir):
-    from hadoop_app_spark.operators.dedup import minhash_signatures_vectorized
-
-    d = _t(spark, sf_dir, "documents")
-    sigs = minhash_signatures_vectorized(
         d, "text", "doc_id", n=3, k=8, repartition_to=spark.sparkContext.defaultParallelism
     )
     return sigs.select("doc_id", F.col("signature").getItem(0).alias("mh0"), F.col("signature").getItem(7).alias("mh7"))
@@ -3513,73 +3450,38 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
+def _minhash_banded_cte(n_bands: int = 4, band_w: int = 2) -> str:
+    """``_crc_minhash_cte`` extended with ``banded(doc_id, b, bs)``: the
+    8-wide signature cut into 4 band slices of width 2, the engine's
+    ``minhash_band_rows``. Callers write ``WITH RECURSIVE``."""
+    return f"""{_crc_minhash_cte()},
+        banded AS (SELECT doc_id, b, sig[b*{band_w}+1 : b*{band_w}+{band_w}] AS bs
+                   FROM sig CROSS JOIN (SELECT unnest(range(0, {n_bands})) AS b))"""
+
+
 @query(
     "minhash_dedup",
-    oracle=None,  # assigned below: _minhash_dedup_oracle reuses _minhash_oracle pieces
+    oracle=f"""
+        WITH RECURSIVE {_minhash_banded_cte()},
+        losers AS (SELECT DISTINCT x.doc_id AS id_b
+                   FROM banded a JOIN banded x
+                     ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id)
+        SELECT doc_id, n_chars FROM documents
+        WHERE doc_id NOT IN (SELECT id_b FROM losers)
+    """,
     doc="full MinHash+LSH dedup: shingle -> signature -> band bucket-join -> "
-    "drop higher-id member of each candidate pair (north star). Gate variant "
-    "runs the engine-agnostic poly hash so DuckDB reproduces the whole "
-    "pipeline (signatures, band buckets, candidate pairs, survivors).",
+    "drop higher-id member of each candidate pair (north star). The oracle "
+    "replays the whole pipeline (crc32 signatures, band buckets, candidate "
+    "pairs, survivors); zero-shingle docs survive in both engines.",
 )
 def q_minhash_dedup(spark, sf_dir):
     from hadoop_app_spark.operators.dedup import minhash_dedup
 
     d = _t(spark, sf_dir, "documents")
     survivors = minhash_dedup(
-        d, "text", "doc_id", hash_fn="poly", repartition_to=spark.sparkContext.defaultParallelism
+        d, "text", "doc_id", repartition_to=spark.sparkContext.defaultParallelism
     )
     return survivors.select("doc_id", "n_chars")
-
-
-def _minhash_banded_cte(n_bands: int = 4, band_w: int = 2) -> str:
-    """Shared CTE chain (``t`` .. ``banded``) reproducing the poly-hash
-    minhash pipeline in DuckDB: shingles -> 8 permutation minima ->
-    band signatures. Consumed by _minhash_dedup_oracle and the
-    minhash_cluster_canonical oracle."""
-    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
-
-    fp = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(s, ''), "
-        "c -> CAST(ascii(c) AS BIGINT))), (acc, c) -> (acc * 31 + c) % 1000000007)"
-    )
-    mins = ",\n               ".join(
-        f"list_min(list_transform(hs, x -> ({a} * x + {b}) % 1000000007)) AS mh{i}"
-        for i, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
-    )
-    sig = "[" + ", ".join(f"mh{i}" for i in range(8)) + "]"
-    return f"""t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        sh AS (SELECT doc_id,
-                      [array_to_string(toks[i:i+2], ' ')
-                       for i in range(1, greatest(len(toks) - 2, 0) + 1)] AS shingles
-               FROM t),
-        h AS (SELECT doc_id, list_transform(shingles, s -> {fp}) AS hs
-              FROM sh WHERE len(shingles) > 0),
-        m AS (SELECT doc_id,
-               {mins}
-              FROM h),
-        sig AS (SELECT doc_id, {sig} AS sig FROM m),
-        banded AS (SELECT doc_id, b, sig[b*{band_w}+1 : b*{band_w}+{band_w}] AS bs
-                   FROM sig CROSS JOIN (SELECT unnest(range(0, {n_bands})) AS b))"""
-
-
-def _minhash_dedup_oracle(n_bands: int = 4, band_w: int = 2) -> str:
-    """DuckDB twin of the full minhash_dedup pipeline under the poly
-    hash: 8 permutation minima -> 4 bands of width 2 -> docs sharing a
-    (band, band-signature) bucket pair up -> higher id of each pair
-    drops, everything else (incl. zero-shingle docs) survives."""
-    return f"""
-        WITH {_minhash_banded_cte(n_bands, band_w)},
-        losers AS (SELECT DISTINCT x.doc_id AS id_b
-                   FROM banded a JOIN banded x
-                     ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id)
-        SELECT doc_id, n_chars FROM documents
-        WHERE doc_id NOT IN (SELECT id_b FROM losers)
-    """
-
-
-REGISTRY["minhash_dedup"] = QueryDef(
-    REGISTRY["minhash_dedup"].fn, _minhash_dedup_oracle(), REGISTRY["minhash_dedup"].doc
-)
 
 
 @query(
@@ -3596,7 +3498,7 @@ REGISTRY["minhash_dedup"] = QueryDef(
     # only. Measured max bucket: 3 at sf0.01,
     # 10 at sf0.1 — two orders of magnitude of headroom.
     oracle="""
-        WITH {banded},
+        WITH RECURSIVE {banded},
         e AS (SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b
               FROM banded a JOIN banded x
                 ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id)
@@ -3619,7 +3521,7 @@ def q_minhash_dedup_decisions(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     sigs = minhash_signatures(
-        d, "text", "doc_id", n=3, k=8, hash_fn="poly",
+        d, "text", "doc_id", n=3, k=8,
         repartition_to=spark.sparkContext.defaultParallelism,
     )
     pairs = minhash_lsh_pairs(sigs, "doc_id")
@@ -3760,7 +3662,7 @@ def q_minhash_cluster_canonical(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     sigs = minhash_signatures(
-        d, "text", "doc_id", hash_fn="poly",
+        d, "text", "doc_id",
         repartition_to=spark.sparkContext.defaultParallelism,
     )
     pairs = minhash_lsh_pairs(sigs, "doc_id", bands=4).select("id_a", "id_b")
@@ -3771,7 +3673,7 @@ def q_minhash_cluster_canonical(spark, sf_dir):
 @query(
     "contrastive_pairs",
     oracle=f"""
-        WITH {_minhash_banded_cte()},
+        WITH RECURSIVE {_minhash_banded_cte()},
         prs AS (SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b
                 FROM banded a JOIN banded x
                   ON a.b = x.b AND a.bs = x.bs AND a.doc_id < x.doc_id),
@@ -3820,7 +3722,7 @@ def q_contrastive_pairs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     sigs = minhash_signatures(
-        d, "text", "doc_id", hash_fn="poly",
+        d, "text", "doc_id",
         repartition_to=spark.sparkContext.defaultParallelism,
     )
     pairs = minhash_lsh_pairs(sigs, "doc_id", bands=4).select("id_a", "id_b")
@@ -3879,10 +3781,10 @@ def q_dedup_increment(spark, sf_dir):
     # + index build in ONE signature pass.
     _seed_clone(
         spark, "mh_incr_seed", "mh_incr_index",
-        f"minhash|{sf_dir}|mod7|poly|n3k8b4",
+        f"minhash|{sf_dir}|mod7|crc32|n3k8b4",
         lambda t: seed_minhash_index(
             d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         ),
     )
     gens = []
@@ -3892,7 +3794,6 @@ def q_dedup_increment(spark, sf_dir):
             "mh_incr_index",
             "text",
             "doc_id",
-            hash_fn="poly",
             repartition_to=par,
             dropped_table=False,  # localCheckpoint snapshot: no sidecar
         )
@@ -3903,7 +3804,8 @@ def q_dedup_increment(spark, sf_dir):
 def _dedup_increment_ctes() -> str:
     """The two-generation increment-replay CTE chain (``sb`` ..
     ``surv2``), shared by `_dedup_increment_oracle` and the
-    drift-ingest oracle (which adds a quarantine block beside it)."""
+    drift-ingest oracle (which adds a quarantine block beside it).
+    Callers write ``WITH RECURSIVE``."""
     return f"""{_minhash_banded_cte()},
         sb AS (SELECT * FROM banded WHERE doc_id % 7 = 0),
         seed_losers AS (SELECT DISTINCT x.doc_id FROM sb a JOIN sb x
@@ -3940,7 +3842,7 @@ def _dedup_increment_oracle() -> str:
     index0 + surv1 bands, day-2 drops vs index1 -> surv2. Zero-shingle
     docs have no band rows, so they survive in both engines."""
     return f"""
-        WITH {_dedup_increment_ctes()}
+        WITH RECURSIVE {_dedup_increment_ctes()}
         SELECT 1 AS generation, d.doc_id, d.n_chars
         FROM documents d JOIN surv1 USING (doc_id)
         UNION ALL
@@ -3981,10 +3883,10 @@ def q_stream_dedup_ingest_exec(spark, sf_dir):
     # params => identical band rows), cloned fresh per invocation
     _seed_clone(
         spark, "mh_incr_seed", "mh_stream_index",
-        f"minhash|{sf_dir}|mod7|poly|n3k8b4",
+        f"minhash|{sf_dir}|mod7|crc32|n3k8b4",
         lambda t: seed_minhash_index(
             d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         ),
     )
     root = _scratch_dir("dedup_ingest", sf_dir)
@@ -4006,7 +3908,6 @@ def q_stream_dedup_ingest_exec(spark, sf_dir):
         "doc_id",
         out,
         ck,
-        hash_fn="poly",
         repartition_to=par,
     )
     q.awaitTermination()
@@ -4045,10 +3946,10 @@ def q_index_compaction(spark, sf_dir):
     # fragments it, so the compaction-under-test still has real work
     _seed_clone(
         spark, "mh_incr_seed", "mh_cmpq_index",
-        f"minhash|{sf_dir}|mod7|poly|n3k8b4",
+        f"minhash|{sf_dir}|mod7|crc32|n3k8b4",
         lambda t: seed_minhash_index(
             d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         ),
     )
     gens = []
@@ -4058,7 +3959,6 @@ def q_index_compaction(spark, sf_dir):
             "mh_cmpq_index",
             "text",
             "doc_id",
-            hash_fn="poly",
             repartition_to=par,
             dropped_table=False,  # localCheckpoint snapshot: no sidecar
         )
@@ -4108,10 +4008,10 @@ def q_stream_validated_ingest_exec(spark, sf_dir):
     # same memoized day-0 seed as dedup_increment, cloned fresh
     _seed_clone(
         spark, "mh_incr_seed", "mh_vstream_index",
-        f"minhash|{sf_dir}|mod7|poly|n3k8b4",
+        f"minhash|{sf_dir}|mod7|crc32|n3k8b4",
         lambda t: seed_minhash_index(
             d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         ),
     )
     root = _scratch_dir("validated_ingest", sf_dir)
@@ -4132,7 +4032,7 @@ def q_stream_validated_ingest_exec(spark, sf_dir):
         _land_stream_file(b, src_dir, g)
     q = dedup_ingest_stream(
         spark, src_dir, d.schema, "mh_vstream_index", "text", "doc_id",
-        out, ck, hash_fn="poly", repartition_to=par,
+        out, ck, repartition_to=par,
         expectations=[NotNull("doc_id")], quarantine_path=qtn,
     )
     q.awaitTermination()
@@ -4161,7 +4061,7 @@ def _drift_ingest_oracle() -> str:
     %g-formatted). A drift-metric regression of even one milli breaks
     the string equality."""
     return f"""
-        WITH {_dedup_increment_ctes()},
+        WITH RECURSIVE {_dedup_increment_ctes()},
         ref_bins AS (SELECT n_chars // 200 AS bin, count(*) AS n_old
                      FROM documents WHERE doc_id % 7 = 0 GROUP BY 1),
         new_bins AS (SELECT (n_chars % 50) // 200 AS bin, count(*) AS n_new
@@ -4216,10 +4116,10 @@ def q_stream_drift_ingest_exec(spark, sf_dir):
     # same memoized day-0 seed as dedup_increment, cloned fresh
     _seed_clone(
         spark, "mh_incr_seed", "mh_dstream_index",
-        f"minhash|{sf_dir}|mod7|poly|n3k8b4",
+        f"minhash|{sf_dir}|mod7|crc32|n3k8b4",
         lambda t: seed_minhash_index(
             d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         ),
     )
     root = _scratch_dir("drift_ingest", sf_dir)
@@ -4238,7 +4138,7 @@ def q_stream_drift_ingest_exec(spark, sf_dir):
         _land_stream_file(b, src_dir, g)
     q = dedup_ingest_stream(
         spark, src_dir, d.schema, "mh_dstream_index", "text", "doc_id",
-        out, ck, hash_fn="poly", repartition_to=par,
+        out, ck, repartition_to=par,
         expectations=[
             DriftBound("n_chars div 200", d.where(F.col("doc_id") % 7 == 0),
                        max_tvd_milli=400)
@@ -4354,7 +4254,7 @@ def q_split_assignment_pinning(spark, sf_dir):
     def _bootstrap(t):
         day1 = leakage_safe_split(
             d.where(F.col("doc_id") % 2 == 0), "text", "doc_id",
-            hash_fn="poly", repartition_to=par,
+            repartition_to=par,
         )
         save_table_recovering_orphan(
             spark,
@@ -4364,10 +4264,10 @@ def q_split_assignment_pinning(spark, sf_dir):
 
     _seed_clone(
         spark, "split_pins_seed", "split_pins",
-        f"splitpins|{sf_dir}|mod2|poly", _bootstrap, compact=False,
+        f"splitpins|{sf_dir}|mod2|crc32", _bootstrap, compact=False,
     )
     day2 = leakage_safe_split(
-        d, "text", "doc_id", hash_fn="poly", repartition_to=par
+        d, "text", "doc_id", repartition_to=par
     )
     out, _conflicts = pin_split_assignments(day2, "split_pins", "doc_id")
     return out.select("doc_id", "component", "split", "pinned")
@@ -4652,7 +4552,7 @@ def q_leakage_safe_split(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     return leakage_safe_split(
-        d, "text", "doc_id", hash_fn="poly",
+        d, "text", "doc_id",
         repartition_to=spark.sparkContext.defaultParallelism,
     )
 
@@ -4847,32 +4747,6 @@ def q_csv_malformed_quarantine(spark, sf_dir):
         )
         .orderBy("bucket")
     )
-
-
-@query(
-    "minhash_dedup_fast",
-    oracle=_minhash_dedup_fast_oracle(),
-    doc="full MinHash+LSH dedup, vectorized scale path: mapInPandas signature "
-    "kernel (no explode/agg) feeding the same banding bucket-join and min-id "
-    "survivor policy as the oracled poly gate variant. Oracled end-to-end: the "
-    "crc32 family is derived from scratch in SQL, so signatures, band buckets, "
-    "candidate pairs and survivors are all value-checked",
-)
-def q_minhash_dedup_fast(spark, sf_dir):
-    from hadoop_app_spark.operators.dedup import (
-        _band_min_losers,
-        minhash_band_rows,
-        minhash_signatures_vectorized,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    sigs = minhash_signatures_vectorized(
-        d, "text", "doc_id", repartition_to=spark.sparkContext.defaultParallelism
-    )
-    # losers straight from the band rows (identical set to the pair
-    # form's distinct id_b — operators/dedup._band_min_losers)
-    losers = _band_min_losers(minhash_band_rows(sigs, "doc_id"), "doc_id").distinct()
-    return d.join(losers, "doc_id", "left_anti").select("doc_id", "n_chars")
 
 
 def _lsh_near_dup_oracle(dim: int = 64, n_planes: int = 6, threshold: float = 0.3) -> str:
@@ -11353,11 +11227,7 @@ def q_source_overlap(spark, sf_dir):
         WITH o AS (SELECT doc_id, {_FP_SQL} AS fp FROM documents
                    WHERE doc_id % 11 <> 0),
         n AS (SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0 THEN
-                        list_reduce(list_prepend(CAST(0 AS BIGINT),
-                            list_transform(string_split(text || ' updated', ''),
-                                           c -> CAST(ascii(c) AS BIGINT))),
-                            (acc, c) -> (acc * 31 + c) % 1000000007)
+                     CASE WHEN doc_id % 7 = 0 THEN {_fp_sql("text || ' updated'")}
                      ELSE {_FP_SQL} END AS fp
               FROM documents WHERE doc_id % 13 <> 0)
         SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
@@ -11601,6 +11471,8 @@ _ALIASES = {
     "semdedup_fast_fixed": "semdedup",
     "repetition_ngrams_fast": "repetition_ngrams",
     "simhash_band_neardup_fast": "simhash_band_neardup",
+    "minhash_signatures_fast": "minhash_signatures",
+    "minhash_dedup_fast": "minhash_dedup",
 }
 REGISTRY.update({alias: REGISTRY[primary] for alias, primary in _ALIASES.items()})
 

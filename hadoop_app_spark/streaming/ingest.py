@@ -62,7 +62,6 @@ def dedup_ingest_stream(
     id_col: str,
     out_path: str,
     checkpoint: str,
-    hash_fn: str = "xxhash64",
     repartition_to: int | None = None,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
@@ -104,15 +103,22 @@ def dedup_ingest_stream(
     one aggregate scan of the batch, nothing corpus-scale.
 
     Assumption (ADVICE r12): the index's build parameters and bucket
-    spec are resolved ONCE at stream start — a concurrent
-    ``build_dedup_index`` overwrite that changes n/k/bands/hash_fn
+    spec are resolved ONCE at stream start, and validated there: an
+    index built with other n/k/bands or another token hash family
+    raises ``ValueError`` from this call, before any query starts. A
+    concurrent ``build_minhash_index`` overwrite that changes n/k/bands
     mid-stream is NOT supported (per-batch validation would check the
     stale properties and the increment would silently zero-hit dedup).
     Appends, the only index mutation this loop performs, keep both
     immutable. Rebuild the index only with the stream stopped.
     """
-    from hadoop_app_spark.operators.dedup import _index_props, dedup_increment
     from hadoop_app_spark.operators.bucketing import _bucket_meta
+    from hadoop_app_spark.operators.dedup import (
+        _check_index_params,
+        _index_props,
+        _minhash_params,
+        dedup_increment,
+    )
 
     if expectations and not quarantine_path:
         # a failing batch with nowhere to go would be silently
@@ -125,6 +131,9 @@ def dedup_ingest_stream(
     # and the per-batch parameter validation still runs on the resolved
     # properties
     idx_props = _index_props(spark, index_table)
+    # a mismatched index fails HERE, from the caller's own call, not as
+    # a q.exception() of the first micro-batch with a query left running
+    _check_index_params(spark, index_table, props=idx_props, **_minhash_params())
     idx_buckets = _bucket_meta(spark, index_table)[0] if append_index else None
     stream = (
         spark.readStream.schema(schema)
@@ -196,7 +205,6 @@ def dedup_ingest_stream(
             index_table,
             text_col,
             id_col,
-            hash_fn=hash_fn,
             repartition_to=repartition_to,
             append=append_index,
             dropped_table=f"{index_table}_dropped_e{epoch_id}",

@@ -915,8 +915,11 @@ def test_source_stats(spark):
 def test_minhash_signatures_vectorized(spark):
     from hadoop_app_spark.operators.dedup import (
         minhash_lsh_pairs,
+        minhash_signatures,
         minhash_signatures_vectorized,
     )
+
+    assert minhash_signatures_vectorized is minhash_signatures  # one kernel
 
     df = spark.createDataFrame(
         [
@@ -928,15 +931,15 @@ def test_minhash_signatures_vectorized(spark):
         "doc_id long, text string",
     )
     sigs = {r.doc_id: list(r.signature) for r in
-            minhash_signatures_vectorized(df, "text", "doc_id", n=3, k=8).collect()}
-    assert set(sigs) == {1, 2, 3}  # zero-shingle doc dropped like the explode form
+            minhash_signatures(df, "text", "doc_id", n=3, k=8).collect()}
+    assert set(sigs) == {1, 2, 3}  # zero-shingle doc is absent
     assert sigs[1] == sigs[2]  # exact dups collide on every permutation
     assert sigs[1] != sigs[3]
     assert all(len(s) == 8 and all(0 <= v < 1_000_000_007 for v in s) for s in sigs.values())
     # and the banding stage pairs the exact dups
     pairs = {(r.id_a, r.id_b) for r in
              minhash_lsh_pairs(
-                 minhash_signatures_vectorized(df, "text", "doc_id"), "doc_id").collect()}
+                 minhash_signatures(df, "text", "doc_id"), "doc_id").collect()}
     assert (1, 2) in pairs and all(a < b for a, b in pairs)
 
 
@@ -1779,21 +1782,6 @@ def test_dsir_features_occurrence_weighted_and_bigram_guard(spark):
     assert max(b1.values()) == 2
 
 
-def test_dsir_fast_fingerprint_same_shape(spark):
-    from hadoop_app_spark.operators.dsir import dsir_select
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(80)
-    tgt = docs.where("source = 'src0'")
-    slow = dsir_select(docs, tgt, k=10)
-    fast = dsir_select(docs, tgt, k=10, fingerprint="fast")
-    assert slow.columns == fast.columns
-    assert fast.count() == 10 and slow.count() == 10
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="fingerprint"):
-        dsir_select(docs, tgt, fingerprint="nope").collect()
-
-
 def _ppm(w, h, pixel_fn):
     header = f"P6\n{w} {h}\n255\n".encode()
     body = bytearray()
@@ -2514,13 +2502,13 @@ def test_compact_bucketed_index_keeps_dedup_semantics(spark, tmp_path):
     t2 = "another document on join reordering and cost models"
     seed = docs([(0, t0), (1, "a second seed about write ahead logging")])
     for tbl in ("mh_cmp_a", "mh_cmp_b"):
-        build_minhash_index(seed, "text", "doc_id", tbl, hash_fn="poly")
+        build_minhash_index(seed, "text", "doc_id", tbl)
     b1 = docs([(10, t0), (11, t1)])  # 10 dups seed, 11 survives
     b2 = docs([(20, t1), (21, t2)])  # 20 dups b1 survivor, 21 survives
 
     def surv(tbl, batch, gen):
         out = dedup_increment(
-            batch, tbl, "text", "doc_id", hash_fn="poly",
+            batch, tbl, "text", "doc_id",
             dropped_table=f"{tbl}_dropped_g{gen}",
         )
         return sorted(r.doc_id for r in out.collect())
@@ -2551,11 +2539,9 @@ def test_seed_minhash_index_matches_two_step_form(spark, tmp_path):
     d = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
-    surv_fused = seed_minhash_index(
-        d, "text", "doc_id", "mh_fused", hash_fn="poly"
-    )
-    surv_two = minhash_dedup(d, "text", "doc_id", hash_fn="poly")
-    build_minhash_index(surv_two, "text", "doc_id", "mh_twostep", hash_fn="poly")
+    surv_fused = seed_minhash_index(d, "text", "doc_id", "mh_fused")
+    surv_two = minhash_dedup(d, "text", "doc_id")
+    build_minhash_index(surv_two, "text", "doc_id", "mh_twostep")
     assert sorted(r.doc_id for r in surv_fused.collect()) == sorted(
         r.doc_id for r in surv_two.collect()
     )
@@ -2745,7 +2731,7 @@ def test_leakage_safe_split_families_never_straddle(spark):
     from hadoop_app_spark.operators.dedup import leakage_safe_split, minhash_lsh_pairs, minhash_signatures
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = leakage_safe_split(d, "text", "doc_id", hash_fn="poly")
+    out = leakage_safe_split(d, "text", "doc_id")
     rows = out.collect()
     assert len(rows) == d.count()
     # one split per component — the invariant the operator exists for
@@ -2759,7 +2745,7 @@ def test_leakage_safe_split_families_never_straddle(spark):
     # the split respects the family structure: both ends of every
     # candidate pair share a component AND a split
     pairs = minhash_lsh_pairs(
-        minhash_signatures(d, "text", "doc_id", hash_fn="poly"), "doc_id"
+        minhash_signatures(d, "text", "doc_id"), "doc_id"
     )
     a = out.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sa"),
                    F.col("component").alias("ca"))
@@ -2809,7 +2795,7 @@ def test_check_expectations_edge_contracts(spark):
         check_expectations(empty, [])
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    one = leakage_safe_split(d, "text", "doc_id", weights=(("train", 100),), hash_fn="poly")
+    one = leakage_safe_split(d, "text", "doc_id", weights=(("train", 100),))
     assert {r.split for r in one.collect()} == {"train"}
 
 
@@ -2875,11 +2861,15 @@ def test_increment_param_mismatch_raises(spark, docs_df):
     )
     with _pytest.raises(ValueError, match="different signature parameters"):
         dedup_increment(batch, "mh_prm_t", "text", "doc_id", n=5, k=8, bands=4)
-    with _pytest.raises(ValueError, match="different signature parameters"):
-        dedup_increment(batch, "mh_prm_t", "text", "doc_id", hash_fn="crc32")
     # matching params still work
     out = dedup_increment(batch, "mh_prm_t", "text", "doc_id", n=3, k=8, bands=4)
     assert sorted(r.doc_id for r in out.collect()) == [31]
+    # an index whose properties record another token hash family has
+    # incompatible buckets, whatever n/k/bands say
+    for other in ("xxhash64", "poly"):
+        spark.sql(f"ALTER TABLE mh_prm_t SET TBLPROPERTIES ('dedup.hash_fn'='{other}')")
+        with _pytest.raises(ValueError, match="different signature parameters"):
+            dedup_increment(batch, "mh_prm_t", "text", "doc_id", n=3, k=8, bands=4)
 
     seed_simhash_index(seed, "text", "doc_id", "sh_prm_t", bands=4, half_bits=28)
     with _pytest.raises(ValueError, match="different signature parameters"):
@@ -2906,7 +2896,7 @@ def test_index_params_survive_compaction(spark, docs_df):
         for r in spark.sql("SHOW TBLPROPERTIES mh_cmp_t").collect()
     }
     assert props.get("dedup.n") == "3"
-    assert props.get("dedup.hash_fn") == "xxhash64"
+    assert props.get("dedup.hash_fn") == "crc32"
     spark.sql("DROP TABLE IF EXISTS mh_cmp_t")
 
 

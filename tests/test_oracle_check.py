@@ -325,6 +325,20 @@ FOLDED_KERNEL_ENTRIES = (
     "simhash_dedup_decisions",
     "simhash_increment",
     "simhash_reseed_increment",
+    "minhash_signatures",
+    "minhash_signatures_fast",
+    "minhash_dedup",
+    "minhash_dedup_fast",
+    "minhash_dedup_decisions",
+    "minhash_cluster_canonical",
+    "contrastive_pairs",
+    "dedup_increment",
+    "index_compaction",
+    "leakage_safe_split",
+    "split_assignment_pinning",
+    "stream_dedup_ingest_exec",
+    "stream_validated_ingest_exec",
+    "stream_drift_ingest_exec",
 )
 
 

@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hadoop_app_spark.functions.text import doc_fingerprint, token_count, tokenize
-from hadoop_app_spark.operators.dedup import simhash_wide
+from hadoop_app_spark.operators.dedup import minhash_signatures, simhash_wide
 from hadoop_app_spark.sources.delim001 import decode_at_pairs, encode_at_pairs
 
 _FP_MOD = 1_000_000_007
@@ -45,20 +45,6 @@ def test_at_pairs_roundtrip(spark, pairs):
     assert got == sorted((i, v) for i, v in pairs)
 
 
-@_settings
-@given(texts=st.lists(_safe_text | st.just(""), min_size=1, max_size=10))
-def test_fingerprint_matches_python_fold(spark, texts):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
-    got = {r.i: r.fp for r in df.select("i", doc_fingerprint("t").alias("fp")).collect()}
-
-    def py_fp(s: str) -> int:
-        acc = 0
-        for ch in s:
-            acc = (acc * 31 + ord(ch)) % _FP_MOD
-        return acc
-
-    for i, t in enumerate(texts):
-        assert got[i] == py_fp(t), (i, t)
 
 
 @_settings
@@ -237,6 +223,57 @@ def _py_simhash(text: str, half_bits: int) -> int | None:
             if 2 * sum((h >> i) & 1 for h in hs) > len(toks):
                 fp |= 1 << (half * half_bits + i)
     return fp
+
+
+@_settings
+@given(texts=st.lists(_safe_text | _multilingual_text | st.just("") | st.none(), min_size=1, max_size=10))
+def test_fingerprint_matches_python_fold(spark, texts):
+    """doc_fingerprint is zlib.crc32 of the UTF-8 bytes mod 1e9+7;
+    NULL text stays NULL."""
+    from zlib import crc32
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = {r.i: r.fp for r in df.select("i", doc_fingerprint("t").alias("fp")).collect()}
+    for i, t in enumerate(texts):
+        assert got[i] == (None if t is None else crc32(t.encode()) % _FP_MOD), (i, repr(t))
+
+
+def _py_minhash(text: str, n: int) -> list[int] | None:
+    """Plain-Python MinHash: token hash crc32(utf8) % M, rolling shingle
+    combine h = (h * 1000003 + t) % M over n tokens, then the minimum of
+    (a * h + b) % M per permutation; None with fewer than n tokens."""
+    from zlib import crc32
+
+    from hadoop_app_spark.operators.dedup import _MINHASH_A, _MINHASH_B
+
+    toks = text.lower().split()
+    if len(toks) < n:
+        return None
+    th = [crc32(t.encode()) % _FP_MOD for t in toks]
+    shingles = []
+    for i in range(len(toks) - n + 1):
+        h = th[i]
+        for t in th[i + 1 : i + n]:
+            h = (h * 1_000_003 + t) % _FP_MOD
+        shingles.append(h)
+    return [min((a * h + b) % _FP_MOD for h in shingles) for a, b in zip(_MINHASH_A, _MINHASH_B)]
+
+
+@_settings
+@given(
+    texts=st.lists(_multilingual_text | st.just("") | st.none(), min_size=1, max_size=12),
+    n=st.sampled_from([2, 3]),
+)
+def test_minhash_signatures_match_python(spark, texts, n):
+    """The one MinHash kernel equals a plain-Python crc32 reference on
+    non-ASCII text, with string ids; docs with fewer than n tokens
+    (including empty and NULL text) are absent."""
+    df = spark.createDataFrame([(f"d{i}", t) for i, t in enumerate(texts)], "doc_id string, text string")
+    got = {r.doc_id: list(r.signature) for r in minhash_signatures(df, "text", "doc_id", n=n).collect()}
+    want = {
+        f"d{i}": sig for i, t in enumerate(texts) if (sig := _py_minhash(t or "", n)) is not None
+    }
+    assert got == want, [(i, repr(t)) for i, t in enumerate(texts)]
 
 
 @_settings

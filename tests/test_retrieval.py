@@ -82,7 +82,7 @@ def test_simhash_banding_overflow_star_expansion(spark):
 def test_vectorized_kernels_accept_non_long_ids(spark):
     """The mapInPandas kernels declare their schema from the input
     id column's type — string ids must round-trip like longs do."""
-    from hadoop_app_spark.operators.dedup import minhash_signatures_vectorized
+    from hadoop_app_spark.operators.dedup import minhash_signatures
 
     df = spark.createDataFrame(
         [("u1", "alpha beta gamma delta"), ("u2", "alpha beta gamma delta epsilon")],
@@ -90,7 +90,7 @@ def test_vectorized_kernels_accept_non_long_ids(spark):
     )
     sh = {r.url: r.simhash for r in simhash_wide(df, "text", "url").collect()}
     assert set(sh) == {"u1", "u2"}
-    sig = {r.url: r.signature for r in minhash_signatures_vectorized(df, "text", "url").collect()}
+    sig = {r.url: r.signature for r in minhash_signatures(df, "text", "url").collect()}
     assert set(sig) == {"u1", "u2"} and all(len(s) == 8 for s in sig.values())
 
 

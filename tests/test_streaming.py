@@ -844,7 +844,7 @@ def test_dedup_ingest_stream_incremental_and_restart(spark, tmp_path):
     t_new2 = "another distinct document concerning query optimizer rules"
     t_new3 = "final standalone document mentioning vectorized execution"
     seed = docs([(0, t_seed), (1, "the other seed text covers buffer pools")])
-    build_minhash_index(seed, "text", "doc_id", "mh_ingest_test", hash_fn="poly")
+    build_minhash_index(seed, "text", "doc_id", "mh_ingest_test")
 
     src, out, ck = (str(tmp_path / x) for x in ("src", "out", "ck"))
     os.makedirs(src)
@@ -865,7 +865,6 @@ def test_dedup_ingest_stream_incremental_and_restart(spark, tmp_path):
     schema = "doc_id long, text string"
     q = dedup_ingest_stream(
         spark, src, schema, "mh_ingest_test", "text", "doc_id", out, ck,
-        hash_fn="poly",
     )
     q.awaitTermination()
     got = {
@@ -879,7 +878,6 @@ def test_dedup_ingest_stream_incremental_and_restart(spark, tmp_path):
     land(3, [(30, t_new2), (31, t_new3)])
     q2 = dedup_ingest_stream(
         spark, src, schema, "mh_ingest_test", "text", "doc_id", out, ck,
-        hash_fn="poly",
     )
     q2.awaitTermination()
     got2 = {
@@ -906,7 +904,7 @@ def test_validated_ingest_quarantines_bad_batches(spark, tmp_path):
     t_new = "a perfectly novel document about adaptive radix trees"
     t_new2 = "another novel document describing log structured merges"
     seed = docs([(0, "seed text on page layouts and slotted arrays")])
-    build_minhash_index(seed, "text", "doc_id", "mh_vq_idx", hash_fn="poly")
+    build_minhash_index(seed, "text", "doc_id", "mh_vq_idx")
 
     src, out, qtn, ck = (str(tmp_path / x) for x in ("src", "out", "qtn", "ck"))
     os.makedirs(src)
@@ -925,7 +923,7 @@ def test_validated_ingest_quarantines_bad_batches(spark, tmp_path):
 
     q = dedup_ingest_stream(
         spark, src, "doc_id long, text string", "mh_vq_idx", "text", "doc_id",
-        out, ck, hash_fn="poly",
+        out, ck,
         expectations=[NotNull("doc_id"), ValueRange("doc_id", 0, 10**9)],
         quarantine_path=qtn,
     )
@@ -965,6 +963,39 @@ def test_validated_ingest_requires_quarantine_path(spark, tmp_path):
         )
 
 
+def test_ingest_rejects_other_hash_index_at_start(spark, tmp_path):
+    """An index recording another token hash family (here xxhash64)
+    has incompatible buckets. The dedup_ingest_stream call itself must
+    raise, before writeStream.start(): no query is left running and
+    nothing reaches the output."""
+    import os
+
+    import pytest as _pytest
+
+    from hadoop_app_spark.operators.dedup import build_minhash_index
+    from hadoop_app_spark.streaming.ingest import dedup_ingest_stream
+
+    schema = "doc_id long, text string"
+    seed = spark.createDataFrame([(0, "seed text on page layouts and slotted arrays")], schema)
+    build_minhash_index(seed, "text", "doc_id", "mh_fam_idx")
+    spark.sql("ALTER TABLE mh_fam_idx SET TBLPROPERTIES ('dedup.hash_fn'='xxhash64')")
+    src, out, ck = (str(tmp_path / x) for x in ("src", "out", "ck"))
+    spark.createDataFrame(
+        [(1, "a novel document about adaptive radix trees and tries")], schema
+    ).coalesce(1).write.parquet(src)
+    before = {q.id for q in spark.streams.active}
+    try:
+        with _pytest.raises(ValueError, match="different signature parameters"):
+            dedup_ingest_stream(spark, src, schema, "mh_fam_idx", "text", "doc_id", out, ck)
+    finally:
+        started = [q for q in spark.streams.active if q.id not in before]
+        for q in started:
+            q.stop()
+        spark.sql("DROP TABLE IF EXISTS mh_fam_idx")
+    assert started == []
+    assert not os.path.exists(out)
+
+
 def test_ingest_sidecar_gc_survives_fresh_checkpoint(spark, tmp_path):
     """Dropped-sidecar GC must list by prefix, not assume contiguous
     epoch ids: a restart with a FRESH checkpoint resets epoch_id to 0,
@@ -980,7 +1011,7 @@ def test_ingest_sidecar_gc_survives_fresh_checkpoint(spark, tmp_path):
 
     seed = docs([(0, "seed text about write ahead logging and checkpoints")])
     spark.sql("DROP TABLE IF EXISTS mh_gc_idx")
-    build_minhash_index(seed, "text", "doc_id", "mh_gc_idx", hash_fn="poly")
+    build_minhash_index(seed, "text", "doc_id", "mh_gc_idx")
     # stale sidecars from a hypothetical prior incarnation (epochs 7/9)
     for e in (7, 9):
         docs([(99, "x")]).select("doc_id").write.mode("overwrite").saveAsTable(
@@ -998,7 +1029,7 @@ def test_ingest_sidecar_gc_survives_fresh_checkpoint(spark, tmp_path):
 
     q = dedup_ingest_stream(
         spark, src, "doc_id long, text string", "mh_gc_idx", "text", "doc_id",
-        out, ck, hash_fn="poly",
+        out, ck,
     )
     q.awaitTermination()
     left = {
@@ -1029,7 +1060,7 @@ def test_ingest_merge_target_replay_is_idempotent(spark, tmp_path):
 
     spark.sql("DROP TABLE IF EXISTS mh_mt_idx")
     seed = docs([(0, "seed text about columnar encodings and run lengths")])
-    build_minhash_index(seed, "text", "doc_id", "mh_mt_idx", hash_fn="poly")
+    build_minhash_index(seed, "text", "doc_id", "mh_mt_idx")
 
     class FoldTarget:
         """cdc.py apply(batch, batch_id) contract: keyed upsert fold."""
@@ -1059,7 +1090,7 @@ def test_ingest_merge_target_replay_is_idempotent(spark, tmp_path):
     for attempt, ck in enumerate(("ck_a", "ck_b")):  # ck_b = crash replay
         q = dedup_ingest_stream(
             spark, src, "doc_id long, text string", "mh_mt_idx", "text",
-            "doc_id", out, str(tmp_path / ck), hash_fn="poly",
+            "doc_id", out, str(tmp_path / ck),
             append_index=False,  # audit mode: replay sees the same index
             merge_target=target,
         )
@@ -1093,7 +1124,7 @@ def test_ingest_delta_merge_target_exactly_once(spark, tmp_path):
 
     spark.sql("DROP TABLE IF EXISTS mh_dmt_idx")
     seed = docs([(0, "seed text about bloom filters and bitmap indexes")])
-    build_minhash_index(seed, "text", "doc_id", "mh_dmt_idx", hash_fn="poly")
+    build_minhash_index(seed, "text", "doc_id", "mh_dmt_idx")
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -1110,7 +1141,7 @@ def test_ingest_delta_merge_target_exactly_once(spark, tmp_path):
         q = dedup_ingest_stream(
             spark, src, "doc_id long, text string", "mh_dmt_idx", "text",
             "doc_id", str(tmp_path / "unused_out"), str(tmp_path / ck),
-            hash_fn="poly", append_index=False, merge_target=target,
+            append_index=False, merge_target=target,
         )
         q.awaitTermination()
     rows = spark.read.format("delta").load(tbl).collect()

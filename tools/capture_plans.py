@@ -57,15 +57,15 @@ def _probe_frame(spark, family: str):
         if family == "dedup_increment_probe":
             _seed_clone(
                 spark, "mh_incr_seed", "mh_plan_index",
-                f"minhash|{SF}|mod7|poly|n3k8b4",
+                f"minhash|{SF}|mod7|crc32|n3k8b4",
                 lambda t: dd.seed_minhash_index(
                     d.where(F.col("doc_id") % 7 == 0), "text", "doc_id", t,
-                    hash_fn="poly", repartition_to=par,
+                    repartition_to=par,
                 ),
             )
             return dd.dedup_increment(
                 d.where(F.col("doc_id") % 7 == 1), "mh_plan_index", "text",
-                "doc_id", hash_fn="poly", repartition_to=par,
+                "doc_id", repartition_to=par,
                 append=False, dropped_table=False,
             )
         if family == "simhash_increment_probe":

@@ -28,9 +28,11 @@ SHOWCASE = {
         "map-side partial top-k: the shuffle carries ~k rows per group per map partition",
     ),
     "minhash_signatures": (
-        "single Generate (explode) feeding partial_min HashAggregate",
-        "the interpreted shingle-hash chain runs once per row; k minima are codegen'd "
-        "aggregates with map-side combine",
+        "one MapInPandas pass over the round-robin doc scan, no Generate, no "
+        "HashAggregate",
+        "tokens, crc32 shingle hashes and all k permutation minima come from one "
+        "numpy pass per doc; the only exchange is the round-robin spread, so the "
+        "signature carries no k-min aggregation shuffle",
     ),
     "broadcast_dim_join": (
         "BroadcastHashJoin BuildRight, no shuffle of the fact side",
