@@ -2,13 +2,11 @@
 as a REGISTERED table function.
 
 SURVEY §2.10 maps the reference's extension points onto Spark's:
-``Mapper.map`` is a row→rows UDTF (MaxTemperatureMapper.java:16-23
-emits 0..1 parsed rows per line; UserHotcar.java:42-100 emits 0..N).
-The engine already expresses those jobs with built-in operators
-(substring projections, explode) — the SCALE paths stay JVM-side. What
-was missing is the extension SURFACE itself: a user of the reference
-who wrote custom Mappers needs somewhere to put row→rows logic that
-SQL can call. This module provides it via Spark 4's Python UDTF API
+``Mapper.map`` is a row→rows UDTF. A 0..1-row mapper such as
+MaxTemperatureMapper.java:16-23 is a projection plus a null-drop, which
+``sources/ncdc.parse_fixed_width`` runs JVM-side; the 0..N shape
+(UserHotcar.java:42-100) is what needs a table function. This module
+provides it via Spark 4's Python UDTF API
 (``pyspark.sql.functions.udtf`` + ``spark.udtf.register``), usable as
 ``SELECT t.* FROM src, LATERAL fn(col) t`` or ``SELECT * FROM
 fn(...)``.
@@ -18,8 +16,8 @@ UDTF evaluates per input row in the Python worker. Registration turns
 on ``spark.sql.execution.pythonUDTF.arrow.enabled`` so row transfer is
 Arrow-batched, but the per-row eval loop remains — this is the
 EXTENSION surface, deliberately, not the hot path. Every operator the
-engine ships keeps its built-in/vectorized implementation; these
-UDTFs exist so user-supplied row→rows logic has a first-class,
+engine ships keeps its built-in/vectorized implementation; the UDTF
+exists so user-supplied row→rows logic has a first-class,
 SQL-addressable home (and so the registry can verify the surface works
 end-to-end against an oracle).
 """
@@ -27,32 +25,6 @@ end-to-end against an oracle).
 from __future__ import annotations
 
 from pyspark.sql.functions import udtf
-
-# fixed offsets shared with sources/ncdc.py (MaxTemperatureMapper.java
-# parity: year [15,19), sign-aware temp [87,92), quality [92,93))
-_YEAR = slice(15, 19)
-_TEMP = slice(87, 92)
-_QUAL = slice(92, 93)
-_MIN_LINE = 93
-
-
-@udtf(returnType="year int, temp int, quality int")
-class NcdcParseUDTF:
-    """The reference's MaxTemperature mapper as a table function:
-    0..1 rows per raw line, malformed lines silently dropped (the
-    null-drop decision, FIXTURES.md A1)."""
-
-    def eval(self, line: str):
-        if line is None or len(line) < _MIN_LINE:
-            return
-        ys, qs = line[_YEAR], line[_QUAL]
-        if not (ys.isdigit() and qs.isdigit()):
-            return
-        try:
-            temp = int(line[_TEMP])  # int() accepts the sign byte
-        except ValueError:
-            return
-        yield int(ys), temp, int(qs)
 
 
 @udtf(returnType="chunk_id int, start int, chunk string")
@@ -77,5 +49,4 @@ def register_udtfs(spark) -> None:
     """Idempotent registration of the UDTF surface under fixed SQL
     names (+ enable Arrow transfer for the eval loop)."""
     spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    spark.udtf.register("ncdc_parse", NcdcParseUDTF)
     spark.udtf.register("chunk_spans", ChunkSpansUDTF)

@@ -56,6 +56,7 @@ from hadoop_app_spark.operators.dedup import minhash_signatures, simhash
 from hadoop_app_spark.operators.joins import anti_join, semi_join
 from hadoop_app_spark.operators.similarity import brute_force_topk, lsh_topk
 from hadoop_app_spark.operators.topk import global_top_k, top_k_per_group
+from hadoop_app_spark.sources.ncdc import FixedWidthField, parse_fixed_width, read_fixed_width
 
 
 @dataclass(frozen=True)
@@ -193,6 +194,29 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
 
     h = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
     return os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{h}")
+
+
+# the reference mapper's fields (MaxTemperatureMapper.java:17-22) plus
+# the quality digit, all parsed as int
+_NCDC_INT_FIELDS = (
+    FixedWidthField("year", 15, 19, "int"),
+    FixedWidthField("temp", 87, 92, "int"),
+    FixedWidthField("quality", 92, 93, "int"),
+)
+
+
+def _ncdc_line():
+    """A lineitem row as a 93-byte NCDC record: year [15,19) from
+    l_shipdate, temp [87,92) as l_quantity signed negative when
+    l_discount > 0.05, quality [92,93) as l_linenumber % 10."""
+    return F.concat(
+        F.lit("H" * 15),
+        F.year("l_shipdate").cast("string"),
+        F.rpad(F.lit("x"), 68, "x"),
+        F.when(F.col("l_discount") > 0.05, F.lit("-")).otherwise(F.lit("+")),
+        F.lpad(F.col("l_quantity").cast("int").cast("string"), 4, "0"),
+        (F.col("l_linenumber") % 10).cast("string"),
+    )
 
 
 def _memo_dir(tag: str, sf_dir: str, fingerprint: str, build) -> str:
@@ -4569,46 +4593,27 @@ def q_leakage_safe_split(spark, sf_dir):
         GROUP BY 1
         ORDER BY 1
     """,
-    doc="the reference MaxTemperature job run through the FIRST-CLASS "
-    "UDTF surface (functions/udtf.NcdcParseUDTF, SURVEY 2.10 Mapper.map "
-    "parity): NCDC lines synthesized from lineitem plus injected garbage "
-    "rows, parsed by `SELECT t.* FROM lines, LATERAL ncdc_parse(line) t` "
-    "in pure SQL, aggregated per year. The UDTF drops malformed lines "
-    "(the null-drop decision), so the oracle computes the same aggregate "
-    "DIRECTLY from the lineitem columns the builder encoded — fully "
-    "independent of the string round-trip. Extension-surface demo on a "
-    "bounded slice: per-row Python eval (Arrow-batched transfer) is the "
-    "documented cost of user row->rows logic, never this engine's own "
-    "scale path.",
+    doc="the reference MaxTemperature job over malformed input: NCDC lines "
+    "encoded from lineitem plus a short line, a non-numeric year and a null "
+    "are parsed by sources/ncdc.parse_fixed_width, which drops every line "
+    "whose int fields do not parse (the null-drop decision, FIXTURES.md A1), "
+    "then aggregated per year. The oracle computes the same aggregate "
+    "directly from the lineitem columns the builder encoded, so it is "
+    "independent of the string round-trip.",
 )
 def q_udtf_ncdc_parse(spark, sf_dir):
-    from hadoop_app_spark.functions.udtf import register_udtfs
-
-    register_udtfs(spark)
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 7 == 0)
-    lines = li.select(
-        F.concat(
-            F.lit("H" * 15),
-            F.year("l_shipdate").cast("string"),
-            F.rpad(F.lit("x"), 68, "x"),
-            F.when(F.col("l_discount") > 0.05, F.lit("-")).otherwise(F.lit("+")),
-            F.lpad(F.col("l_quantity").cast("int").cast("string"), 4, "0"),
-            (F.col("l_linenumber") % 10).cast("string"),
-        ).alias("line")
-    ).unionAll(
+    lines = li.select(_ncdc_line().alias("line")).unionAll(
         spark.createDataFrame(
             [("GARBAGE",), ("H" * 15 + "YYYY" + "x" * 74,), (None,)],
             "line string",
         )
     )
-    lines.createOrReplaceTempView("udtf_ncdc_lines")
-    return spark.sql(
-        """
-        SELECT t.year, max(t.temp) AS max_temp, count(*) AS n
-        FROM udtf_ncdc_lines, LATERAL ncdc_parse(line) t
-        GROUP BY t.year
-        ORDER BY t.year
-        """
+    return (
+        parse_fixed_width(lines, _NCDC_INT_FIELDS, "line")
+        .groupBy("year")
+        .agg(F.max("temp").alias("max_temp"), F.count("*").alias("n"))
+        .orderBy("year")
     )
 
 
@@ -6561,25 +6566,11 @@ def q_stream_stateful_exec(spark, sf_dir):
 )
 def q_source_codecs(spark, sf_dir):
     from hadoop_app_spark.sources.delim001 import decode_at_pairs
-    from hadoop_app_spark.sources.ncdc import FixedWidthField, parse_fixed_width
     from hadoop_app_spark.sources.provenance import dispatch_by_path, read_tagged_parquet
 
-    li = _t(spark, sf_dir, "lineitem")
-    lines = li.select(
-        F.concat(
-            F.lit("H" * 15),
-            F.year("l_shipdate").cast("string"),
-            F.rpad(F.lit("x"), 68, "x"),
-            F.when(F.col("l_discount") > 0.05, F.lit("-")).otherwise(F.lit("+")),
-            F.lpad(F.col("l_quantity").cast("int").cast("string"), 4, "0"),
-        ).alias("value")
-    )
-    fields = (
-        FixedWidthField("year", 15, 19, "int"),
-        FixedWidthField("temp", 87, 92, "int"),
-    )
+    lines = _t(spark, sf_dir, "lineitem").select(_ncdc_line().alias("value"))
     fixed = (
-        parse_fixed_width(lines, fields)
+        parse_fixed_width(lines, _NCDC_INT_FIELDS)
         .groupBy("year")
         .agg(F.max("temp").alias("vmax"), F.min("temp").alias("vmin"), F.count("*").alias("n"))
         .select(
@@ -6667,37 +6658,21 @@ def q_source_codecs(spark, sf_dir):
         WHERE year(l_shipdate) >= 1996 AND (l_linenumber % 10) IN (1, 4, 7)
         GROUP BY 1 ORDER BY 1
     """,
-    doc="custom Python DataSource round-trip (Spark 4 SPARK-44076 API, the "
-    "idiomatic successor to the reference's InputFormat surface): lineitem "
-    "rows are encoded as 93-byte fixed-width NCDC records and written as "
-    "REAL text files, then scanned back through spark.read.format('ncdc') "
-    "(sources/pyds.py) — record-stride byte splits recreate TextInputFormat "
-    "block parallelism with no driver pre-scan, and the year/quality "
-    "predicates are PUSHED into the reader (skipping the parse, the Python "
-    "analogue of a row-group skip) rather than post-scan Filter nodes; the "
-    "oracle recomputes the aggregate from the source rows, so encode, "
-    "split placement, pushdown, and sign-aware parse must all compose "
-    "losslessly (MaxTemperatureMapper.java:17-22 offsets)",
+    doc="fixed-width file round-trip: lineitem rows are encoded as 93-byte "
+    "NCDC records, written as text files and scanned back through "
+    "sources/ncdc.read_fixed_width (JVM line scan plus substring projections, "
+    "sign-aware int parse), then filtered on year and quality and aggregated; "
+    "the oracle recomputes the aggregate from the source rows, so encode, "
+    "write, scan and parse must compose losslessly "
+    "(MaxTemperatureMapper.java:17-22 offsets)",
 )
 def q_pyds_ncdc_scan(spark, sf_dir):
-    from hadoop_app_spark.sources.pyds import read_ncdc_py
-
-    li = _t(spark, sf_dir, "lineitem")
-    lines = li.select(
-        F.concat(
-            F.lit("H" * 15),
-            F.year("l_shipdate").cast("string"),
-            F.rpad(F.lit("x"), 68, "x"),
-            F.when(F.col("l_discount") > 0.05, F.lit("-")).otherwise(F.lit("+")),
-            F.lpad(F.col("l_quantity").cast("int").cast("string"), 4, "0"),
-            (F.col("l_linenumber") % 10).cast("string"),
-        ).alias("value")
-    )
     out = _scratch_dir("pyds_ncdc", sf_dir)
+    lines = _t(spark, sf_dir, "lineitem").select(_ncdc_line().alias("value"))
     lines.write.mode("overwrite").text(out)
-    df = read_ncdc_py(spark, out, num_partitions=8)
     return (
-        df.where((F.col("year") >= 1996) & F.col("quality").isin(1, 4, 7))
+        read_fixed_width(spark, out, _NCDC_INT_FIELDS)
+        .where((F.col("year") >= 1996) & F.col("quality").isin(1, 4, 7))
         .groupBy("year")
         .agg(
             F.count("*").alias("n"),
@@ -6719,94 +6694,43 @@ def q_pyds_ncdc_scan(spark, sf_dir):
         FROM lineitem
         GROUP BY 1 ORDER BY 1
     """,
-    doc="the custom Python DataSource's STREAMING face executed end-to-end "
-    "(sources/pyds.NcdcStreamReader): the same lineitem-derived fixed-width "
-    "files as pyds_ncdc_scan become an append-only directory stream whose "
-    "offset is a filename high-watermark — the driver plans each microbatch "
-    "by LISTING names (never opening data files) and executors read the "
-    "same record-stride byte ranges as the batch reader; availableNow "
-    "drains the directory into a complete-mode memory sink and the oracle "
-    "is the batch aggregate over the source rows (stream-batch parity, the "
-    "stream_tumbling_exec contract applied to a custom source)",
+    doc="fixed-width files as a stream: the same lineitem-derived NCDC "
+    "records as pyds_ncdc_scan, written as 4 text files, are read by Spark's "
+    "file source with maxFilesPerTrigger=2 and parsed by sources/"
+    "ncdc.parse_fixed_width. availableNow drains the directory in 2 "
+    "micro-batches, with offsets in a per-call checkpoint, into a "
+    "complete-mode memory sink. The oracle is the batch aggregate over the "
+    "source rows (stream-batch parity, the stream_tumbling_exec contract)",
 )
 def q_stream_pyds_exec(spark, sf_dir):
+    import shutil
     import uuid
 
-    from hadoop_app_spark.sources.pyds import read_ncdc_stream
-
-    li = _t(spark, sf_dir, "lineitem")
-    lines = li.select(
-        F.concat(
-            F.lit("H" * 15),
-            F.year("l_shipdate").cast("string"),
-            F.rpad(F.lit("x"), 68, "x"),
-            F.when(F.col("l_discount") > 0.05, F.lit("-")).otherwise(F.lit("+")),
-            F.lpad(F.col("l_quantity").cast("int").cast("string"), 4, "0"),
-            (F.col("l_linenumber") % 10).cast("string"),
-        ).alias("value")
-    )
     out = _scratch_dir("pyds_stream_src", sf_dir)
-    # 4 name-ordered files + maxFilesPerTrigger=2 -> exactly 2 REAL
-    # micro-batches. availableNow can't do this here: Spark 4.1's JVM
-    # wrapper for Python streams lacks SupportsTriggerAvailableNow, so
-    # that trigger WARNs and degrades to one drain-everything batch —
-    # instead the query paces itself and stops once a progress round
-    # reports zero input rows after the backlog is consumed.
+    lines = _t(spark, sf_dir, "lineitem").select(_ncdc_line().alias("value"))
     lines.repartition(4).write.mode("overwrite").text(out)
+    # a fresh stream per call: a kept checkpoint would restore the last
+    # call's aggregate state and count its rows twice
+    ckpt = _scratch_dir("pyds_stream_ckpt", sf_dir)
+    shutil.rmtree(ckpt, ignore_errors=True)
     name = "stream_pyds_" + uuid.uuid4().hex[:8]
-    # paced-from-trigger-1 over a pre-populated backlog needs durable
-    # pace state (the first latestOffset can't see the checkpoint, so
-    # without it the first batch is unpaced by restart-safety design);
-    # cleared per invocation — this query is a fresh stream each run,
-    # and stale state would mark the regenerated files as committed
-    import shutil
-
-    pace_dir = _scratch_dir("pyds_stream_pace", sf_dir)
-    shutil.rmtree(pace_dir, ignore_errors=True)
-    # the drain detector below waits for an EMPTY progress round, but
-    # no-data progress events are emitted only every 10s by default —
-    # a fixed 10s idle tax on a query whose real work is ~2s (measured
-    # r8: batch gap 11s between the last data batch and the empty
-    # event). Tighten the event interval; empty batches themselves
-    # already run every trigger regardless.
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
     q = (
-        read_ncdc_stream(
-            spark, out, num_partitions=8, max_files_per_trigger=2,
-            pace_state_dir=pace_dir,
+        parse_fixed_width(
+            spark.readStream.option("maxFilesPerTrigger", 2).text(out), _NCDC_INT_FIELDS
         )
         .groupBy("year")
         .agg(F.count("*").alias("n"), F.max("temp").alias("max_temp"))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(processingTime="50 milliseconds")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
         .start()
     )
-    import time as _time
-
-    # accumulate progress while polling: recentProgress is a ~100-event
-    # ring; empty progress events (every 250ms here) can evict the data
-    # batches before a single final read on a loaded machine
-    seen: dict = {}
-
-    def _drain():
-        for p in q.recentProgress:
-            seen[p["batchId"]] = p["numInputRows"]
-
-    deadline = _time.monotonic() + 120
-    while _time.monotonic() < deadline:
-        _drain()
-        progress = q.recentProgress
-        if any(n > 0 for n in seen.values()) and progress and progress[-1]["numInputRows"] == 0:
-            break
-        _time.sleep(0.1)
-    _drain()
-    data_batches = sum(1 for n in seen.values() if n > 0)
-    q.stop()
     q.awaitTermination()
+    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     if data_batches < 2:
-        raise RuntimeError(f"expected >=2 paced micro-batches, saw {data_batches}")
+        raise RuntimeError(f"expected >=2 micro-batches, saw {data_batches}")
     return spark.table(name).orderBy("year")
 
 

@@ -9,6 +9,9 @@ No missing-value (+9999) or quality filtering exists in the reference
 Spark-first design: a tiny fixed-width spec over ``spark.read.text``;
 every field is an ``F.substring`` projection (JVM-side, codegen'd), so
 the scan stays a single narrow stage with column pruning intact.
+``parse_fixed_width`` is the engine's one fixed-width parser: it takes
+any DataFrame with a line column, so batch files (``read_fixed_width``),
+a ``readStream.text`` stream and in-memory lines share it.
 Note Spark ``substring`` is 1-based vs Java's 0-based (SURVEY §2.7 F1).
 """
 

@@ -310,6 +310,41 @@ def test_sql_text_entry_restores_caller_views(spark):
     spark.catalog.dropTempView("lineitem")
 
 
+# entries that run the one fixed-width parser, sources/ncdc.parse_fixed_width
+NCDC_ENTRIES = ("pyds_ncdc_scan", "stream_pyds_exec", "udtf_ncdc_parse")
+
+
+def test_ncdc_entries_leave_session_conf_unchanged(spark):
+    """Running the NCDC entries changes no session conf: a caller's
+    streaming progress interval and Python-source pushdown setting are
+    what they were before the calls."""
+    from hadoop_app_spark.queries import REGISTRY
+    from tests.test_catalog import SF_DIRS
+
+    pinned = {
+        "spark.sql.streaming.noDataProgressEventInterval": "10s",
+        "spark.sql.python.filterPushdown.enabled": "false",
+    }
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        for name in NCDC_ENTRIES:
+            assert REGISTRY[name].fn(spark, SF_DIRS[0]).collect(), name
+        assert {k: spark.conf.get(k) for k in pinned} == pinned
+    finally:
+        for k in pinned:
+            spark.conf.unset(k)
+
+
+@pytest.mark.parametrize("name", NCDC_ENTRIES + ("source_codecs",))
+def test_ncdc_entries_match_oracle(spark, name):
+    """Each entry that encodes lineitem as NCDC lines and parses them
+    back reproduces its DuckDB oracle exactly at sf0.01."""
+    from tests.test_recall import SF as sf_dir
+
+    _assert_matches_oracle(spark, name, sf_dir)
+
+
 # entries whose operator had two kernels and now has one, plus the names
 # of the dropped twins, which are aliases of the same entry
 FOLDED_KERNEL_ENTRIES = (

@@ -1,29 +1,9 @@
 """Registered Python UDTF surface (functions/udtf.py): Mapper.map
-parity — 0..1-row parse with null-drop, 0..N fan-out, SQL lateral and
-direct-call forms, edge cases."""
+parity — 0..N fan-out, SQL lateral and direct-call forms, edge cases."""
 
 from __future__ import annotations
 
 from hadoop_app_spark.functions.udtf import register_udtfs
-
-LINE = "H" * 15 + "1950" + "x" * 68 + "-0011" + "5"
-
-
-def test_ncdc_parse_lateral_and_nulldrop(spark):
-    register_udtfs(spark)
-    rows = [(LINE,), ("short",), (None,), ("H" * 15 + "YYYY" + "x" * 74,)]
-    spark.createDataFrame(rows, "line string").createOrReplaceTempView("udtf_t1")
-    got = spark.sql(
-        "SELECT t.* FROM udtf_t1, LATERAL ncdc_parse(line) t"
-    ).collect()
-    # only the well-formed line survives (null-drop, FIXTURES.md A1)
-    assert [(r.year, r.temp, r.quality) for r in got] == [(1950, -11, 5)]
-
-
-def test_ncdc_parse_direct_call(spark):
-    register_udtfs(spark)
-    got = spark.sql(f"SELECT * FROM ncdc_parse('{LINE}')").collect()
-    assert [(r.year, r.temp, r.quality) for r in got] == [(1950, -11, 5)]
 
 
 def test_chunk_spans_fanout_and_edges(spark):

@@ -25,7 +25,6 @@ MODULES = [
     "hadoop_app_spark.sources.provenance",
     "hadoop_app_spark.sources.layout",
     "hadoop_app_spark.sources.shards",
-    "hadoop_app_spark.sources.pyds",
     "hadoop_app_spark.sources.skipping",
     "hadoop_app_spark.functions.dates",
     "hadoop_app_spark.functions.text",
